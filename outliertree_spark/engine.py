@@ -171,19 +171,21 @@ def _render_violation_rows(model: dict, data: dict, raw_cols: dict,
     return pd.DataFrame(out)
 
 
-_WORKER_MODELS: dict[int, dict] = {}
+_WORKER_MODELS: dict[str, dict] = {}
 
 
 def _worker_model(bc) -> dict:
     """Parse the broadcast model JSON once per worker process (the parsed
-    dict also accumulates the per-cluster render cache)."""
+    dict also accumulates the per-cluster render cache).  Keyed on the
+    full JSON: refits with the same config and schema can agree on
+    length, head and tail yet route rows differently.  A hit on the same
+    broadcast costs an identity check (the string caches its hash)."""
     s = bc.value
-    key = (len(s), hash(s[:256]), hash(s[-256:]))
-    m = _WORKER_MODELS.get(key)
+    m = _WORKER_MODELS.get(s)
     if m is None:
         m = model_from_json(s)
         _WORKER_MODELS.clear()  # one model at a time per worker is typical
-        _WORKER_MODELS[key] = m
+        _WORKER_MODELS[s] = m
     return m
 
 
@@ -464,15 +466,19 @@ class SparkOutlierTree:
         the only difference is fixed ``min_decimals`` display precision
         where the Arrow path refines decimals per row (misc.cpp:640-669).
 
-        When to use which (measured at 20M rows / 290k candidates): the
-        winner expression is too large for whole-stage codegen on
-        non-trivial models, so it evaluates interpreted at ~17 us per
-        candidate — comparable to the Arrow path's compiled per-row
-        Python, and `predict` is currently ~2x faster end-to-end.  Choose
-        this path for its ARCHITECTURE, not speed: Structured Streaming
-        micro-batches (no Python workers in the streaming plan), clusters
-        where Python workers are unavailable/restricted, or executors
-        under memory pressure from Arrow transfer buffers."""
+        When to use which: the winner expression is too large for
+        whole-stage codegen on non-trivial models, so it evaluates
+        interpreted per candidate.  On one 4-core host
+        (``perfbench/baseline.json``, traced runs) its flagging plan
+        ``score()`` takes 1.22 s against 2.32 s for ``predict`` into a
+        ``noop`` sink on ``docs_sparse`` (0.7% prefilter survivors), but
+        3.68 s against 2.73 s on ``conditional_dense`` (every row
+        survives); this path adds a join and template substitution on
+        top of ``score()``.  Choose it for its ARCHITECTURE, not speed:
+        Structured Streaming micro-batches (no Python workers in the
+        streaming plan), clusters where Python workers are
+        unavailable/restricted, or executors under memory pressure from
+        Arrow transfer buffers."""
         from .plans.sql_predict import score_sql
         assert self.model_ is not None, "call fit() first"
         model = self.model_
@@ -602,39 +608,60 @@ class CheckpointLedger:
         self.path = path
         os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
 
+    def _entries(self) -> list[dict]:
+        """Parsed ledger lines.  A crash mid-append can tear the last
+        line; it is skipped, so its partition reruns on resume.  A
+        corrupt line anywhere else is damage, not a torn append, and
+        raises."""
+        if not os.path.exists(self.path):
+            return []
+        with open(self.path) as f:
+            lines = [line for line in f if line.strip()]
+        entries = []
+        for i, line in enumerate(lines):
+            try:
+                entries.append(json.loads(line))
+            except json.JSONDecodeError:
+                if i < len(lines) - 1:
+                    raise
+        return entries
+
+    def _append(self, entry: dict) -> None:
+        with open(self.path, "ab+") as f:
+            size = f.seek(0, os.SEEK_END)
+            if size:
+                f.seek(size - 1)
+                if f.read(1) != b"\n":
+                    # every whole entry ends in a newline: cut the torn
+                    # tail of a crashed append (the reader skips it) so
+                    # this entry starts a line of its own, and terminate
+                    # a tail that does parse
+                    f.seek(0)
+                    data = f.read()
+                    cut = data.rfind(b"\n") + 1
+                    try:
+                        json.loads(data[cut:])
+                        f.write(b"\n")
+                    except ValueError:
+                        f.truncate(cut)
+            f.write((json.dumps(entry, default=str) + "\n").encode())
+
     def done_partitions(self) -> set:
-        done = set()
-        if os.path.exists(self.path):
-            with open(self.path) as f:
-                for line in f:
-                    if line.strip():
-                        d = json.loads(line)
-                        if "partition" in d:  # marker lines have no partition
-                            done.add(d["partition"])
-        return done
+        # marker lines have no partition
+        return {d["partition"] for d in self._entries() if "partition" in d}
 
     def record(self, partition, verdict: dict, lineage: dict | None = None) -> None:
-        entry = {"partition": partition, "ts": time.time(),
-                 "verdict": verdict, "lineage": lineage or {}}
-        with open(self.path, "a") as f:
-            f.write(json.dumps(entry, default=str) + "\n")
+        self._append({"partition": partition, "ts": time.time(),
+                      "verdict": verdict, "lineage": lineage or {}})
 
     def record_marker(self, name: str, info: dict | None = None) -> None:
         """Record a non-partition completion marker (e.g. that the
         snapshot-delta check already wrote its violations), so repeated
         or resumed invocations can skip re-appending side outputs."""
-        entry = {"marker": name, "ts": time.time(), "info": info or {}}
-        with open(self.path, "a") as f:
-            f.write(json.dumps(entry, default=str) + "\n")
+        self._append({"marker": name, "ts": time.time(), "info": info or {}})
 
     def has_marker(self, name: str) -> bool:
-        if not os.path.exists(self.path):
-            return False
-        with open(self.path) as f:
-            for line in f:
-                if line.strip() and json.loads(line).get("marker") == name:
-                    return True
-        return False
+        return any(d.get("marker") == name for d in self._entries())
 
     def filter_remaining(self, df: DataFrame, partition_col: str) -> DataFrame:
         done = self.done_partitions()
@@ -643,8 +670,13 @@ class CheckpointLedger:
         return df.filter(~qcol(partition_col).isin(list(done)))
 
     def record_verdicts(self, verdicts: DataFrame, partition_col: str,
-                        lineage: dict | None = None) -> None:
-        for row in verdicts.collect():
+                        lineage: dict | None = None) -> list:
+        """Collect ``verdicts`` once, record one line per partition, and
+        return the collected rows, so a caller can summarize the run
+        without executing the verdicts plan again."""
+        rows = verdicts.collect()
+        for row in rows:
             d = row.asDict()
             part = d.pop(partition_col)
             self.record(part, d, lineage)
+        return rows

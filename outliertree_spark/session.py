@@ -2,10 +2,13 @@
 
 from __future__ import annotations
 
+import logging
 import os
 import tempfile
 
 from pyspark.sql import SparkSession
+
+log = logging.getLogger(__name__)
 
 # applicationIds already warmed by _warm_engine (one warm-up per
 # SparkContext; getOrCreate may hand the same context back many times)
@@ -49,7 +52,8 @@ def _warm_engine(spark: SparkSession) -> None:
         # best-effort: a warm-up failure (full temp dir, exotic master)
         # must never take down session creation — the engine is correct
         # without it, just cold
-        pass
+        log.warning("engine warm-up failed for %s; the session continues "
+                    "without it", app, exc_info=True)
 
 
 def _warm_engine_inner(spark: SparkSession) -> None:

@@ -2,6 +2,8 @@
 -> per-partition verdicts, on a synthetic Common-Crawl-style documents
 table with planted violations (FIXTURES.md F1)."""
 
+import json
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -112,10 +114,54 @@ def test_checkpoint_ledger(spark, docs_df, tmp_path):
     eng.fit(docs_df, id_cols=["doc_id"], cols_ignore=["bucket"])
     led = CheckpointLedger(str(tmp_path / "ledger.jsonl"))
     _, verdicts = eng.validate(docs_df, partition_col="bucket")
-    led.record_verdicts(verdicts, "bucket", lineage={"input": "docs_df"})
+    rows = led.record_verdicts(verdicts, "bucket",
+                               lineage={"input": "docs_df"})
     assert len(led.done_partitions()) == 8
+    assert {r["bucket"] for r in rows} == led.done_partitions()
     remaining = led.filter_remaining(docs_df, "bucket")
     assert remaining.count() == 0
+
+
+def test_checkpoint_ledger_skips_torn_last_line(tmp_path):
+    """A crash mid-append tears the last line: resume reads past it, and
+    the next append starts a fresh line instead of gluing onto it."""
+    from outliertree_spark import CheckpointLedger
+    led = CheckpointLedger(str(tmp_path / "ledger.jsonl"))
+    led.record(0, {"passed": True})
+    led.record_marker("snapshot_delta::prev")
+    with open(led.path, "a") as f:
+        f.write('{"partition": 1, "ts": 17.5, "verd')
+    assert led.done_partitions() == {0}
+    assert led.has_marker("snapshot_delta::prev")
+    led.record(2, {"passed": False})
+    assert led.done_partitions() == {0, 2}
+    with open(led.path) as f:
+        entries = [json.loads(line) for line in f]
+    assert [e.get("partition") for e in entries] == [0, None, 2]
+
+
+def test_checkpoint_ledger_keeps_whole_unterminated_last_line(tmp_path):
+    """A hand-edited ledger may lack the final newline; its last entry
+    parses, so the next append terminates it instead of cutting it."""
+    from outliertree_spark import CheckpointLedger
+    led = CheckpointLedger(str(tmp_path / "ledger.jsonl"))
+    with open(led.path, "w") as f:
+        f.write('{"partition": 0, "verdict": {}}')
+    led.record(1, {"passed": True})
+    assert led.done_partitions() == {0, 1}
+
+
+def test_checkpoint_ledger_raises_on_corrupt_middle_line(tmp_path):
+    from outliertree_spark import CheckpointLedger
+    led = CheckpointLedger(str(tmp_path / "ledger.jsonl"))
+    led.record(0, {"passed": True})
+    with open(led.path, "a") as f:
+        f.write('{"partition": 1, "ts": 17.5, "verd\n')
+    led.record(2, {"passed": True})
+    with pytest.raises(json.JSONDecodeError):
+        led.done_partitions()
+    with pytest.raises(json.JSONDecodeError):
+        led.has_marker("snapshot_delta::prev")
 
 
 def test_checkpoint_ledger_resume_mid_run(spark, docs_df, tmp_path):

@@ -153,3 +153,49 @@ def test_arithmetic_gram_paths_handle_null_empty_short(spark):
     # docs without shingles simply have no signature row (same as the
     # string-shingle behavior)
     assert minhash_signatures(df).count() == 1
+
+
+def test_worker_model_cache_keys_on_full_json(monkeypatch):
+    """Two refits can agree on the model JSON's length, head and tail and
+    differ only in the middle; each broadcast must get its own model."""
+    from types import SimpleNamespace
+
+    from outliertree_spark import engine
+
+    monkeypatch.setattr(engine, "_WORKER_MODELS", {})
+    pad_head, pad_tail = "h" * 300, "t" * 300
+    a = SimpleNamespace(value='{"head": "%s", "mid": 1, "tail": "%s"}'
+                        % (pad_head, pad_tail))
+    b = SimpleNamespace(value='{"head": "%s", "mid": 2, "tail": "%s"}'
+                        % (pad_head, pad_tail))
+    assert len(a.value) == len(b.value)
+    assert a.value[:256] == b.value[:256] and a.value[-256:] == b.value[-256:]
+
+    ma = engine._worker_model(a)
+    assert ma["mid"] == 1
+    assert engine._worker_model(a) is ma
+    assert engine._worker_model(b)["mid"] == 2
+    assert engine._worker_model(a)["mid"] == 1
+
+
+def test_warm_engine_failure_is_logged(monkeypatch, caplog):
+    """The warm-up stays best-effort, but its failure leaves a trace."""
+    import logging
+    from types import SimpleNamespace
+
+    from outliertree_spark import session
+
+    def boom(spark):
+        raise RuntimeError("no space left for the warm-up parquet")
+
+    monkeypatch.delenv("SPARK_GRAFT_NO_WARMUP", raising=False)
+    monkeypatch.setattr(session, "_warm_engine_inner", boom)
+    monkeypatch.setattr(session, "_WARMED", set())
+    stub = SimpleNamespace(sparkContext=SimpleNamespace(
+        applicationId="local-warm-failure-test"))
+    with caplog.at_level(logging.WARNING, logger=session.__name__):
+        session._warm_engine(stub)  # must not raise
+    (rec,) = [r for r in caplog.records if r.name == session.__name__]
+    assert rec.levelno == logging.WARNING
+    assert "warm-up failed" in rec.getMessage()
+    assert rec.exc_info[1].args == ("no space left for the warm-up parquet",)
