@@ -3,11 +3,13 @@
 Architecture (SURVEY.md section 7): the conditioning-tree fit runs once on
 a bounded deterministic sample collected to the driver (the reference is a
 single-node in-memory fit; our fit sample is capped by
-``config.max_fit_rows``), the fitted constraint structs are broadcast as
-compact dicts, and the *validate* path scales out: a flaggable-bounds
-pre-filter expressed as Catalyst predicates (pushed down to the scan) plus
-one Arrow-vectorized ``mapInPandas`` pass for tree routing.  No per-row
-Python anywhere: batches are NumPy masks end to end.
+``config.max_fit_rows``; the per-target trees are fitted concurrently on a
+driver thread pool, see ``operators.fit``), the fitted constraint structs
+are broadcast as compact dicts, and the *validate* path scales out: a
+flaggable-bounds pre-filter expressed as Catalyst predicates (pushed down
+to the scan) plus one Arrow-vectorized ``mapInPandas`` pass for tree
+routing.  No per-row Python anywhere: batches are NumPy masks end to
+end.
 """
 
 from __future__ import annotations

@@ -573,10 +573,10 @@ def bigram_lm_scores_fp(df: DataFrame, id_col: str = "doc_id",
                     lambda t: F.length(t) > 0)
     # The pair-struct table is the one materialization: the pair stream
     # is referenced TWICE downstream (bigram vocabulary aggregate +
-    # scoring join), so checkpointing the token arrays instead and
-    # rebuilding pairs per reference re-runs the zip_with chain twice —
-    # measured ~0.4s SLOWER end-to-end at sf0.1 (round-6 A/B, fresh
-    # processes) than paying the doubled checkpoint write once.
+    # scoring join).  Checkpointing the token arrays instead and building
+    # the pairs from them was a wash in an interleaved A/B at sf0.1: 1.524
+    # vs 1.586 min in its favour, 1.710 vs 1.599 against with the order
+    # reversed (OPTIMIZATION_r06.md), so it was not applied.
     d1 = _spread(df).select(F.col(id_col), toks.alias("_t"))
     t = F.col("_t")
     n = F.size(t)

@@ -12,6 +12,8 @@ Usage (the north rule's launch shape):
 
 Resumable: with --resume, partitions already recorded in the checkpoint
 ledger are skipped; verdicts + lineage land in the ledger as JSON lines.
+The lineage carries the fit stats (sample rows, fit seconds, model bytes,
+cluster count), taken from the driver-side model.
 
 One execution of the predict plan per run: the violations frame is
 persisted as soon as it is built, the parquet append materializes the
@@ -88,6 +90,18 @@ def _snapshot_check(spark, ledger, args, df_full) -> bool:
     return True
 
 
+def _fit_stats(model: dict, seconds: float | None) -> dict:
+    """Ledger lineage for the model a run validates with, read from the
+    driver-side model (no Spark action).  ``seconds`` is the fit's wall
+    time, None when the model was loaded; ``model_bytes`` is the size of
+    the model file ``--model-out`` writes."""
+    from outliertree_spark.model import model_to_json
+    return {"sample_rows": model["nrows_fit"],
+            "seconds": None if seconds is None else round(seconds, 3),
+            "model_bytes": len(model_to_json(model).encode()),
+            "clusters": sum(len(c["clusters"]) for c in model["columns"])}
+
+
 def main(argv=None) -> int:
     p = argparse.ArgumentParser()
     p.add_argument("--input", required=True, help="parquet path or table")
@@ -156,6 +170,7 @@ def main(argv=None) -> int:
                               "snapshot_check_ran": snap_ran}))
             return 0
 
+    fit_s = None
     if args.model_in:
         eng = SparkOutlierTree.load(args.model_in)
     else:
@@ -164,9 +179,11 @@ def main(argv=None) -> int:
         t0 = time.time()
         eng.fit(df, cols_ignore=args.cols_ignore, ordinal_cols=ordinals or None,
                 id_cols=[args.id_col] if args.id_col else None)
-        print(f"fit: {time.time() - t0:.1f}s", file=sys.stderr)
+        fit_s = time.time() - t0
+        print(f"fit: {fit_s:.1f}s", file=sys.stderr)
     if args.model_out:
         eng.save(args.model_out)
+    fit_stats = _fit_stats(eng.model_, fit_s)
 
     t0 = time.time()
     if args.quality_rules:
@@ -221,7 +238,8 @@ def main(argv=None) -> int:
             verdicts, args.partition_col,
             lineage={"input": args.input,
                      "model": args.model_out or args.model_in,
-                     "wall_sec": round(time.time() - t0, 2)})
+                     "wall_sec": round(time.time() - t0, 2),
+                     "fit": fit_stats})
     finally:
         # blocking: the cached blocks are gone before spark.stop(), so no
         # block removal runs on after this run returns

@@ -14,14 +14,12 @@ format); nothing from the reference tree is copied or committed.
 
 import os
 import shutil
-import subprocess
 
 import numpy as np
 import pandas as pd
 import pytest
 
 REF = "/root/reference"
-HARNESS_BIN = "/tmp/ref_harness"
 
 pytestmark = pytest.mark.skipif(
     not (os.path.isdir(f"{REF}/src") and shutil.which("g++")),
@@ -30,18 +28,8 @@ pytestmark = pytest.mark.skipif(
 
 @pytest.fixture(scope="module")
 def harness():
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    src = os.path.join(root, "tools", "ref_harness.cpp")
-    stale = (not os.path.exists(HARNESS_BIN)
-             or os.path.getmtime(HARNESS_BIN) < os.path.getmtime(src))
-    if stale:
-        srcs = [f"{REF}/src/{f}.cpp" for f in
-                ("fit_model", "split", "clusters", "cat_outlier",
-                 "misc", "predict")]
-        subprocess.run(
-            ["g++", "-O2", "-std=c++11", "-fopenmp", f"-I{REF}/src",
-             src, *srcs, "-o", HARNESS_BIN], check=True, cwd=root)
-    return HARNESS_BIN
+    from tools.diff_vs_reference import build_harness
+    return build_harness()
 
 
 @pytest.fixture(scope="module")

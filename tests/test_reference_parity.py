@@ -8,13 +8,11 @@ for both fit and predict.
 
 import os
 import shutil
-import subprocess
 import sys
 
 import pytest
 
 REF_SRC = "/root/reference/src"
-HARNESS_BIN = "/tmp/ref_harness"
 
 pytestmark = pytest.mark.skipif(
     not (os.path.isdir(REF_SRC) and shutil.which("g++")),
@@ -23,18 +21,8 @@ pytestmark = pytest.mark.skipif(
 
 @pytest.fixture(scope="module")
 def harness():
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    src = os.path.join(root, "tools", "ref_harness.cpp")
-    stale = (not os.path.exists(HARNESS_BIN)
-             or os.path.getmtime(HARNESS_BIN) < os.path.getmtime(src))
-    if stale:
-        srcs = [f"{REF_SRC}/{f}.cpp" for f in
-                ("fit_model", "split", "clusters", "cat_outlier",
-                 "misc", "predict")]
-        subprocess.run(
-            ["g++", "-O2", "-std=c++11", "-fopenmp", f"-I{REF_SRC}",
-             src, *srcs, "-o", HARNESS_BIN], check=True, cwd=root)
-    return HARNESS_BIN
+    from tools.diff_vs_reference import build_harness
+    return build_harness()
 
 
 @pytest.mark.parametrize("seed", list(range(10)))

@@ -132,3 +132,26 @@ def test_predict_plan_executes_once(docs, tmp_path, extra):
     assert (9, "value") in flagged
     if extra:
         assert (6, "quality") in flagged
+
+
+def test_ledger_lineage_carries_fit_stats(docs, tmp_path):
+    fit_dir, load_dir = tmp_path / "fit", tmp_path / "load"
+    fit_dir.mkdir()
+    load_dir.mkdir()
+    model_path = tmp_path / "model.json"
+    _, entries, _, log = _run(fit_dir, docs, ["--model-out", str(model_path)])
+    assert len(python_executions(log)) == 1
+    model = json.loads(model_path.read_text())
+    want = {"sample_rows": model["nrows_fit"],
+            "model_bytes": model_path.stat().st_size,
+            "clusters": sum(len(c["clusters"]) for c in model["columns"])}
+    assert model["nrows_fit"] == 2000
+    fits = [e["lineage"]["fit"] for e in entries if "partition" in e]
+    assert len(fits) == 4
+    for f in fits:
+        assert {k: f[k] for k in want} == want
+        assert f["seconds"] > 0
+
+    _, entries, _, _ = _run(load_dir, docs, ["--model-in", str(model_path)])
+    fits = [e["lineage"]["fit"] for e in entries if "partition" in e]
+    assert fits == [dict(want, seconds=None)] * 4

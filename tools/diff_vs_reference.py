@@ -1,26 +1,49 @@
 """Differential test: our NumPy fit vs the compiled reference C++ core.
 
-Usage: python tools/diff_vs_reference.py [n_cases]
-Requires /tmp/ref_harness built via:
+Usage: python tools/diff_vs_reference.py [n_cases] [--follow-all] [--vary]
+Requires /tmp/ref_harness, which :func:`build_harness` builds on first use
+when the reference sources and g++ are present, via:
   g++ -O2 -std=c++11 -fopenmp -I/root/reference/src \
       tools/ref_harness.cpp /root/reference/src/{fit_model,split,clusters,\
       cat_outlier,misc,predict}.cpp -o /tmp/ref_harness
+Without them it exits with status 2.
 Compares flagged-row sets, per-row scores/depths and cluster bounds.
 """
 
 from __future__ import annotations
 
+import os
+import shutil
 import subprocess
 import sys
 
 import numpy as np
 
-sys.path.insert(0, ".")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from outliertree_spark.config import ValidationConfig  # noqa: E402
 from outliertree_spark.operators.fit import FitColumn, fit_arrays  # noqa: E402
 
+REF_SRC = "/root/reference/src"
 HARNESS = "/tmp/ref_harness"
+
+
+def build_harness() -> str | None:
+    """The compiled reference harness, (re)built when it is missing or
+    older than tools/ref_harness.cpp and the reference sources and g++
+    are present; None when there is no harness to run."""
+    src = os.path.join(ROOT, "tools", "ref_harness.cpp")
+    fresh = (os.path.exists(HARNESS)
+             and os.path.getmtime(HARNESS) >= os.path.getmtime(src))
+    if not fresh and os.path.isdir(REF_SRC) and shutil.which("g++"):
+        srcs = [f"{REF_SRC}/{f}.cpp" for f in
+                ("fit_model", "split", "clusters", "cat_outlier",
+                 "misc", "predict")]
+        subprocess.run(
+            ["g++", "-O2", "-std=c++11", "-fopenmp", f"-I{REF_SRC}",
+             src, *srcs, "-o", HARNESS], check=True, cwd=ROOT)
+    return HARNESS if os.path.exists(HARNESS) else None
 
 
 def _fmt_rows(num_cols, cat_cols, ord_cols):
@@ -326,6 +349,10 @@ def main(n_cases: int = 20, follow_all: bool = False,
 
 
 if __name__ == "__main__":
+    if build_harness() is None:
+        print(f"{HARNESS} is missing and cannot be built: it needs "
+              f"{REF_SRC} and g++", file=sys.stderr)
+        sys.exit(2)
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 20
     fa = "--follow-all" in sys.argv[2:]
     vary = "--vary" in sys.argv[2:]
