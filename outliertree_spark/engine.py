@@ -414,150 +414,6 @@ class SparkOutlierTree:
         return score_sql(self.model_, sdf, id_cols=id_cols)
 
     # ------------------------------------------------------------------
-    def cluster_dimension(self, spark, min_decimals: int = 2) -> DataFrame:
-        """One row per (column, cluster): limits + pre-rendered payloads
-        (group-statistics JSON, conditions JSON, explanation templates).
-        This is the broadcast dimension `predict_at_scale` joins against —
-        violations carry only (cluster_id, value); all cluster-constant
-        text lives here, once, instead of being re-rendered per row."""
-        from .report import render_template
-        assert self.model_ is not None
-        rows = []
-        for cm in self.model_["columns"]:
-            for cl_id, cl in enumerate(cm["clusters"]):
-                t = render_template(self.model_, cm, cl, min_decimals)
-                rows.append((cm["name"], cl_id,
-                             float(cl.get("lower_lim", float("-inf"))),
-                             float(cl.get("upper_lim", float("inf"))),
-                             t["expl_hi"], t["expl_lo"],
-                             t["gs_hi"], t["gs_lo"], t["conds"],
-                             t["cond_cols"]))
-        schema = ("suspicious_column string, cluster_id int, "
-                  "lower_lim double, upper_lim double, "
-                  "expl_hi string, expl_lo string, gs_hi string, "
-                  "gs_lo string, conditions string, "
-                  "cond_cols array<string>")
-        from .localrel import local_df
-        return local_df(spark, rows, schema)
-
-    def _display_expr(self, name: str, min_decimals: int = 2):
-        """Formatted display string for a model column's value (JVM-side
-        twin of the rich renderer's value formatting, at fixed
-        min_decimals)."""
-        info = self.model_["schema"][name]
-        col = qcol(name)
-        if info["kind"] == "timestamp":
-            return F.date_format(col, "yyyy-MM-dd'T'HH:mm:ss")
-        if info["kind"] == "numeric":
-            return F.format_string(f"%.{min_decimals}f", col.cast("double"))
-        if info.get("is_bool"):
-            return F.when(col.cast("boolean"), F.lit("True")) \
-                    .otherwise(F.lit("False"))
-        return col.cast("string")
-
-    def predict_at_scale(self, df: DataFrame,
-                         id_cols: list[str] | None = None,
-                         prefilter: bool = True,
-                         min_decimals: int = 2) -> DataFrame:
-        """Violation rows with ZERO Python in the plan: `score()`'s
-        pure-Catalyst winner selection + a broadcast join against
-        `cluster_dimension()` + JVM-side template substitution for the
-        explanation/statistics payloads.
-
-        Same rows, scores and conditions as `predict` (equivalence-tested);
-        the only difference is fixed ``min_decimals`` display precision
-        where the Arrow path refines decimals per row (misc.cpp:640-669).
-
-        When to use which: the winner expression is too large for
-        whole-stage codegen on non-trivial models, so it evaluates
-        interpreted per candidate.  On one 4-core host
-        (``perfbench/baseline.json``, traced runs) its flagging plan
-        ``score()`` takes 1.22 s against 2.32 s for ``predict`` into a
-        ``noop`` sink on ``docs_sparse`` (0.7% prefilter survivors), but
-        3.68 s against 2.73 s on ``conditional_dense`` (every row
-        survives); this path adds a join and template substitution on
-        top of ``score()``.  Choose it for its ARCHITECTURE, not speed:
-        Structured Streaming micro-batches (no Python workers in the
-        streaming plan), clusters where Python workers are
-        unavailable/restricted, or executors under memory pressure from
-        Arrow transfer buffers."""
-        from .plans.sql_predict import score_sql
-        assert self.model_ is not None, "call fit() first"
-        model = self.model_
-        id_cols = id_cols or []
-        spark = df.sparkSession
-        sdf = df.filter(self.prefilter_expr(df)) if prefilter else df
-        keep = [c for c in model["schema"] if c in df.columns]
-        s = score_sql(model, sdf, id_cols=id_cols, keep_cols=keep)
-        dim = F.broadcast(self.cluster_dimension(spark, min_decimals)
-                          .drop("cond_cols"))
-        j = s.join(dim, ["suspicious_column", "cluster_id"], "left")
-
-        # per-row pieces: encoded numeric value, display string, prior
-        val_num = F.lit(None).cast("double")
-        val_str = F.lit("")
-        prior_pct = F.lit("")
-        prior_raw = F.lit("")
-        sc = F.col("suspicious_column")
-        for cm in model["columns"]:
-            name = cm["name"]
-            if name not in df.columns:
-                continue
-            disp = self._display_expr(name, min_decimals)
-            val_str = F.when(sc == name, disp).otherwise(val_str)
-            if cm["kind"] == "numeric":
-                enc = qcol(name).cast("double")
-                if cm.get("is_ts"):
-                    enc = F.unix_timestamp(qcol(name)).cast("double")
-                val_num = F.when(sc == name, enc).otherwise(val_num)
-            else:
-                levels = cm.get("levels") or []
-                priors = cm.get("prior_prob") or []
-                for code, lev in enumerate(levels):
-                    if code >= len(priors):
-                        continue
-                    m = (sc == name) & (disp == F.lit(str(lev)))
-                    prior_pct = F.when(m, F.lit(f"{priors[code] * 100:.3f}")) \
-                                 .otherwise(prior_pct)
-                    prior_raw = F.when(m, F.lit(json.dumps(priors[code]))) \
-                                 .otherwise(prior_raw)
-        # hi/lo side for numeric targets (encoded value vs cluster limits)
-        enc_for_side = val_num
-        for cm in model["columns"]:
-            if cm.get("is_ts") and cm["name"] in df.columns:
-                enc_for_side = F.when(
-                    sc == cm["name"],
-                    F.unix_timestamp(qcol(cm["name"])).cast("double")
-                    - F.lit(cm["ts_min"])).otherwise(enc_for_side)
-        is_hi = enc_for_side >= F.col("upper_lim")
-        expl = F.when(is_hi, F.col("expl_hi")).otherwise(F.col("expl_lo"))
-        gs = F.when(is_hi, F.col("gs_hi")).otherwise(F.col("gs_lo"))
-
-        row_label = (qcol(id_cols[0]).cast("string") if id_cols
-                     else F.lit(""))
-        expl = F.replace(expl, F.lit("{row}"), row_label)
-        expl = F.replace(expl, F.lit("{value}"), val_str)
-        expl = F.replace(expl, F.lit("{prior}"), prior_pct)
-        gs = F.replace(gs, F.lit("{prior_raw}"), prior_raw)
-        for name in keep:
-            ph = F.lit("{val:%s}" % name)
-            fmt = F.coalesce(self._display_expr(name, min_decimals),
-                             F.lit("NA"))
-            expl = F.replace(expl, ph, fmt)
-
-        return j.select(
-            *[qcol(c) for c in id_cols],
-            F.col("suspicious_column"),
-            val_str.alias("suspicious_value"),
-            val_num.alias("suspicious_value_num"),
-            gs.alias("group_statistics"),
-            F.col("conditions"),
-            F.col("tree_depth"),
-            F.col("uses_NA_branch"),
-            F.col("outlier_score"),
-            expl.alias("explanation"))
-
-    # ------------------------------------------------------------------
     def validate(self, df: DataFrame, partition_col: str,
                  id_cols: list[str] | None = None,
                  max_violation_rate: float | None = None) -> tuple[DataFrame, DataFrame]:
@@ -567,8 +423,14 @@ class SparkOutlierTree:
         violation count, rate, and pass/fail — pure Catalyst aggregation."""
         rate = max_violation_rate if max_violation_rate is not None \
             else self.config.pct_outliers
-        id_cols = list(dict.fromkeys([partition_col] + (id_cols or [])))
-        viols = self.predict(df, id_cols=id_cols)
+        id_cols = id_cols or []
+        # explanations are labelled by the first id column: the caller's
+        # row id, not the partition; the select keeps the partition first
+        viols = self.predict(
+            df, id_cols=list(dict.fromkeys(id_cols + [partition_col])))
+        viols = viols.select(
+            *[qcol(c) for c in dict.fromkeys([partition_col] + id_cols)],
+            *[f.name for f in VIOLATION_FIELDS])
         totals = df.groupBy(qcol(partition_col)).agg(
             F.count(F.lit(1)).alias("n_rows"))
         vcnt = viols.groupBy(qcol(partition_col)).agg(

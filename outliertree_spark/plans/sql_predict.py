@@ -234,8 +234,7 @@ def compile_score_exprs(model: dict, df_cols: set[str],
     collapsing would duplicate multi-referenced non-cheap expressions —
     so each projection stays small enough for whole-stage codegen.
     Expression content is unchanged, only factored; equivalence with the
-    Arrow ``predict_batch`` path is pinned by tests/test_sql_predict.py
-    and tests/test_predict_at_scale.py."""
+    Arrow ``predict_batch`` path is pinned by tests/test_sql_predict.py."""
     levels_by_col = dict(model.get("predictor_levels") or {})
     for cm in model["columns"]:
         if cm.get("levels") is not None:
@@ -383,21 +382,13 @@ def _worst_struct(col_ix: int = -1) -> Column:
 
 
 def score_sql(model: dict, df: DataFrame,
-              id_cols: list[str] | None = None,
-              keep_cols: list[str] | None = None) -> DataFrame:
+              id_cols: list[str] | None = None) -> DataFrame:
     """Pure-Catalyst flagging: one row per flagged input row with its
-    winning (column, cluster) — zero Python in the plan, single scan.
-
-    ``keep_cols``: raw input columns to carry through to the output
-    (used by `engine.predict_at_scale` to render values/explanations
-    JVM-side)."""
+    winning (column, cluster) — zero Python in the plan, single scan."""
     id_cols = id_cols or []
-    keep_cols = [c for c in (keep_cols or [])
-                 if c in df.columns and c not in id_cols]
     layers, winners = compile_score_exprs(model, set(df.columns))
     if not winners:
-        empty = df.select(*[qcol(c) for c in id_cols],
-                          *[qcol(c) for c in keep_cols]).limit(0)
+        empty = df.select(*[qcol(c) for c in id_cols]).limit(0)
         return (empty.withColumn("suspicious_column", F.lit(""))
                 .withColumn("outlier_score", F.lit(0.0))
                 .withColumn("tree_depth", F.lit(0))
@@ -420,9 +411,7 @@ def score_sql(model: dict, df: DataFrame,
     sel = df.coalesce(1 << 30)
     for layer in layers:
         sel = sel.withColumns(layer).coalesce(1 << 30)
-    sel = sel.select(*[qcol(c) for c in id_cols],
-                     *[qcol(c) for c in keep_cols],
-                     overall.alias("_b"))
+    sel = sel.select(*[qcol(c) for c in id_cols], overall.alias("_b"))
     # determinism gate on the flag filter: a plain filter would be
     # pushed through every Coalesce/Project (pushdown substitutes the
     # aliases), re-inlining the full winner chain into the scan stage —
@@ -434,7 +423,7 @@ def score_sql(model: dict, df: DataFrame,
     # folds DIRECT rand() range comparisons (a bare rand(s) > 2.0 gate
     # vanished and the filter pushed again, observed on the 20M bench
     # plan), and monotonically_increasing_id() is rejected in streaming
-    # plans, which predict_at_scale supports.
+    # plans, and score() runs on streams.
     flagged = sel.filter((F.col("_b.cluster_id") >= 0)
                          | ((F.rand(42) + F.lit(1.0)) > F.lit(2.5)))
     name_ix = {i: cm["name"] for i, cm in enumerate(model["columns"])}
@@ -443,7 +432,7 @@ def score_sql(model: dict, df: DataFrame,
         col_name = F.when(F.col("_b.col_ix") == ix, F.lit(nm)).otherwise(col_name)
     hi = F.shiftright(F.col("_b.rank"), 32)
     return flagged.select(
-        *[qcol(c) for c in id_cols], *[qcol(c) for c in keep_cols],
+        *[qcol(c) for c in id_cols],
         col_name.alias("suspicious_column"),
         F.col("_b.score").alias("outlier_score"),
         hi.bitwiseAND(F.lit(16383)).cast("long").alias("tree_depth"),

@@ -97,8 +97,7 @@ def print_outliers(violations_pdf, max_outliers: int = 10) -> str:
 def compile_renderer(model: dict, cm: dict, cl: dict, min_decimals: int = 2):
     """Precompile the per-cluster constant parts of the explanation so the
     hot loop only does per-row value formatting.  Returns
-    ``render(row_label, value, value_this_by_col) -> str`` with identical
-    output to :func:`render_violation`."""
+    ``render(row_label, value, value_this_by_col) -> str``."""
     name = cm["name"]
     is_ts = cm.get("is_ts")
     is_num = cm["kind"] == "numeric"
@@ -187,138 +186,6 @@ def compile_renderer(model: dict, cm: dict, cl: dict, min_decimals: int = 2):
     return render
 
 
-def render_template(model: dict, cm: dict, cl: dict,
-                    min_decimals: int = 2) -> dict:
-    """Cluster-constant explanation TEMPLATES for the pure-Catalyst
-    violations path (`engine.predict_at_scale`): all per-cluster text is
-    pre-rendered; per-row pieces are placeholders replaced JVM-side —
-    ``{row}`` (label), ``{value}`` (suspicious value), ``{prior}``
-    (flagged category's prior %, categorical targets only) and
-    ``{val:<col>}`` (the row's value of a condition column).
-
-    Numeric formatting uses ``min_decimals`` fixed; the Arrow path's
-    per-row dynamic-decimals refinement (misc.cpp:640-669) is the only
-    difference vs `compile_renderer` output."""
-    import json as _json
-
-    name = cm["name"]
-    is_ts = cm.get("is_ts")
-    dec = min_decimals
-    conds = simplify_conditions(cl.get("conditions") or [])
-    cond_text = ""
-    cond_cols = []
-    if conds:
-        cond_text = "\n\tgiven:"
-        for cond in conds:
-            cond_text += _cond_template_line(model, cond, min_decimals)
-            if cond["comparison"] not in ("is NA", "="):
-                cond_cols.append(cond["column"])
-    head = (f"row [{{row}}] - suspicious column: [{name}]"
-            f" - suspicious value: [{{value}}]")
-
-    def _num(v):
-        return _fmt_ts(v + cm["ts_min"]) if is_ts else f"{v:.{dec}f}"
-
-    out = {"conds": _json.dumps(cl.get("conditions") or [], default=str),
-           "cond_cols": sorted(set(cond_cols))}
-    if cm["kind"] == "numeric":
-        tail = (f" - [mean: {_num(cl['display_mean'])}]"
-                + ("" if is_ts else f" - [sd: {cl['display_sd']:.{dec}f}]")
-                + f" - [norm. obs: {cl['cluster_size']}]")
-        wrap = (lambda s: f"[{s}]") if is_ts else (lambda s: s)
-        out["expl_hi"] = (head + f"\n\tdistribution: {cl['perc_below'] * 100:.3f}%"
-                          f" <= {wrap(_num(cl['display_lim_high']))}" + tail
-                          + cond_text)
-        out["expl_lo"] = (head + f"\n\tdistribution: {cl['perc_above'] * 100:.3f}%"
-                          f" >= {wrap(_num(cl['display_lim_low']))}" + tail
-                          + cond_text)
-        out["gs_hi"] = _json.dumps(
-            {"upper_thr": cl["display_lim_high"], "pct_below": cl["perc_below"],
-             "mean": cl["display_mean"], "sd": cl["display_sd"],
-             "n_obs": cl["cluster_size"]}, default=str)
-        out["gs_lo"] = _json.dumps(
-            {"lower_thr": cl["display_lim_low"], "pct_above": cl["perc_above"],
-             "mean": cl["display_mean"], "sd": cl["display_sd"],
-             "n_obs": cl["cluster_size"]}, default=str)
-        return out
-
-    levels = cm.get("levels") or []
-    by_maj = (model["config"]["categ_outliers"] == "majority"
-              and cl.get("categ_maj", -1) >= 0)
-    if cm.get("is_bool"):
-        grp = (f"\tdistribution: {(1.0 - cl['perc_in_subset']) * 100:.3f}%"
-               f" different [norm. obs: {cl['cluster_size']}]")
-        if conds:
-            grp += " - [prior_prob: {prior}%]"
-        gs = {"pct_other": 1.0 - cl["perc_in_subset"],
-              "prior_prob": "{prior_raw}", "n_obs": cl["cluster_size"]}
-    elif by_maj:
-        maj = levels[cl["categ_maj"]]
-        grp = (f"\tdistribution: {cl['perc_in_subset'] * 100:.3f}% = [{maj}]"
-               f"\n\t( [norm. obs: {cl['cluster_size']}] - "
-               "[prior_prob: {prior}%] )")
-        gs = {"categ_maj": str(maj), "pct_common": cl["perc_in_subset"],
-              "prior_prob": "{prior_raw}", "n_obs": cl["cluster_size"]}
-    else:
-        common = [levels[i] for i, s in enumerate(cl["subset_common"] or [])
-                  if s == 0]
-        pct_common = cl["perc_in_subset"] * 100
-        if len(common) == 1:
-            grp = f"\tdistribution: {pct_common:.3f}% = [{common[0]}]"
-        else:
-            grp = (f"\tdistribution: {pct_common:.3f}% in "
-                   f"[{', '.join(str(c) for c in common)}]")
-        nmc = cl["perc_next_most_comm"] * 100
-        if conds:
-            grp += (f"\n\t( [norm. obs: {cl['cluster_size']}] - "
-                    "[prior_prob: {prior}%] - "
-                    f"[next smallest: {nmc:.3f}%] )")
-        else:
-            grp += (f"\n\t( [norm. obs: {cl['cluster_size']}] - "
-                    f"[next smallest: {nmc:.3f}%] )")
-        gs = {"categs_common": [str(c) for c in common],
-              "pct_common": cl["perc_in_subset"],
-              "pct_next_most_comm": cl["perc_next_most_comm"],
-              "prior_prob": "{prior_raw}", "n_obs": cl["cluster_size"]}
-    expl = head + "\n" + grp + cond_text
-    out["expl_hi"] = out["expl_lo"] = expl
-    gs_json = _json.dumps(gs, default=str).replace('"{prior_raw}"', "{prior_raw}")
-    out["gs_hi"] = out["gs_lo"] = gs_json
-    return out
-
-
-def _cond_template_line(model, cond, min_decimals):
-    """Template twin of _cond_line: cluster-constant comparison values are
-    rendered now (at min_decimals); the row's own value stays a
-    '{val:col}' placeholder (pre-formatted JVM-side before replace)."""
-    col, comp, vc = cond["column"], cond["comparison"], cond["value_comp"]
-    num = _is_num_col(model, col)
-    dec = min_decimals
-    vt = "{val:%s}" % col
-    if comp == "is NA":
-        return f"\n\t\t[{col}] is NA"
-    if comp == "<=":
-        shown = f"{vc:.{dec}f}" if num else str(vc)
-        return f"\n\t\t[{col}] <= [{shown}] (value: {vt})"
-    if comp == ">":
-        shown = f"{vc:.{dec}f}" if num else str(vc)
-        return f"\n\t\t[{col}] > [{shown}] (value: {vt})"
-    if comp == "between":
-        lo, hi = vc
-        if num:
-            return (f"\n\t\t[{col}] between ({lo:.{dec}f}, {hi:.{dec}f}]"
-                    f" (value: {vt})")
-        return f"\n\t\t[{col}] between ({lo}, {hi}] (value: {vt})"
-    if comp == "=":
-        return f"\n\t\t[{col}] = [{vc}]"
-    if comp == "!=":
-        return f"\n\t\t[{col}] != [{vc}] (value: {vt})"
-    if comp == "in":
-        return (f"\n\t\t[{col}] in [{', '.join(str(v) for v in vc)}]"
-                f" (value: {vt})")
-    return ""
-
-
 def _cond_line(model, cond, value_this_by_col, min_decimals):
     col = cond["column"]
     comp = cond["comparison"]
@@ -363,136 +230,3 @@ def _fmt_ts(seconds: float) -> str:
 def _is_num_col(model: dict, col: str) -> bool:
     info = model["schema"].get(col)
     return info is not None and info["kind"] in ("numeric", "timestamp")
-
-
-def render_violation(model: dict, cm: dict, cluster: dict, row_label,
-                     value, value_this_by_col: dict,
-                     min_decimals: int = 2) -> str:
-    """Render one flagged row in the reference's report format."""
-    lines = []
-    name = cm["name"]
-    is_ts = cm.get("is_ts")
-
-    # dynamic decimals (src/misc.cpp:640-669)
-    dec = min_decimals
-    if cm["kind"] == "numeric" and not is_ts:
-        d = max(0, decimals_diff(value, cluster["display_mean"]))
-        comp = cluster["display_lim_high"] if value >= cluster["upper_lim"] \
-            else cluster["display_lim_low"]
-        d = max(d, decimals_diff(value, comp))
-        dec = max(min_decimals, d)
-
-    if cm["kind"] == "numeric":
-        if is_ts:
-            shown = _fmt_ts(value + cm["ts_min"])
-            lines.append(f"row [{row_label}] - suspicious column: [{name}] - "
-                         f"suspicious value: [{shown}]")
-        else:
-            lines.append(f"row [{row_label}] - suspicious column: [{name}] - "
-                         f"suspicious value: [{value:.{dec}f}]")
-        if value >= cluster["upper_lim"]:
-            pct = cluster["perc_below"] * 100
-            thr = cluster["display_lim_high"]
-            if is_ts:
-                grp = f"\tdistribution: {pct:.3f}% <= [{_fmt_ts(thr + cm['ts_min'])}]"
-            else:
-                grp = f"\tdistribution: {pct:.3f}% <= {thr:.{dec}f}"
-        else:
-            pct = cluster["perc_above"] * 100
-            thr = cluster["display_lim_low"]
-            if is_ts:
-                grp = f"\tdistribution: {pct:.3f}% >= [{_fmt_ts(thr + cm['ts_min'])}]"
-            else:
-                grp = f"\tdistribution: {pct:.3f}% >= {thr:.{dec}f}"
-        if is_ts:
-            grp += (f" - [mean: {_fmt_ts(cluster['display_mean'] + cm['ts_min'])}]"
-                    f" - [norm. obs: {cluster['cluster_size']}]")
-        else:
-            grp += (f" - [mean: {cluster['display_mean']:.{dec}f}]"
-                    f" - [sd: {cluster['display_sd']:.{dec}f}]"
-                    f" - [norm. obs: {cluster['cluster_size']}]")
-        lines.append(grp)
-    else:
-        levels = cm["levels"]
-        lines.append(f"row [{row_label}] - suspicious column: [{name}] - "
-                     f"suspicious value: [{value}]")
-        conds_n = len(cluster.get("conditions") or [])
-        if cm.get("is_bool"):
-            pct_other = (1.0 - cluster["perc_in_subset"]) * 100
-            grp = (f"\tdistribution: {pct_other:.3f}% different "
-                   f"[norm. obs: {cluster['cluster_size']}]")
-            if conds_n > 0:
-                code = levels.index(value) if value in levels else -1
-                prior = cm["prior_prob"][code] if code >= 0 else 0.0
-                grp += f" - [prior_prob: {prior * 100:.3f}%]"
-            lines.append(grp)
-        elif cluster.get("categ_maj", -1) >= 0 and model["config"]["categ_outliers"] == "majority":
-            maj = levels[cluster["categ_maj"]]
-            grp = f"\tdistribution: {cluster['perc_in_subset'] * 100:.3f}% = [{maj}]"
-            code = levels.index(value) if value in levels else -1
-            prior = cm["prior_prob"][code] if code >= 0 else 0.0
-            grp += (f"\n\t( [norm. obs: {cluster['cluster_size']}] - "
-                    f"[prior_prob: {prior * 100:.3f}%] )")
-            lines.append(grp)
-        else:
-            common = [levels[i] for i, s in enumerate(cluster["subset_common"] or [])
-                      if s == 0]
-            pct_common = cluster["perc_in_subset"] * 100
-            if len(common) == 1:
-                grp = f"\tdistribution: {pct_common:.3f}% = [{common[0]}]"
-            else:
-                grp = f"\tdistribution: {pct_common:.3f}% in [{', '.join(str(c) for c in common)}]"
-            code = levels.index(value) if value in levels else -1
-            prior = cm["prior_prob"][code] if code >= 0 else 0.0
-            nmc = cluster["perc_next_most_comm"] * 100
-            if conds_n > 0:
-                grp += (f"\n\t( [norm. obs: {cluster['cluster_size']}] - "
-                        f"[prior_prob: {prior * 100:.3f}%] - "
-                        f"[next smallest: {nmc:.3f}%] )")
-            else:
-                grp += (f"\n\t( [norm. obs: {cluster['cluster_size']}] - "
-                        f"[next smallest: {nmc:.3f}%] )")
-            lines.append(grp)
-
-    conds = cluster.get("conditions") or []
-    if conds:
-        conds = simplify_conditions(conds)
-        ln = "\tgiven:"
-        for cond in conds:
-            col = cond["column"]
-            comp = cond["comparison"]
-            vc = cond["value_comp"]
-            vt = value_this_by_col.get(col)
-            cdec = max(min_decimals,
-                       decimals_diff(vt, vc) if (_is_num_col(model, col)
-                                                 and isinstance(vt, (int, float))
-                                                 and isinstance(vc, (int, float)))
-                       else 0)
-            if comp == "is NA":
-                ln += f"\n\t\t[{col}] is NA"
-            elif comp == "<=":
-                if _is_num_col(model, col):
-                    ln += f"\n\t\t[{col}] <= [{vc:.{cdec}f}] (value: {vt:.{cdec}f})"
-                else:
-                    ln += f"\n\t\t[{col}] <= [{vc}] (value: {vt})"
-            elif comp == ">":
-                if _is_num_col(model, col):
-                    ln += f"\n\t\t[{col}] > [{vc:.{cdec}f}] (value: {vt:.{cdec}f})"
-                else:
-                    ln += f"\n\t\t[{col}] > [{vc}] (value: {vt})"
-            elif comp == "between":
-                lo, hi = vc
-                if _is_num_col(model, col):
-                    ln += (f"\n\t\t[{col}] between ({lo:.{cdec}f}, {hi:.{cdec}f}]"
-                           f" (value: {vt:.{cdec}f})")
-                else:
-                    ln += f"\n\t\t[{col}] between ({lo}, {hi}] (value: {vt})"
-            elif comp == "=":
-                ln += f"\n\t\t[{col}] = [{vc}]"
-            elif comp == "!=":
-                ln += f"\n\t\t[{col}] != [{vc}] (value: {vt})"
-            elif comp == "in":
-                ln += (f"\n\t\t[{col}] in [{', '.join(str(v) for v in vc)}]"
-                       f" (value: {vt})")
-        lines.append(ln)
-    return "\n".join(lines)

@@ -1,8 +1,11 @@
 """Structured Streaming validation.
 
 The reference is batch-only; this applies the broadcast fitted model to a
-stream: violations via the same Arrow batch routing inside foreachBatch /
-mapInPandas, plus watermarked windowed verdict aggregation for late data.
+stream.  Violation rows, explanations included, come from the batch
+``predict`` plan unchanged (Catalyst prefilter + one Arrow ``mapInPandas``
+pass); verdicts are watermarked windowed aggregations for late data.  The
+module also holds stateless stream twins of the batch cleaning gates
+(dedup, quality, Gopher, Bloom) and a stateful PSI drift monitor.
 Smoke-tested with the file source + memory sink (synchronous
 ``processAllAvailable``), which is the standard local harness.
 """
@@ -17,17 +20,6 @@ def stream_violations(engine, stream_df: DataFrame,
     """Violation stream: the same prefilter + mapInPandas plan works
     unchanged on a streaming DataFrame (stateless transforms)."""
     return engine.predict(stream_df, id_cols=id_cols)
-
-
-def stream_violations_at_scale(engine, stream_df: DataFrame,
-                               id_cols: list[str] | None = None) -> DataFrame:
-    """Violation stream with ZERO Python in the streaming plan:
-    `engine.predict_at_scale` is a stateless project/filter plus a
-    stream-static BROADCAST join against the per-cluster dimension — all
-    whole-stage codegen, so the micro-batch path never round-trips
-    through Python workers.  Same rows as `stream_violations`
-    (equivalence-tested batch-side)."""
-    return engine.predict_at_scale(stream_df, id_cols=id_cols)
 
 
 def windowed_verdicts(engine, stream_df: DataFrame, ts_col: str,

@@ -215,19 +215,16 @@ class ValidationSuite:
 
     def run(self, df: DataFrame, partition_col: str,
             id_cols: list[str] | None = None,
-            max_violation_rate: float | None = None,
-            at_scale: bool = False) -> tuple[DataFrame, DataFrame]:
-        """``at_scale=True`` routes the derived (tree) violations through
-        `engine.predict_at_scale` — the whole suite then contains no
-        Python operator (declared checks are already pure Catalyst)."""
+            max_violation_rate: float | None = None) -> tuple[DataFrame, DataFrame]:
+        # explanations are labelled by predict's first id column: the
+        # caller's row id, not the partition
+        row_ids = list(dict.fromkeys((id_cols or []) + [partition_col]))
         id_cols = list(dict.fromkeys([partition_col] + (id_cols or [])))
         rate = (max_violation_rate if max_violation_rate is not None
                 else self.engine.config.pct_outliers)
 
-        predict = (self.engine.predict_at_scale if at_scale
-                   else self.engine.predict)
         # derived (tree) violations
-        derived = (predict(df, id_cols=id_cols)
+        derived = (self.engine.predict(df, id_cols=row_ids)
                    .select(*id_cols, "suspicious_column",
                            F.col("suspicious_value").alias("check_value"),
                            "outlier_score", "explanation")

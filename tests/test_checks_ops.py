@@ -6,7 +6,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from outliertree_spark.operators import checks, dedup, similarity, text, multimodal
+from outliertree_spark.operators import checks, dedup, similarity, text
 
 SF = "/root/testdata/sf0.001"
 
@@ -155,19 +155,6 @@ def test_fingerprint_whitespace_invariant(spark):
     r = df.select(text.fingerprint("a").alias("fa"),
                   text.fingerprint("b").alias("fb")).first()
     assert r["fa"] == r["fb"]
-
-
-def test_multimodal_plumbing(spark):
-    media = multimodal.synth_media_table(spark, 12)
-    feats = multimodal.extract_features(media, fake=True).toPandas()
-    assert len(feats) == 12
-    assert all(len(f) == 8 for f in feats["feature"])
-    # real decode is stubbed: must raise, not silently fake
-    with pytest.raises(Exception):
-        multimodal.extract_features(media, fake=False).count()
-    frames = multimodal.frame_sample_plan(media, every_ms=1000)
-    # 4 video rows x 3 frames (0,1000,2000 of 3000ms)
-    assert frames.count() == 12
 
 
 def test_streaming_validation(spark, tmp_path):

@@ -106,6 +106,13 @@ def test_validate_verdicts(spark, docs_df):
     assert len(vp) == 8
     assert int(vp["n_rows"].sum()) == 4000
     assert bool(vp["passed"].all())  # planted rate < pct_outliers threshold
+    # the explanation names the row, not its partition (row 11 is in
+    # bucket 3); the partition column still comes first
+    v = viols.toPandas()
+    assert list(v.columns[:2]) == ["bucket", "doc_id"]
+    row11 = v[v.doc_id == 11].iloc[0]
+    assert row11["bucket"] == 3
+    assert row11["explanation"].startswith("row [11] - ")
 
 
 def test_checkpoint_ledger(spark, docs_df, tmp_path):

@@ -14,7 +14,7 @@ from outliertree_spark.operators.cluster import (
 )
 from outliertree_spark.operators.fit import FitColumn, fit_arrays
 from outliertree_spark.operators.predict import predict_batch
-from outliertree_spark.report import render_violation, simplify_conditions
+from outliertree_spark.report import compile_renderer, simplify_conditions
 
 
 def _basic_model():
@@ -94,7 +94,7 @@ def test_conditional_outlier_pregnant_age():
     conds = cl["conditions"]
     assert any(c["column"] == "pregnant" and c["comparison"] == "=" for c in conds)
     # explanation renders in the reference format
-    s = render_violation(m, cm, cl, planted, 75.0, {"age": 75.0, "pregnant": True})
+    s = compile_renderer(m, cm, cl)(planted, 75.0, {"age": 75.0, "pregnant": True})
     assert s.startswith(f"row [{planted}] - suspicious column: [age] - "
                         "suspicious value: [75.00]")
     assert "distribution:" in s and "[norm. obs:" in s

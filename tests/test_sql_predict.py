@@ -86,3 +86,25 @@ def test_sql_scoring_timestamp_target(spark):
     got = eng.score(df, id_cols=["id"]).toPandas()
     assert 3 in set(got["id"])
     assert got[got.id == 3].iloc[0]["suspicious_column"] == "warc_ts"
+
+
+def test_sql_scoring_on_stream(spark, tmp_path):
+    """The flagging plan runs on a streaming DataFrame (the reason its
+    determinism gate uses rand(), not monotonically_increasing_id()),
+    with the same rows as the batch plan and no Python operator."""
+    from outliertree_spark.streaming.validate import run_stream_to_memory
+    df = _mixed_df(spark)
+    eng = SparkOutlierTree(ValidationConfig())
+    eng.fit(df, id_cols=["id"])
+    src = str(tmp_path / "score_stream_src")
+    df.write.mode("overwrite").parquet(src)
+    stream = spark.readStream.schema(df.schema).parquet(src)
+    s = eng.score(stream, id_cols=["id"])
+    assert "MapInPandas" not in s._jdf.queryExecution().analyzed().toString()
+    run_stream_to_memory(s, "score_stream")
+    got = spark.sql("SELECT * FROM score_stream").toPandas()
+    want = eng.score(df, id_cols=["id"]).toPandas()
+    assert len(want) > 0
+    key = ["id", "suspicious_column", "tree_depth"]
+    assert (got[key].sort_values("id").values.tolist()
+            == want[key].sort_values("id").values.tolist())

@@ -54,6 +54,11 @@ def test_suite_unified_run(spark, data):
     assert 7 in by_check.get("ref_ref_id", set())
     assert 11 in by_check.get("ts_range_warc_ts", set())
     assert 13 in by_check.get("derived", set())
+    # the explanation names the row, not its partition (doc 13 is in
+    # bucket 3)
+    row13 = vp[(vp.check == "derived") & (vp.doc_id == 13)].iloc[0]
+    assert row13["bucket"] == 3
+    assert row13["explanation"].startswith("row [13] - ")
 
     vd = verdicts.toPandas().set_index("bucket").sort_index()
     assert len(vd) == 5

@@ -76,15 +76,6 @@ def main() -> None:
         "Model compiled to column expressions: no Python operator anywhere.",
         plan_of(eng.score(tbl, id_cols=["id"]))))
 
-    sections.append((
-        "Pure-Catalyst violations (predict_at_scale)",
-        "score() + BROADCAST join against the per-cluster dimension + "
-        "JVM-side template substitution: full violation rows "
-        "(explanations included) with zero Python in the plan — the "
-        "10^10-flagged-rows path. Violations carry (cluster_id, value); "
-        "all cluster-constant text lives in the broadcast dimension.",
-        plan_of(eng.predict_at_scale(tbl, id_cols=["id"]))))
-
     docs = load_documents(spark, SF)
     north = to_north_shape(docs, plant=True)
     sections.append((
