@@ -4,48 +4,55 @@ from __future__ import annotations
 
 import logging
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import SparkSession
 
 log = logging.getLogger(__name__)
 
-# applicationIds already warmed by _warm_engine (one warm-up per
-# SparkContext; getOrCreate may hand the same context back many times)
-_WARMED: set[str] = set()
-# JIT promotion is JVM-wide and the py4j-launched JVM outlives
-# SparkContexts, so the 150k-row expression pipeline only pays off once
-# per PROCESS; later contexts just touch the per-context machinery
-_JIT_DONE: list[bool] = []
+# set by the first warm-up in this process: JIT and class-loading state
+# is JVM-wide, and the py4j-launched JVM outlives its SparkContexts
+_WARMED = False
+_WARM_ROWS = 4096
 
 
 def _warm_engine(spark: SparkSession) -> None:
-    """One-time per-context JVM warm-up on SYNTHETIC data.
+    """Warm the JVM code paths a validate run executes, once per process,
+    on synthetic data.
 
-    The first real execution of each operator family otherwise runs its
-    hot per-row paths (UTF8String replace/split, regexp, array HOFs,
-    hash-aggregate update loops) in the interpreter/C1 until HotSpot's
-    tiered JIT promotes them — measured ~6s of one-shot first-execution
-    overhead across the 52-query suite at sf0.1, e.g. quality_scores
-    1.60s first / 0.35s thereafter, reproduced with whole-stage codegen
-    disabled (so it is JIT, not janino).  A real cluster pays this once
-    per executor lifetime and amortizes it over hours; a fresh local
-    session pays it inside the first queries.  Exercising the same JVM
-    methods on ~150k generated rows at session start moves that cost
-    into session setup, exactly like the Python-worker pool spin-up
-    warm-up the bench harness already does (and the -Xms/AlwaysPreTouch
-    heap pre-touch): infrastructure warm-up, no input data touched, no
-    results kept.  JIT state is JVM-wide, so in a multi-session process
-    only the first warm-up is slow (~2s; ~0.3s thereafter).
+    A fresh JVM pays for the first use of each code path: class loading,
+    then interpreted code until HotSpot's tiered JIT promotes it.  In
+    short data-parallel jobs that cost is mostly class loading on first
+    use (Lion et al., "Don't Get Caught in the Cold, Warm-up Your JVM",
+    OSDI 2016), so the warm-up makes one small first use of each
+    operator ``scripts/run_validate.py`` executes, on a few thousand
+    generated rows: a parquet write and read, the fit sample's Arrow
+    ``limit(n).toPandas()``, the verdicts' filter plus hash aggregate
+    collect, and a persist filled by a noop write and a blocking
+    unpersist; plus an eager ``localCheckpoint``, the lineage cut the
+    suite's dedup and text operators take.  It starts no Python worker,
+    reads no input data, keeps no result, and writes only into a private
+    temp directory that it removes.
+
+    Class-loading and JIT state is JVM-wide and the py4j-launched JVM
+    outlives its SparkContexts, so only the first session of a process
+    warms up; a later context in the same process reuses the warm JVM.
+    The text operators of the query suite are not warmed: their first
+    queries pay their own first use.  Measured against a per-context
+    warm-up that also ran a 150k-row text pipeline
+    (``PERF_warm_once.json``, 4 cores, medians of 10 alternating pairs):
+    a cold ``conditional_dense`` validate run 35.5 -> 27.3 s, its session
+    set-up 25.3 -> 16.8 s.  In the query suite at sf0.01 the session
+    set-up is 6-10 s shorter and ``quality_scores``, the first text
+    query, executes in 1.6-1.8 s instead of 0.3 s on first use.
 
     Opt out with SPARK_GRAFT_NO_WARMUP=1 (e.g. latency-sensitive
     single-query scripts)."""
-    if os.environ.get("SPARK_GRAFT_NO_WARMUP"):
+    global _WARMED
+    if _WARMED or os.environ.get("SPARK_GRAFT_NO_WARMUP"):
         return
-    app = spark.sparkContext.applicationId
-    if app in _WARMED:
-        return
-    _WARMED.add(app)
+    _WARMED = True
     try:
         _warm_engine_inner(spark)
     except Exception:
@@ -53,56 +60,35 @@ def _warm_engine(spark: SparkSession) -> None:
         # must never take down session creation — the engine is correct
         # without it, just cold
         log.warning("engine warm-up failed for %s; the session continues "
-                    "without it", app, exc_info=True)
+                    "without it", spark.sparkContext.applicationId,
+                    exc_info=True)
 
 
 def _warm_engine_inner(spark: SparkSession) -> None:
-    from pyspark.sql import Window, functions as F
+    from pyspark.sql import functions as F
 
-    def _noop(df):
-        df.write.format("noop").mode("overwrite").save()
-
-    if not _JIT_DONE:
-        _JIT_DONE.append(True)
-        # string/expression pipeline: md5-generated text through the same
-        # per-row methods the text operators run (replace chains, regexp,
-        # split/lower/trim, array HOFs, xxhash64/conv arithmetic)
-        syn = (spark.range(150_000)
-                    .select(F.col("id"),
-                            F.concat_ws(" ", F.md5(F.col("id").cast("string")),
-                                        F.lit("the and of to is"),
-                                        F.md5((F.col("id") + 1).cast("string")))
-                             .alias("_t")))
-        pad = F.concat(F.lit(" "), F.lower(F.col("_t")), F.lit(" "))
-        toks = F.split(F.lower(F.trim(F.col("_t"))), r"\s+")
-        n = F.size(toks)
-        idx = F.sequence(F.lit(0), F.greatest(n - 3, F.lit(0)))
-        grams = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, 3)))
-        hashes = F.transform(grams, lambda g: F.xxhash64(g))
-        _noop(syn.select(
-            (F.length(pad) - F.length(F.replace(pad, F.lit(" the "), F.lit("")))).alias("a"),
-            F.length(F.regexp_replace(F.col("_t"), r"[.,;:!?]", "")).alias("b"),
-            F.size(F.regexp_extract_all(F.col("_t"), F.lit(r"[A-Za-z]+|[0-9]+"), 0)).alias("c"),
-            F.array_min(F.array_distinct(hashes)).alias("d"),
-            F.aggregate(F.zip_with(hashes, hashes,
-                                   lambda x, y: F.pmod(x, F.lit(1000003))
-                                   + F.pmod(y, F.lit(1000003))),
-                        F.lit(0).cast("long"), lambda acc, x: acc + x).alias("e"),
-            F.conv(F.substring(F.md5(F.col("_t")), 1, 15), 16, 10).cast("long").alias("f")))
-        # token explode -> hash aggregate (map-side combine) -> window -> join
-        ex = syn.select(F.col("id"), F.explode(toks).alias("term"))
-        agg = (ex.groupBy("term")
-                 .agg(F.count(F.lit(1)).alias("tf"), F.min("id").alias("mn")))
-        w = Window.partitionBy(F.lit(1)).orderBy(F.col("tf").desc(), "term")
-        top = agg.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") <= 8)
-        _noop(ex.join(F.broadcast(top.select("term")), "term")
-                .groupBy("id").agg(F.count(F.lit(1)).alias("k")))
-    # datasource + lineage-cut machinery: tiny self-generated parquet
-    # round trip and an eager localCheckpoint (toRdd path)
-    p = os.path.join(tempfile.gettempdir(), f"otspark_warm_{os.getpid()}.parquet")
-    spark.range(64).write.mode("overwrite").parquet(p)
-    _noop(spark.read.parquet(p))
-    spark.range(64).localCheckpoint(eager=True).count()
+    tmp = tempfile.mkdtemp(prefix="otspark_warm_")
+    try:
+        path = os.path.join(tmp, "warm.parquet")
+        (spark.range(_WARM_ROWS)
+              .select("id", (F.col("id") % 5).alias("k"),
+                      (F.col("id") * 0.5).alias("x"),
+                      F.col("id").cast("string").alias("s"))
+              .write.parquet(path))
+        df = spark.read.parquet(path)
+        # the fit sample: an Arrow collect through CollectLimit
+        df.limit(_WARM_ROWS // 2).toPandas()
+        # the verdicts: filter, hash aggregate, collect
+        (df.filter(F.col("x") > 100).groupBy("k")
+           .agg(F.count(F.lit(1)).alias("n")).collect())
+        # the violations cache: persist, fill it with a write, release it
+        cached = df.persist()
+        cached.write.format("noop").mode("overwrite").save()
+        cached.unpersist(blocking=True)
+        # the lineage cut of the dedup and text operators
+        spark.range(64).localCheckpoint(eager=True).count()
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def get_spark(app: str = "outliertree_spark", master: str | None = None,

@@ -12,8 +12,9 @@ Usage (the north rule's launch shape):
 
 Resumable: with --resume, partitions already recorded in the checkpoint
 ledger are skipped; verdicts + lineage land in the ledger as JSON lines.
-The lineage carries the fit stats (sample rows, fit seconds, model bytes,
-cluster count), taken from the driver-side model.
+The lineage carries the wall seconds of the session set-up and the fit
+stats (sample rows, fit seconds, model bytes, cluster count), taken from
+a driver timer and the driver-side model.
 
 One execution of the predict plan per run: the violations frame is
 persisted as soon as it is built, the parquet append materializes the
@@ -145,7 +146,9 @@ def main(argv=None) -> int:
     from outliertree_spark import CheckpointLedger, SparkOutlierTree, ValidationConfig
     from outliertree_spark.session import get_spark
 
+    t0 = time.time()
     spark = get_spark(app="validate-run", master=args.master)
+    session_s = time.time() - t0
     df = (spark.table(args.input) if not args.input.endswith(".parquet")
           and "/" not in args.input else spark.read.parquet(args.input))
 
@@ -239,6 +242,7 @@ def main(argv=None) -> int:
             lineage={"input": args.input,
                      "model": args.model_out or args.model_in,
                      "wall_sec": round(time.time() - t0, 2),
+                     "session_s": round(session_s, 3),
                      "fit": fit_stats})
     finally:
         # blocking: the cached blocks are gone before spark.stop(), so no

@@ -190,7 +190,7 @@ def test_warm_engine_failure_is_logged(monkeypatch, caplog):
 
     monkeypatch.delenv("SPARK_GRAFT_NO_WARMUP", raising=False)
     monkeypatch.setattr(session, "_warm_engine_inner", boom)
-    monkeypatch.setattr(session, "_WARMED", set())
+    monkeypatch.setattr(session, "_WARMED", False)
     stub = SimpleNamespace(sparkContext=SimpleNamespace(
         applicationId="local-warm-failure-test"))
     with caplog.at_level(logging.WARNING, logger=session.__name__):

@@ -146,9 +146,11 @@ def test_ledger_lineage_carries_fit_stats(docs, tmp_path):
             "model_bytes": model_path.stat().st_size,
             "clusters": sum(len(c["clusters"]) for c in model["columns"])}
     assert model["nrows_fit"] == 2000
-    fits = [e["lineage"]["fit"] for e in entries if "partition" in e]
-    assert len(fits) == 4
-    for f in fits:
+    lineages = [e["lineage"] for e in entries if "partition" in e]
+    assert len(lineages) == 4
+    for lin in lineages:
+        assert lin["session_s"] > 0
+        f = lin["fit"]
         assert {k: f[k] for k in want} == want
         assert f["seconds"] > 0
 
