@@ -637,7 +637,8 @@ def q_gopher_repetition(spark, sf_dir):
     half) over the documents table: duplicate line/paragraph fractions,
     duplicate line/paragraph char fractions, top-{2,3,4}-gram char
     fractions, dup-{5..10}-gram char fractions, 13 rule booleans and
-    the keep conjunction — all row-local sorted-run folds, no exchange.
+    the keep conjunction — one row-local Arrow-batched Counter sweep
+    (mapInPandas), no data-dependent exchange.
     Rule booleans compare exact-integer-derived doubles; the displayed
     fractions are rounded to 6dp only for the value hash."""
     from outliertree_spark.operators.gopher import gopher_repetition

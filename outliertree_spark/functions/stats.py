@@ -54,11 +54,6 @@ def calc_sd_counts(cnt, s, ssq) -> float:
     return sd
 
 
-def numeric_gain(tot_sd: float, info_left: float, info_right: float,
-                 info_na: float, cnt: float) -> float:
-    return float(LD(tot_sd) - (LD(info_left) + LD(info_right) + LD(info_na)) / LD(cnt))
-
-
 def total_info(counts: np.ndarray) -> float:
     """N*ln N - sum n_i ln n_i over positive counts."""
     c = np.asarray(counts, dtype=LD)

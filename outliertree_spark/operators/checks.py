@@ -76,8 +76,8 @@ def snapshot_diff(old: DataFrame, new: DataFrame,
     cast-equal values, e.g. -0.0 vs 0.0, compare unchanged).  Scale
     shape: each side reduces to (key, digest) in the scan — content
     bytes never shuffle — then ONE co-partitioned full-outer join on
-    the key; on bucketed tables (sources/bucketed.py) the exchange
-    disappears entirely."""
+    the key; on tables bucketed on the key the exchange disappears
+    entirely."""
     keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
     if compare_cols is None:
         shared = [c for c in old.columns if c in set(new.columns)]

@@ -205,138 +205,6 @@ REP_MAX_DUP_NGRAM_CHAR_FRAC = {5: 0.15, 6: 0.14, 7: 0.13, 8: 0.12,
                                9: 0.11, 10: 0.10}
 
 
-def _run_stats(sorted_arr: Column) -> Column:
-    """Fold a SORTED string array into struct(best, dup):
-
-    - ``best`` = max over distinct values of ``count * length`` (chars
-      covered by the most repetitious value, singletons included);
-    - ``dup``  = sum over values occurring more than once of
-      ``count * length`` (chars covered by ALL occurrences of
-      duplicated values).
-
-    One sequential ``aggregate`` pass, O(1) state: equal values are
-    adjacent after the sort, so runs finalize on value change (and once
-    more in the finish lambda).  Exact integer arithmetic — any engine
-    computing counts per distinct value gets the same numbers."""
-    init = F.struct(
-        F.lit(None).cast("string").alias("prev"),
-        F.lit(0).cast("long").alias("cnt"),
-        F.lit(0).cast("long").alias("best"),
-        F.lit(0).cast("long").alias("dup"))
-
-    def _merge(acc, g):
-        run = F.coalesce(acc["cnt"] * F.length(acc["prev"]).cast("long"),
-                         F.lit(0).cast("long"))
-        same = acc["prev"].eqNullSafe(g)
-        return F.when(same, F.struct(
-            acc["prev"].alias("prev"),
-            (acc["cnt"] + F.lit(1)).alias("cnt"),
-            acc["best"].alias("best"),
-            acc["dup"].alias("dup"))
-        ).otherwise(F.struct(
-            g.alias("prev"),
-            F.lit(1).cast("long").alias("cnt"),
-            F.greatest(acc["best"], run).alias("best"),
-            (acc["dup"] + F.when(acc["cnt"] > 1, run)
-                           .otherwise(F.lit(0))).alias("dup")))
-
-    def _finish(acc):
-        run = F.coalesce(acc["cnt"] * F.length(acc["prev"]).cast("long"),
-                         F.lit(0).cast("long"))
-        return F.struct(
-            F.greatest(acc["best"], run).alias("best"),
-            (acc["dup"] + F.when(acc["cnt"] > 1, run)
-                           .otherwise(F.lit(0))).alias("dup"))
-
-    return F.aggregate(sorted_arr, init, _merge, _finish)
-
-
-def _rep_feature_frame_catalyst(df, id_col: str, text_col: str) -> DataFrame:
-    """Pure-Catalyst repetition features: per n-gram order one
-    ``array_sort`` plus ONE O(P) sequential run fold
-    (:func:`_run_stats`), staged projections guarding the re-inline
-    trap measured in operators/text.py winnowing_fingerprints.  Kept as
-    the engine-portable reference twin — Spark's higher-order functions
-    evaluate INTERPRETED (outside whole-stage codegen), so this path
-    runs ~10x slower than the Arrow default (500k stress docs,
-    local[32]: 160s vs 16s) and exists for plan-purity (zero Python in
-    the plan) and as the equivalence oracle for the Arrow path.
-
-    Measured dead end (kept out): grouping by ``struct(xxhash64(slice),
-    summed-len)`` instead of the joined gram string — avoids string
-    materialization but is SLOWER (100k docs, local[32]: n=5 2.8s vs
-    2.1s, n=10 3.0s vs 1.7s; the per-position interpreted length fold
-    costs more than the string join saves) and would trade exact
-    grouping for 64-bit-hash grouping."""
-    c = F.coalesce(F.col(text_col), F.lit(""))
-    words = F.filter(F.split(F.trim(c), r"\s+"),
-                     lambda w: F.length(w) > 0)
-    # NB: F.trim must be wrapped — passing it bare makes transform()
-    # see a binary callable (trim has an optional trimstr parameter)
-    # and silently pass the element INDEX as the trim string (no-op).
-    lines = F.filter(F.transform(F.split(c, r"\n"), lambda x: F.trim(x)),
-                     lambda s: F.length(s) > 0)
-    paras = F.filter(F.transform(F.split(c, r"\n{2,}"),
-                                 lambda x: F.trim(x)),
-                     lambda s: F.length(s) > 0)
-    d1 = df.select(F.col(id_col),
-                   F.length(c).cast("long").alias("_tc"),
-                   words.alias("_w"), lines.alias("_l"),
-                   paras.alias("_p"))
-
-    w, l, p = F.col("_w"), F.col("_l"), F.col("_p")
-    nw = F.size(w)
-    stat_cols = []
-
-    def _gram_at(n):
-        # NB: a `lambda i, n=n:` default-arg closure would change the
-        # lambda's arity — pyspark's transform() passes (element, index)
-        # to binary lambdas, silently shadowing n with the index.
-        return lambda i: F.array_join(F.slice(w, i, n), " ")
-
-    for n in (*REP_MAX_TOP_NGRAM_CHAR_FRAC, *REP_MAX_DUP_NGRAM_CHAR_FRAC):
-        grams = F.when(nw >= n, F.transform(
-            F.sequence(F.lit(1), nw - n + 1), _gram_at(n))
-        ).otherwise(F.array().cast("array<string>"))
-        stat_cols.append(_run_stats(F.array_sort(grams)).alias(f"_g{n}"))
-
-    def _seq_stats(arr, tag):
-        lens = F.transform(arr, F.length)
-        return [
-            F.size(arr).cast("long").alias(f"_n{tag}"),
-            F.size(F.array_distinct(arr)).cast("long").alias(f"_nd{tag}"),
-            F.aggregate(lens, F.lit(0).cast("long"),
-                        lambda a, x: a + x).alias(f"_ch{tag}"),
-            _run_stats(F.array_sort(arr)).alias(f"_s{tag}"),
-        ]
-
-    d2 = d1.select(F.col(id_col), F.col("_tc"), *stat_cols,
-                   *_seq_stats(l, "l"), *_seq_stats(p, "p"))
-
-    def _frac(num, den):
-        return F.when(den > 0, num.cast("double") / den.cast("double")) \
-                .otherwise(F.lit(0.0))
-
-    tc = F.col("_tc")
-    feats = [
-        _frac(F.col("_nl") - F.col("_ndl"), F.col("_nl"))
-        .alias("dup_line_frac"),
-        _frac(F.col("_np") - F.col("_ndp"), F.col("_np"))
-        .alias("dup_para_frac"),
-        _frac(F.col("_sl")["dup"], F.col("_chl"))
-        .alias("dup_line_char_frac"),
-        _frac(F.col("_sp")["dup"], F.col("_chp"))
-        .alias("dup_para_char_frac"),
-    ]
-    for n in REP_MAX_TOP_NGRAM_CHAR_FRAC:
-        feats.append(_frac(F.col(f"_g{n}")["best"], tc)
-                     .alias(f"top_{n}gram_char_frac"))
-    for n in REP_MAX_DUP_NGRAM_CHAR_FRAC:
-        feats.append(_frac(F.col(f"_g{n}")["dup"], tc)
-                     .alias(f"dup_{n}gram_char_frac"))
-    return d2.select(F.col(id_col), *feats)
-
-
 REP_FEATURE_COLS = (
     "dup_line_frac", "dup_para_frac", "dup_line_char_frac",
     "dup_para_char_frac",
@@ -347,15 +215,14 @@ REP_FEATURE_COLS = (
 
 def _rep_feature_frame_arrow(df, id_col: str, text_col: str) -> DataFrame:
     """Arrow-batched repetition features: ONE mapInPandas pass running
-    a per-document Counter sweep — the scale default (~10x the
-    Catalyst-HOF twin, which evaluates interpreted; 500k stress docs at
-    local[32]: 16s vs 160s).  Python-side text handling deliberately
-    mirrors the JVM semantics bit-for-bit (ASCII \\s+ word split,
-    space-only trim, code-point lengths); the equivalence is pinned by
-    tests/test_curation_ops.py::test_repetition_impls_equivalent over
-    edge docs (tabs, \\xa0, \\r, unicode thin space) and the
-    fixture corpus — divisions are exact-int-over-exact-int in IEEE
-    doubles on both paths, so equality is exact, not approximate."""
+    a per-document Counter sweep.  Text handling follows the JVM
+    semantics of the other text operators and the DuckDB oracle (ASCII
+    \\s+ word split, space-only trim, code-point lengths); it is pinned
+    against an independent pure-Python reference by
+    tests/test_curation_ops.py::test_repetition_matches_reference over
+    edge docs (tabs, \\xa0, \\r, NULL text) and the fixture
+    corpus — divisions are exact-int-over-exact-int in IEEE doubles, so
+    equality is exact, not approximate."""
     import re
     from collections import Counter
 
@@ -430,8 +297,7 @@ def _rep_feature_frame_arrow(df, id_col: str, text_col: str) -> DataFrame:
 
 
 def gopher_repetition(df: DataFrame, id_col: str = "doc_id",
-                      text_col: str = "text",
-                      impl: str = "arrow") -> DataFrame:
+                      text_col: str = "text") -> DataFrame:
     """Gopher repetition-rule features + booleans (Rae et al. 2021
     Table A1, lower half): duplicate line/paragraph fractions,
     duplicate line/paragraph CHARACTER fractions, top-{2,3,4}-gram
@@ -452,23 +318,13 @@ def gopher_repetition(df: DataFrame, id_col: str = "doc_id",
       ``count*length`` (singletons included); ``dup_ngram_char_frac``
       = chars covered by all occurrences of n-grams appearing twice+.
 
-    ``impl="arrow"`` (default) computes the 13 features in ONE
-    Arrow-batched mapInPandas Counter sweep — still perfectly row-local
-    (no exchange, no state), ~10x the ``impl="catalyst"`` twin, which
-    keeps the whole computation in JVM expressions (Spark higher-order
-    functions evaluate interpreted, hence the gap).  Both paths emit
-    bit-identical doubles (equivalence-tested); rule booleans compare
-    exact-integer-derived doubles against literal thresholds on either
-    path.  Narrow inputs are fanned out first (operators/dedup._spread
-    — a no-op at real scale where inputs are many files)."""
+    The 13 features come from ONE Arrow-batched mapInPandas Counter
+    sweep — row-local (no exchange, no state).  Rule booleans compare
+    exact-integer-derived doubles against literal thresholds.  Narrow
+    inputs are fanned out first (operators/dedup._spread — a no-op at
+    real scale where inputs are many files)."""
     from .dedup import _spread
-    df = _spread(df)
-    if impl == "arrow":
-        d3 = _rep_feature_frame_arrow(df, id_col, text_col)
-    elif impl == "catalyst":
-        d3 = _rep_feature_frame_catalyst(df, id_col, text_col)
-    else:
-        raise ValueError(f"unknown impl {impl!r}")
+    d3 = _rep_feature_frame_arrow(_spread(df), id_col, text_col)
 
     rules = [
         (F.col("dup_line_frac") <= REP_MAX_DUP_LINE_FRAC)

@@ -27,37 +27,6 @@ class BatchResult:
         self.size = np.zeros(n, dtype=np.int64)
 
 
-def encode_batch(model: dict, data: dict[str, np.ndarray],
-                 levels_by_col: dict[str, list]) -> dict[str, np.ndarray]:
-    """Encode raw per-column arrays into the model's code space.
-
-    Numeric columns pass through as float64; categorical/ordinal string
-    arrays become int codes with NA == -1 and unseen categories == ncat
-    (the reference encodes unseen as an out-of-range code and skips them
-    at prediction: __init__.py:614-630, predict.cpp:119)."""
-    out = {}
-    for name, arr in data.items():
-        if name in levels_by_col:
-            levels = levels_by_col[name]
-            lut = {lev: i for i, lev in enumerate(levels)}
-            ncat = len(levels)
-            codes = np.full(arr.shape[0], -1, dtype=np.int64)
-            mask = np.array([v is not None and v == v for v in arr], dtype=bool) \
-                if arr.dtype == object else ~_isnan_safe(arr)
-            vals = arr[mask]
-            codes[mask] = np.array([lut.get(v, ncat) for v in vals], dtype=np.int64)
-            out[name] = codes
-        else:
-            out[name] = arr.astype(np.float64, copy=False)
-    return out
-
-
-def _isnan_safe(arr: np.ndarray) -> np.ndarray:
-    if arr.dtype.kind in ("f",):
-        return np.isnan(arr)
-    return np.zeros(arr.shape[0], dtype=bool)
-
-
 def _cond_mask(cl: dict, data: dict, levels_count: dict, rows: np.ndarray) -> np.ndarray:
     """Which of ``rows`` satisfy the cluster's own extra condition
     (src/predict.cpp:536-663)."""

@@ -42,34 +42,6 @@ def cosine_expr(a, b):
     return dot_expr(a, b) / (norm_expr(a) * norm_expr(b))
 
 
-def sign_lsh_bucket(vec_col: str, n_planes: int = 8, seed: int = 42):
-    """Deterministic single-band sign-LSH bucket id, pure Catalyst: for
-    each hyperplane, the sign of sum_d v[d] * h(seed, plane, d), where h
-    is a symmetric pseudo-random weight from xxhash64 (``pmod`` — Spark's
-    ``%`` keeps the dividend's sign, which would bias every weight
-    negative and correlate all planes).  Prefer ``lsh_bucket_arrays`` (the
-    L-table OR-construction) for recall-sensitive work; this is the
-    no-Python building block."""
-    vec = F.col(vec_col)
-
-    def _proj(p: int):
-        return F.aggregate(
-            F.zip_with(
-                vec,
-                F.transform(F.sequence(F.lit(0), F.size(vec) - 1),
-                            lambda d: (F.pmod(F.xxhash64(F.lit(seed), F.lit(p), d),
-                                              F.lit(2001)) - 1000).cast("double") / 1000.0),
-                lambda v, w: (v * w).cast("double")),
-            F.lit(0.0), lambda acc, x: acc + x)
-
-    bucket = F.lit(0).cast("long")
-    for p in range(n_planes):
-        bucket = bucket.bitwiseOR(
-            F.when(_proj(p) >= 0, F.lit(1 << p).cast("long"))
-             .otherwise(F.lit(0).cast("long")))
-    return bucket
-
-
 def lsh_bucket_arrays(vec_col: str, n_tables: int = 16, n_planes: int = 8,
                       seed: int = 42):
     """array<long> column of ``n_tables`` sign-LSH bucket ids (one per

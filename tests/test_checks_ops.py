@@ -158,10 +158,9 @@ def test_fingerprint_whitespace_invariant(spark):
 
 
 def test_streaming_validation(spark, tmp_path):
-    import os
+    """The batch predict plan (Catalyst prefilter + one Arrow
+    mapInPandas pass) runs unchanged on a streaming DataFrame."""
     from outliertree_spark import SparkOutlierTree, ValidationConfig
-    from outliertree_spark.streaming.validate import (
-        run_stream_to_memory, stream_violations)
 
     ev = spark.read.parquet(f"{SF}/events.parquet")
     eng = SparkOutlierTree(ValidationConfig())
@@ -172,86 +171,13 @@ def test_streaming_validation(spark, tmp_path):
     src = str(tmp_path / "stream_src")
     bad.write.mode("overwrite").parquet(src)
     stream = (spark.readStream.schema(bad.schema).parquet(src))
-    v = stream_violations(eng, stream, id_cols=["event_id"])
-    run_stream_to_memory(v, "viol_stream")
+    v = eng.predict(stream, id_cols=["event_id"])
+    q = (v.writeStream.outputMode("append").format("memory")
+         .queryName("viol_stream").trigger(availableNow=True).start())
+    q.processAllAvailable()
+    q.stop()
     got = spark.sql("SELECT * FROM viol_stream").toPandas()
     assert 5 in set(got["event_id"])
-
-
-def test_stateful_drift_monitor(spark, tmp_path):
-    from outliertree_spark.streaming.validate import stateful_drift_monitor
-    rng = np.random.RandomState(0)
-    n = 2000
-    pdf = pd.DataFrame({
-        "src": np.where(np.arange(n) % 2 == 0, "a", "b"),
-        "lang": np.where(rng.rand(n) < 0.9, "en", "de")})
-    pdf.loc[pdf.src == "b", "lang"] = "de"  # src b fully drifted
-    src = str(tmp_path / "drift_src")
-    spark.createDataFrame(pdf).write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema("src string, lang string").parquet(src)
-    mon = stateful_drift_monitor(stream, "src", "lang",
-                                 {"en": 0.9, "de": 0.1})
-    q = (mon.writeStream.outputMode("update").format("memory")
-         .queryName("drift_t").trigger(availableNow=True).start())
-    q.processAllAvailable()
-    q.stop()
-    out = spark.sql("SELECT * FROM drift_t").toPandas()
-    a = out[out.src == "a"].iloc[0]["psi"]
-    b = out[out.src == "b"].iloc[0]["psi"]
-    assert b > a and b > 1.0 and abs(a) < 0.1
-
-
-def test_stateful_drift_monitor_multibatch_exact_psi(spark, tmp_path):
-    """Round-3: exact per-micro-batch PSI across 3 deterministic batches
-    with a planted shift — verifies the state actually ACCUMULATES
-    across batches (cumulative histogram), not just single-batch smoke.
-    One parquet file per batch + maxFilesPerTrigger=1 forces one
-    micro-batch per file; distinct mtimes pin the batch order."""
-    import math
-    import os as _os
-    import time as _time
-    from outliertree_spark.streaming.validate import stateful_drift_monitor
-
-    src = str(tmp_path / "drift_mb")
-    _os.makedirs(src)
-    batches = [
-        {"en": 50, "de": 50},   # matches baseline: psi ~ 0
-        {"en": 30, "de": 10},   # cumulative 80/60 -> mild drift
-        {"en": 0, "de": 40},    # cumulative 80/100 -> shift back
-    ]
-    t0 = _time.time() - 100
-    for i, counts in enumerate(batches):
-        rows = ([("k", "en")] * counts["en"] + [("k", "de")] * counts["de"])
-        pdf = pd.DataFrame(rows, columns=["src", "lang"])
-        f = f"{src}/batch_{i}.parquet"
-        pdf.to_parquet(f)
-        _os.utime(f, (t0 + i * 10, t0 + i * 10))
-
-    stream = (spark.readStream.schema("src string, lang string")
-              .option("maxFilesPerTrigger", 1).parquet(src))
-    base = {"en": 0.5, "de": 0.5}
-    mon = stateful_drift_monitor(stream, "src", "lang", base)
-    q = (mon.writeStream.outputMode("update").format("memory")
-         .queryName("drift_mb").trigger(availableNow=True).start())
-    q.processAllAvailable()
-    q.stop()
-    out = (spark.sql("SELECT * FROM drift_mb").toPandas()
-           .sort_values("n_total").reset_index(drop=True))
-    assert list(out["n_total"]) == [100, 140, 180]
-
-    def psi(en, de):
-        tot = en + de
-        s = 0.0
-        for p, b in ((en / tot, 0.5), (de / tot, 0.5)):
-            p = max(p, 1e-6)
-            s += (p - b) * math.log(p / b)
-        return s
-
-    expect = [psi(50, 50), psi(80, 60), psi(80, 100)]
-    for got, exp in zip(out["psi"], expect):
-        assert got == pytest.approx(exp, abs=1e-12), (got, exp)
-    # the planted shift is visible batch-over-batch
-    assert out["psi"][1] > out["psi"][0]
 
 
 def test_compression_ratio_orders_repetitive_below_prose(spark):
@@ -388,3 +314,31 @@ def test_snapshot_diff_dotted_and_subset_cols(spark):
     got = {r["id.key"]: r["change_type"]
            for r in snapshot_diff(old, new, "id.key", ["val.a"]).collect()}
     assert got == {2: "changed"}
+
+
+def test_snapshot_diff_on_bucketed_tables_has_no_exchange(spark):
+    """Backs the snapshot_diff docstring claim: on co-bucketed snapshot
+    versions the digest full-outer join runs with NO Exchange.  The
+    tables are read through the catalog (``spark.table``), which keeps
+    the bucket spec; a path read would shuffle again."""
+    from outliertree_spark.operators.checks import snapshot_diff
+    n = 3000
+    old = pd.DataFrame({"doc_id": np.arange(n),
+                        "text": [f"t{i}" for i in range(n)]})
+    new = old.copy()
+    new.loc[7, "text"] = "CHANGED"
+    new = new[new["doc_id"] != 9]
+    for pdf, table in ((old, "t_snap_old"), (new, "t_snap_new")):
+        (spark.createDataFrame(pdf).write.mode("overwrite")
+         .format("parquet").bucketBy(8, "doc_id").sortBy("doc_id")
+         .saveAsTable(table))
+    try:
+        d = snapshot_diff(spark.table("t_snap_old"),
+                          spark.table("t_snap_new"), "doc_id")
+        plan = d._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in plan, plan
+        got = {r["doc_id"]: r["change_type"] for r in d.collect()}
+        assert got == {7: "changed", 9: "removed"}
+    finally:
+        spark.sql("DROP TABLE IF EXISTS t_snap_old")
+        spark.sql("DROP TABLE IF EXISTS t_snap_new")

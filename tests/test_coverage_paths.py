@@ -153,23 +153,6 @@ def test_print_outliers_format():
     assert print_outliers(pdf.iloc[:0]) == "No outliers found in input data.\n"
 
 
-def test_gritbot_export(tmp_path):
-    from outliertree_spark.gritbot_export import generate_gritbot_files
-    rng = np.random.RandomState(1)
-    n = 100
-    num1 = rng.normal(size=n)
-    cat = rng.randint(0, 2, size=n)
-    cols = [FitColumn("num1", "numeric", num1.astype(float)),
-            FitColumn("cat", "categorical", cat.astype(np.int64),
-                      levels=["x", "y"])]
-    m = _finish(fit_arrays(cols, ValidationConfig()), cols)
-    pdf = pd.DataFrame({"num1": num1, "cat": np.array(["x", "y"])[cat]})
-    names, data = generate_gritbot_files(m, pdf, str(tmp_path))
-    ntext = open(names).read()
-    assert "num1: continuous." in ntext and "cat: x, y." in ntext
-    assert len(open(data).read().splitlines()) == n
-
-
 def test_follow_all_mode():
     """follow_all explores every qualifying branch as its own subtree."""
     rng = np.random.RandomState(7)
@@ -188,36 +171,3 @@ def test_follow_all_mode():
     res = predict_batch(m, {"age": age, "pregnant": preg.astype(np.int64),
                             "x": np.zeros(n)})
     assert res.score[planted] < 1.0
-
-
-def test_gritbot_export_escaping_and_footer(tmp_path):
-    """getnames.c rules: ',' ':' '.' '|' delimiters escaped with '\\';
-    '?' for missing; ordinals '[ordered]'; excluded-attributes footer."""
-    from outliertree_spark.gritbot_export import generate_gritbot_files
-    rng = np.random.RandomState(2)
-    n = 60
-    num1 = rng.normal(size=n)
-    cat = rng.randint(0, 2, size=n)
-    o = rng.randint(0, 3, size=n)
-    levels = ["a,b", "c:d.e"]  # delimiters inside level names
-    cols = [FitColumn("num.1", "numeric", num1.astype(float)),
-            FitColumn("cat", "categorical", cat.astype(np.int64),
-                      levels=levels),
-            FitColumn("ordc", "ordinal", o.astype(np.int64),
-                      levels=["lo", "mid", "hi"])]
-    m = _finish(fit_arrays(cols, ValidationConfig()), cols)
-    pdf = pd.DataFrame({"num.1": num1,
-                        "cat": np.array(levels, dtype=object)[cat],
-                        "ordc": np.array(["lo", "mid", "hi"])[o]})
-    pdf.loc[0, "cat"] = None
-    names, data = generate_gritbot_files(m, pdf, str(tmp_path),
-                                         cols_ignore=["ordc"])
-    ntext = open(names).read()
-    assert "num\\.1: continuous." in ntext
-    assert "cat: a\\,b, c\\:d\\.e." in ntext
-    assert "ordc: [ordered] lo, mid, hi." in ntext
-    assert "attributes excluded: ordc." in ntext
-    dlines = open(data).read().splitlines()
-    assert len(dlines) == n
-    assert ",?," in dlines[0]               # the planted missing value
-    assert "a\\,b" in "\n".join(dlines) or "c\\:d\\.e" in "\n".join(dlines)

@@ -1,6 +1,9 @@
 """Round-5 curation operators: Gopher quality rules, distribution-
 matched resampling, CCNet perplexity buckets."""
 
+import os
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -8,6 +11,8 @@ from outliertree_spark.operators.gopher import gopher_rules
 from outliertree_spark.operators.sampling import mix_rates, resample_to_mix
 from outliertree_spark.operators.text import (perplexity_buckets,
                                               surprisal_scores_fp)
+
+from .conftest import SF_DIR
 
 GOOD_PROSE = ("the quick brown fox jumps over the lazy dog and then the "
               "dog decided that it would have to be quick as well with "
@@ -222,15 +227,56 @@ def test_repetition_top_gram_counts_singletons(spark):
     assert out["dup_5gram_char_frac"] == 0.0
 
 
-def test_repetition_impls_equivalent(spark):
-    """The Arrow default and the Catalyst twin must emit bit-identical
-    doubles — including on the whitespace edge cases where JVM and
-    Python semantics habitually diverge (ASCII-only \\s, space-only
-    trim, \\xa0 non-breaking space, \\r line tails).  This test is what
-    caught F.transform(split, F.trim) silently NOT trimming (bare
-    F.trim has an optional second param, so transform passes the
-    element index as the trim string)."""
-    from outliertree_spark.operators.gopher import gopher_repetition
+_ASCII_WS = re.compile(r"[ \t\n\x0b\f\r]+")
+
+
+def _repetition_reference(text):
+    """The 13 repetition features computed straight from the
+    definitions in ``gopher_repetition``'s docstring: lines/paragraphs
+    are space-trimmed non-empty pieces of splitting on \\n / \\n{2,};
+    words split on the JVM's ASCII whitespace class; n-grams are
+    space-joined word windows; char fractions divide by len(text)."""
+    text = text or ""
+
+    def counts(items):
+        d = {}
+        for item in items:
+            d[item] = d.get(item, 0) + 1
+        return d
+
+    def frac(num, den):
+        return num / den if den else 0.0
+
+    out = {}
+    for tag, pieces in (("line", text.split("\n")),
+                        ("para", re.split(r"\n{2,}", text))):
+        c = counts(p for p in (x.strip(" ") for x in pieces) if p)
+        n = sum(c.values())
+        out[f"dup_{tag}_frac"] = frac(n - len(c), n)
+        out[f"dup_{tag}_char_frac"] = frac(
+            sum(k * len(v) for v, k in c.items() if k > 1),
+            sum(k * len(v) for v, k in c.items()))
+    words = [w for w in _ASCII_WS.split(text.strip(" ")) if w]
+    for n in range(2, 11):
+        c = counts(" ".join(words[i:i + n])
+                   for i in range(len(words) - n + 1))
+        if n <= 4:
+            out[f"top_{n}gram_char_frac"] = frac(
+                max((k * len(g) for g, k in c.items()), default=0),
+                len(text))
+        else:
+            out[f"dup_{n}gram_char_frac"] = frac(
+                sum(k * len(g) for g, k in c.items() if k > 1), len(text))
+    return out
+
+
+def test_repetition_matches_reference(spark):
+    """Exact equality with the pure-Python reference above — including
+    the whitespace edge cases where JVM and Python semantics habitually
+    diverge (ASCII-only \\s, space-only trim, \\xa0 non-breaking space,
+    \\r line tails, NULL text) — and over the fixture corpus."""
+    from outliertree_spark.operators.gopher import (REP_FEATURE_COLS,
+                                                    gopher_repetition)
     rows = [
         (1, "w1 w2 w3 w4 w5 w1 w2 w3 w4 w5 u1 u2 u3"),
         (2, "\t a b \t"),
@@ -239,24 +285,29 @@ def test_repetition_impls_equivalent(spark):
         (5, "  spaced  \n  spaced  \npara\n\npara  \n\n  para"),
         (6, ""), (7, "   "), (8, None),
     ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    a = {r["doc_id"]: r.asDict()
-         for r in gopher_repetition(df, impl="arrow").collect()}
-    c = {r["doc_id"]: r.asDict()
-         for r in gopher_repetition(df, impl="catalyst").collect()}
-    assert a == c
+    edge = spark.createDataFrame(rows, "doc_id long, text string")
+    sf01 = os.path.join(os.path.dirname(SF_DIR), "sf0.01")
+    corpus = (spark.read.parquet(f"{sf01}/documents.parquet")
+              .select((F.col("doc_id") + 1000).alias("doc_id"), "text"))
+    df = edge.unionByName(corpus)
+    want = {r["doc_id"]: _repetition_reference(r["text"])
+            for r in df.collect()}
+    got = {r["doc_id"]: {c: r[c] for c in REP_FEATURE_COLS}
+           for r in gopher_repetition(df).collect()}
+    assert len(got) == len(want) > 500
+    for doc_id, feats in want.items():
+        assert got[doc_id] == feats, doc_id
 
 
 def test_repetition_trimmed_lines_detected_as_dups(spark):
     # '  spaced  ' lines differ in raw bytes but are equal after the
-    # space-only trim — both impls must count them as duplicates.
+    # space-only trim — they count as duplicates.
     from outliertree_spark.operators.gopher import gopher_repetition
     df = spark.createDataFrame(
         [(1, "  spaced  \nspaced\nother line here")],
         "doc_id long, text string")
-    for impl in ("arrow", "catalyst"):
-        out = gopher_repetition(df, impl=impl).collect()[0]
-        assert out["dup_line_frac"] == pytest.approx(1 / 3), impl
+    out = gopher_repetition(df).collect()[0]
+    assert out["dup_line_frac"] == pytest.approx(1 / 3)
 
 
 # ---------------------------------------------------------- bigram LM

@@ -92,7 +92,6 @@ def test_sql_scoring_on_stream(spark, tmp_path):
     """The flagging plan runs on a streaming DataFrame (the reason its
     determinism gate uses rand(), not monotonically_increasing_id()),
     with the same rows as the batch plan and no Python operator."""
-    from outliertree_spark.streaming.validate import run_stream_to_memory
     df = _mixed_df(spark)
     eng = SparkOutlierTree(ValidationConfig())
     eng.fit(df, id_cols=["id"])
@@ -101,7 +100,10 @@ def test_sql_scoring_on_stream(spark, tmp_path):
     stream = spark.readStream.schema(df.schema).parquet(src)
     s = eng.score(stream, id_cols=["id"])
     assert "MapInPandas" not in s._jdf.queryExecution().analyzed().toString()
-    run_stream_to_memory(s, "score_stream")
+    q = (s.writeStream.outputMode("append").format("memory")
+         .queryName("score_stream").trigger(availableNow=True).start())
+    q.processAllAvailable()
+    q.stop()
     got = spark.sql("SELECT * FROM score_stream").toPandas()
     want = eng.score(df, id_cols=["id"]).toPandas()
     assert len(want) > 0

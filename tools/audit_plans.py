@@ -270,8 +270,8 @@ def main() -> None:
         "Each snapshot reduces to (key, md5-of-compared-columns) inside "
         "its own scan stage — content bytes never enter the exchange — "
         "then ONE full-outer SortMergeJoin on the key classifies "
-        "added/removed/changed.  On bucketed tables the exchange "
-        "disappears (sources/bucketed.py).",
+        "added/removed/changed.  On tables bucketed on the key the "
+        "exchange disappears.",
         plan_of(snapshot_diff(docs.select("doc_id", "text", "lang"),
                               docs.select("doc_id", "text", "lang"),
                               "doc_id"))))
@@ -301,27 +301,13 @@ def main() -> None:
 
     from outliertree_spark.operators.gopher import gopher_repetition
     sections.append((
-        "Gopher repetition-rule set (Arrow default)",
+        "Gopher repetition-rule set (Arrow)",
         "All 13 repetition features (dup lines/paras, top/dup n-gram "
         "char fractions for n=2..10) in ONE Arrow-batched mapInPandas "
         "Counter sweep — row-local, no data-dependent exchange (the "
         "only Exchange is the narrow-input fan-out, a no-op at real "
-        "scale).  Chosen over the pure-Catalyst twin below by "
-        "measurement: Spark HOFs evaluate interpreted, so the "
-        "expression version runs ~10x slower (500k docs local[32]: "
-        "160s vs 16s); both emit bit-identical doubles "
-        "(equivalence-tested incl. whitespace edge cases).",
+        "scale).",
         plan_of(gopher_repetition(docs.select("doc_id", "text")))))
-
-    sections.append((
-        "Gopher repetition-rule set (Catalyst twin, zero Python)",
-        "The engine-portable reference path: per n-gram order one "
-        "array_sort plus ONE O(P) sequential run fold (aggregate with "
-        "finish lambda) in staged row-local projections — no UDF "
-        "anywhere, kept as the equivalence oracle for the Arrow "
-        "default and for deployments that must stay JVM-only.",
-        plan_of(gopher_repetition(docs.select("doc_id", "text"),
-                                  impl="catalyst"))))
 
     from outliertree_spark.operators.sampling import resample_to_mix
     sections.append((
