@@ -24,7 +24,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from .colref import qcol
+from .colref import qcol, ts_seconds
 from .config import ValidationConfig
 from .model import attach_conditions, flaggable_values, model_from_json, model_to_json
 from .operators.fit import fit_arrays
@@ -316,9 +316,8 @@ class SparkOutlierTree:
                 continue
             if cm["kind"] == "numeric":
                 lo, hi = cm["min_outlier_any"], cm["max_outlier_any"]
-                col = qcol(name)
-                if cm.get("is_ts"):
-                    col = F.unix_timestamp(qcol(name)).cast("double") - F.lit(cm["ts_min"])
+                col = (ts_seconds(name, cm["ts_min"]) if cm.get("is_ts")
+                       else qcol(name))
                 t = None
                 if math.isfinite(lo):
                     t = col <= F.lit(lo)

@@ -36,7 +36,7 @@ import math
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from ..colref import qcol
+from ..colref import qcol, ts_seconds
 
 _WORST = (1, 9999, 0, 2.0)  # sentinel losing to every real candidate
 _CHUNK = 24  # clusters per partial-winner chunk (janino method budget)
@@ -52,8 +52,7 @@ def _num_ref_exprs(col: str, schema: dict):
     info = (schema or {}).get(col) or {}
     c = qcol(col)
     if info.get("kind") == "timestamp":
-        v = F.unix_timestamp(c).cast("double") - F.lit(info["ts_min"])
-        return v, lambda ref: c.isNull()
+        return ts_seconds(col, info["ts_min"]), lambda ref: c.isNull()
     return c.cast("double"), lambda ref: c.isNull() | F.isnan(ref)
 
 
@@ -172,7 +171,7 @@ def _cluster_own_condition(cl: dict, levels_by_col: dict, schema: dict,
 def _target_value_expr(cm: dict):
     name = cm["name"]
     if cm.get("is_ts"):
-        return F.unix_timestamp(qcol(name)).cast("double") - F.lit(cm["ts_min"])
+        return ts_seconds(name, cm["ts_min"])
     return qcol(name).cast("double")
 
 
@@ -250,9 +249,9 @@ def compile_score_exprs(model: dict, df_cols: set[str],
     winners: dict[str, str] = {}
 
     # shared encodings for numeric/timestamp PREDICTOR references: a
-    # timestamp predictor otherwise re-parses its string per condition
-    # (measured dominant in the 20M-row score plan: unix_timestamp
-    # inlined into every cluster's path conjunction)
+    # timestamp predictor otherwise re-encodes its value per condition
+    # (measured dominant in the 20M-row score plan: the timestamp
+    # encoding inlined into every cluster's path conjunction)
     pred_ref: dict[str, tuple] = {}
 
     def numref(col):

@@ -4,10 +4,13 @@ from __future__ import annotations
 
 import logging
 import os
+import re
 import shutil
 import tempfile
 
 from pyspark.sql import SparkSession
+
+from . import deploy
 
 log = logging.getLogger(__name__)
 
@@ -91,11 +94,52 @@ def _warm_engine_inner(spark: SparkSession) -> None:
         shutil.rmtree(tmp, ignore_errors=True)
 
 
+def _launcher_conf():
+    """The conf spark-submit started this driver's JVM with, or None for a
+    plain interpreter, whose JVM ``getOrCreate`` starts from the builder's
+    conf."""
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+        return None
+    from pyspark import SparkConf, SparkContext
+    SparkContext._ensure_initialized()
+    return SparkConf()
+
+
+def _daemon_conf(master: str, conf: dict) -> dict:
+    """Settings that start the Python workers from ``workerd``: only for a
+    local master, whose workers run on this host where the daemon's
+    directory is, and only when ``conf`` names no daemon of its own."""
+    if (not re.fullmatch(r"local(\[.*\])?", master)
+            or conf.get("spark.python.daemon.module")):
+        return {}
+    path = [deploy.worker_daemon()]
+    if conf.get("spark.executorEnv.PYTHONPATH"):
+        path.append(conf["spark.executorEnv.PYTHONPATH"])
+    return {"spark.python.daemon.module": deploy.DAEMON_MODULE,
+            "spark.executorEnv.PYTHONPATH": os.pathsep.join(path)}
+
+
 def get_spark(app: str = "outliertree_spark", master: str | None = None,
               shuffle_partitions: int | None = None,
               extra_conf: dict | None = None) -> SparkSession:
+    """A SparkSession with the settings this engine assumes, warmed once
+    per process (``_warm_engine``).
+
+    The master is ``master``, else the one spark-submit was given, else
+    ``local[$SPARK_GRAFT_CPUS]``.  For a local master the Python workers
+    start from ``workerd`` (``spark.python.daemon.module``, its directory
+    on ``spark.executorEnv.PYTHONPATH``): it imports the interpreter's
+    installed pyspark, with its cached bytecode, when that is the release
+    of ``$SPARK_HOME/python/lib/pyspark.zip``, instead of compiling the
+    zip in every SparkContext's daemon.  A daemon module set in
+    ``extra_conf`` or by spark-submit is left alone.  To see which pyspark
+    a worker runs, return ``pyspark.__file__`` from a ``mapInPandas``
+    function: a path inside ``pyspark.zip`` is the zip."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    master = master or f"local[{cpus}]"
+    launched = _launcher_conf()
+    conf = dict(launched.getAll()) if launched is not None else {}
+    conf.update(extra_conf or {})
+    master = master or conf.get("spark.master") or f"local[{cpus}]"
     if shuffle_partitions is None:
         shuffle_partitions = int(cpus) if cpus.isdigit() else 32
     b = (
@@ -117,7 +161,7 @@ def get_spark(app: str = "outliertree_spark", master: str | None = None,
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**(extra_conf or {}), **_daemon_conf(master, conf)}.items():
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

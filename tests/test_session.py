@@ -1,6 +1,8 @@
 """Session set-up: the warm-up runs once per process and leaves no files
-behind, and the package zip shipped to executors holds this process's
-sources."""
+behind, the package zip shipped to executors holds this process's
+sources, the master is the caller's or the launcher's, and a local
+session's Python workers import the installed pyspark, not Spark's
+``pyspark.zip``."""
 
 import json
 import os
@@ -10,8 +12,10 @@ import tempfile
 import zipfile
 from types import SimpleNamespace
 
+import pytest
+
 import outliertree_spark
-from outliertree_spark import deploy, session
+from outliertree_spark import deploy, session, workerd
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -62,6 +66,7 @@ def test_package_zip_holds_current_sources(tmp_path, monkeypatch):
     """A zip left at a shared temp path by an earlier process (PIDs
     recycle) is never shipped in place of this process's sources."""
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(deploy, "_DIR", None)
     monkeypatch.setattr(deploy, "_ZIP", None, raising=False)
     stale = tmp_path / f"outliertree_spark_{os.getpid()}.zip"
     with zipfile.ZipFile(stale, "w") as zf:
@@ -85,3 +90,153 @@ def test_package_zip_holds_current_sources(tmp_path, monkeypatch):
                                           os.path.relpath(full, pkg))] = f.read()
     with zipfile.ZipFile(shipped[0]) as zf:
         assert {n: zf.read(n) for n in zf.namelist()} == want
+
+
+def _pyspark_tree(root, version):
+    (root / "pyspark").mkdir(parents=True)
+    (root / "pyspark" / "__init__.py").write_text("")
+    (root / "pyspark" / "version.py").write_text(f'__version__ = "{version}"\n')
+    return str(root)
+
+
+def _spark_zip(path, version):
+    path.parent.mkdir(parents=True)
+    with zipfile.ZipFile(path, "w") as zf:
+        zf.writestr("pyspark/__init__.py", "")
+        zf.writestr("pyspark/version.py", f'__version__ = "{version}"\n')
+    return str(path)
+
+
+def test_workerd_drops_zip_of_installed_release(tmp_path):
+    spark_zip = _spark_zip(tmp_path / "lib" / "pyspark.zip", "4.1.2")
+    py4j = str(tmp_path / "lib" / "py4j-src.zip")
+    site = _pyspark_tree(tmp_path / "site", "4.1.2")
+    path = ["", spark_zip, py4j, "/x", site]
+    assert workerd.worker_path(path) == ["", py4j, "/x", site]
+
+
+@pytest.mark.parametrize("installed", ["4.1.1", None])
+def test_workerd_keeps_path_without_same_release(tmp_path, installed):
+    """Another installed release, or none: the path is left as it was."""
+    spark_zip = _spark_zip(tmp_path / "lib" / "pyspark.zip", "4.1.2")
+    site = str(tmp_path / "site")
+    if installed:
+        _pyspark_tree(tmp_path / "site", installed)
+    path = [spark_zip, site]
+    assert workerd.worker_path(path) == [spark_zip, site]
+
+
+def test_workerd_keeps_path_on_unreadable_zip(tmp_path):
+    spark_zip = tmp_path / "lib" / "pyspark.zip"
+    spark_zip.parent.mkdir()
+    spark_zip.write_text("not a zip")
+    site = _pyspark_tree(tmp_path / "site", "4.1.2")
+    path = [str(spark_zip), site]
+    assert workerd.worker_path(path) == path
+
+
+def test_daemon_conf_only_for_local_master():
+    assert session._daemon_conf("yarn", {}) == {}
+    assert session._daemon_conf("spark://host:7077", {}) == {}
+    assert session._daemon_conf("local-cluster[2,1,1024]", {}) == {}
+    mine = {"spark.python.daemon.module": "my_daemon"}
+    assert session._daemon_conf("local[2]", mine) == {}
+    for master in ("local", "local[*]", "local[4]"):
+        conf = session._daemon_conf(
+            master, {"spark.executorEnv.PYTHONPATH": "/extra"})
+        assert conf["spark.python.daemon.module"] == deploy.DAEMON_MODULE
+        first, rest = conf["spark.executorEnv.PYTHONPATH"].split(os.pathsep)
+        assert rest == "/extra"
+        with open(os.path.join(first, deploy.DAEMON_MODULE + ".py")) as f:
+            with open(workerd.__file__) as g:
+                assert f.read() == g.read()
+
+
+WORKER_ORIGIN = """
+import json, sys
+sys.path.insert(0, {root!r})
+import pandas as pd
+import pyspark
+from outliertree_spark.session import get_spark
+
+spark = get_spark(master="local[2]", shuffle_partitions=2)
+jvm = spark.sparkContext._jvm
+
+def commands():
+    return [p.info().commandLine().orElse("") for p in
+            jvm.java.lang.ProcessHandle.current().descendants().toArray()]
+
+def origin(it):
+    import pyspark
+    for _ in it:
+        pass
+    yield pd.DataFrame({{"f": [pyspark.__file__]}})
+
+before = commands()
+rows = spark.range(0, 8, numPartitions=2).mapInPandas(origin, "f string").collect()
+print(json.dumps({{"before": before, "after": commands(),
+                  "workers": sorted({{r.f for r in rows}}),
+                  "driver": pyspark.__file__}}))
+spark.stop()
+"""
+
+
+SPARK_HOME = os.environ.get("SPARK_HOME", "")
+SPARK_ZIP = os.path.join(SPARK_HOME, "python", "lib", "pyspark.zip")
+
+
+@pytest.mark.skipif(
+    workerd.worker_path([SPARK_ZIP, *sys.path]) == [SPARK_ZIP, *sys.path],
+    reason="no installed pyspark of $SPARK_HOME's release")
+def test_local_workers_import_installed_pyspark():
+    """Under a local master the Python workers run the installed pyspark
+    from a daemon named after the stub, and get_spark (warm-up included)
+    starts no Python worker."""
+    env = dict(os.environ, SPARK_DRIVER_MEM="1g")
+    for k in ("SPARK_GRAFT_NO_WARMUP", "PYSPARK_SUBMIT_ARGS"):
+        env.pop(k, None)
+    r = subprocess.run([sys.executable, "-c", WORKER_ORIGIN.format(root=ROOT)],
+                       capture_output=True, text=True, timeout=300, env=env)
+    assert r.returncode == 0, r.stderr[-2000:]
+    out = json.loads(r.stdout.strip().splitlines()[-1])
+    assert not [c for c in out["before"] if "python" in c or "pyspark" in c
+                or deploy.DAEMON_MODULE in c], out["before"]
+    assert any(f"-m {deploy.DAEMON_MODULE} " in c for c in out["after"]), out
+    assert ".zip" not in out["driver"]
+    assert out["workers"] == [out["driver"]]
+
+
+MASTER_PROBE = """
+import json, sys
+sys.path.insert(0, {root!r})
+from outliertree_spark.session import get_spark
+
+spark = get_spark()
+print(json.dumps({{"master": spark.sparkContext.master,
+                  "daemon": spark.conf.get("spark.python.daemon.module", None)}}))
+spark.stop()
+"""
+
+
+@pytest.mark.skipif(not SPARK_HOME, reason="spark-submit needs SPARK_HOME")
+def test_master_from_launcher(tmp_path):
+    """spark-submit's --master wins over SPARK_GRAFT_CPUS; a plain
+    interpreter still gets local[SPARK_GRAFT_CPUS]."""
+    probe = tmp_path / "probe.py"
+    probe.write_text(MASTER_PROBE.format(root=ROOT))
+    env = dict(os.environ, SPARK_DRIVER_MEM="1g", SPARK_GRAFT_CPUS="3",
+               SPARK_GRAFT_NO_WARMUP="1", PYSPARK_PYTHON=sys.executable,
+               PYSPARK_DRIVER_PYTHON=sys.executable)
+    env.pop("PYSPARK_SUBMIT_ARGS", None)
+    submit = os.path.join(SPARK_HOME, "bin", "spark-submit")
+    got = {}
+    for how, cmd in (("submit", [submit, "--master", "local[2]", str(probe)]),
+                     ("plain", [sys.executable, str(probe)])):
+        r = subprocess.run(cmd, capture_output=True, text=True, timeout=300,
+                           env=env, cwd=str(tmp_path))
+        assert r.returncode == 0, r.stderr[-2000:]
+        got[how] = json.loads(r.stdout.strip().splitlines()[-1])
+    assert got["submit"]["master"] == "local[2]"
+    assert got["plain"]["master"] == "local[3]"
+    for how in got:
+        assert got[how]["daemon"] == deploy.DAEMON_MODULE
