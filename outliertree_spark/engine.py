@@ -205,6 +205,32 @@ class _LazyRow:
         return arr[self.r] if arr is not None else default
 
 
+def violation_keys(id_cols: list[str] | None,
+                   partition_col: str) -> tuple[list[str], list[str]]:
+    """(predict's id columns, the violation rows' key columns).  Predict
+    labels each explanation by its first id column, so the caller's row
+    id goes first there, not the partition; the rows carry the partition
+    column first."""
+    id_cols = id_cols or []
+    return (list(dict.fromkeys(id_cols + [partition_col])),
+            list(dict.fromkeys([partition_col] + id_cols)))
+
+
+def partition_verdicts(df: DataFrame, viols: DataFrame, partition_col: str,
+                       rate: float) -> DataFrame:
+    """One row per value of ``partition_col`` with row count, violation
+    count, rate, and pass/fail: pure Catalyst aggregation."""
+    totals = df.groupBy(qcol(partition_col)).agg(
+        F.count(F.lit(1)).alias("n_rows"))
+    vcnt = viols.groupBy(qcol(partition_col)).agg(
+        F.count(F.lit(1)).alias("n_violations"))
+    return (totals.join(vcnt, partition_col, "left")
+            .withColumn("n_violations", F.coalesce("n_violations", F.lit(0)))
+            .withColumn("violation_rate",
+                        F.col("n_violations") / F.col("n_rows"))
+            .withColumn("passed", F.col("violation_rate") <= F.lit(rate)))
+
+
 class SparkOutlierTree:
     """Explainable outlier / constraint validation engine on Spark.
 
@@ -220,8 +246,7 @@ class SparkOutlierTree:
     # ------------------------------------------------------------------
     def fit(self, df: DataFrame, cols_ignore: list[str] | None = None,
             ordinal_cols: dict[str, list] | None = None,
-            id_cols: list[str] | None = None,
-            n_rows: int | None = None) -> "SparkOutlierTree":
+            id_cols: list[str] | None = None) -> "SparkOutlierTree":
         cfg = self.config
         ignore = set(cols_ignore or []) | set(id_cols or [])
         kinds = infer_kinds(df.dtypes, ordinal_cols, ignore)
@@ -247,8 +272,7 @@ class SparkOutlierTree:
         if len(probe) <= cfg.max_fit_rows:
             pdf = probe
         else:
-            if n_rows is None:
-                n_rows = sdf.count()  # zero-column scan: footer-driven
+            n_rows = sdf.count()  # zero-column scan: footer-driven
             frac = min(1.0, cfg.max_fit_rows / float(n_rows))
             pdf = sdf.sample(fraction=frac, seed=cfg.seed).toPandas()
         if len(pdf) < 20:  # reference _check_valid_data, __init__.py:450-475
@@ -374,6 +398,11 @@ class SparkOutlierTree:
         sdf = df.select(*[qcol(c) for c in needed])
         if prefilter:
             sdf = sdf.filter(self.prefilter_expr(df))
+        # mapInPandas passes its input columns by name without quoting,
+        # which reads a dotted name as a struct path: the worker gets
+        # them by position and restores the names
+        sdf = sdf.select(*[qcol(c).alias(f"_c{i}")
+                           for i, c in enumerate(needed)])
 
         spark = df.sparkSession
         from .deploy import ensure_package_on_executors
@@ -387,6 +416,7 @@ class SparkOutlierTree:
             for pdf in iterator:
                 if len(pdf) == 0:
                     continue
+                pdf.columns = needed
                 res = _violations_from_batch(m, pdf, id_cols)
                 if len(res):
                     yield res
@@ -420,27 +450,12 @@ class SparkOutlierTree:
 
         Verdicts: one row per value of ``partition_col`` with row count,
         violation count, rate, and pass/fail — pure Catalyst aggregation."""
-        rate = max_violation_rate if max_violation_rate is not None \
-            else self.config.pct_outliers
-        id_cols = id_cols or []
-        # explanations are labelled by the first id column: the caller's
-        # row id, not the partition; the select keeps the partition first
-        viols = self.predict(
-            df, id_cols=list(dict.fromkeys(id_cols + [partition_col])))
-        viols = viols.select(
-            *[qcol(c) for c in dict.fromkeys([partition_col] + id_cols)],
-            *[f.name for f in VIOLATION_FIELDS])
-        totals = df.groupBy(qcol(partition_col)).agg(
-            F.count(F.lit(1)).alias("n_rows"))
-        vcnt = viols.groupBy(qcol(partition_col)).agg(
-            F.count(F.lit(1)).alias("n_violations"))
-        verdicts = (
-            totals.join(vcnt, partition_col, "left")
-            .withColumn("n_violations", F.coalesce("n_violations", F.lit(0)))
-            .withColumn("violation_rate", F.col("n_violations") / F.col("n_rows"))
-            .withColumn("passed", F.col("violation_rate") <= F.lit(rate))
-        )
-        return viols, verdicts
+        row_ids, keys = violation_keys(id_cols, partition_col)
+        viols = self.predict(df, id_cols=row_ids).select(
+            *[qcol(c) for c in keys], *[f.name for f in VIOLATION_FIELDS])
+        rate = (max_violation_rate if max_violation_rate is not None
+                else self.config.pct_outliers)
+        return viols, partition_verdicts(df, viols, partition_col, rate)
 
     # ------------------------------------------------------------------
     def flaggable_values(self) -> dict:

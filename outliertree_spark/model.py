@@ -15,143 +15,111 @@ import math
 import numpy as np
 
 
-def _cond_from_cluster(cl: dict, levels_by_col: dict) -> dict | None:
+def levels_by_column(model: dict) -> dict:
+    """Level list of every categorical or ordinal column the model names:
+    the predictors' fit-time levels, then each target's own."""
+    levels = dict(model.get("predictor_levels") or {})
+    for cm in model["columns"]:
+        if cm.get("levels") is not None:
+            levels.setdefault(cm["name"], cm["levels"])
+    return levels
+
+
+# One branch condition is ``(col, kind, op, arg)``.  A numeric column
+# (timestamps included) has op ``isna``, ``le`` or ``gt`` against the
+# split point; a categorical or ordinal column has op ``isna``, ``eq``
+# or ``neq`` against a level code, or ``in`` over a tuple of codes.  An
+# unseen category takes no branch but ``isna``.  NumPy predict, the
+# Catalyst ``score()`` plan and the explanations each compile this one
+# form (src/predict.cpp:536-663 evaluates the same conditions).
+
+def _branch(col, kind, branch, point, lev, subset, levels):
+    if branch == "isna":
+        return (col, kind, "isna", None)
+    if kind == "numeric":
+        return (col, kind, branch, point)
+    if branch in ("eq", "neq"):
+        return (col, kind, branch, lev)
+    if branch == "le":  # ordinal: levels 0..lev
+        return (col, kind, "in", tuple(range(lev + 1)))
+    if branch == "gt":
+        return (col, kind, "in", tuple(range(lev + 1, len(levels[col]))))
+    want = 1 if branch == "in" else 0  # subset: in / notin
+    return (col, kind, "in",
+            tuple(i for i, s in enumerate(subset or ()) if s == want))
+
+
+def cluster_condition(cl: dict, levels: dict) -> tuple | None:
     """The cluster's own extra condition on top of its tree path."""
     if cl["split_type"] == "root" or cl["col"] is None:
         return None
-    col = cl["col"]
-    kind = cl["col_kind"]
-    st = cl["split_type"]
-    levels = levels_by_col.get(col)
-    if st == "isna":
-        return {"column": col, "comparison": "is NA", "value_comp": None, "kind": kind}
-    if kind == "numeric":
-        if st == "le":
-            return {"column": col, "comparison": "<=", "value_comp": cl["split_point"], "kind": kind}
-        if st == "gt":
-            return {"column": col, "comparison": ">", "value_comp": cl["split_point"], "kind": kind}
-    if kind in ("categorical", "ordinal"):
-        if st == "eq":
-            return {"column": col, "comparison": "=",
-                    "value_comp": levels[cl["split_lev"]], "kind": kind}
-        if st == "neq":
-            return {"column": col, "comparison": "!=",
-                    "value_comp": levels[cl["split_lev"]], "kind": kind}
-        if st == "le":  # ordinal: levels 0..split_lev
-            return {"column": col, "comparison": "in",
-                    "value_comp": [levels[i] for i in range(cl["split_lev"] + 1)],
-                    "kind": kind}
-        if st == "gt":
-            return {"column": col, "comparison": "in",
-                    "value_comp": [levels[i] for i in range(cl["split_lev"] + 1, len(levels))],
-                    "kind": kind}
-        if st == "in" and cl["split_subset"] is not None:
-            return {"column": col, "comparison": "in",
-                    "value_comp": [levels[i] for i, s in enumerate(cl["split_subset"]) if s == 1],
-                    "kind": kind}
-        if st == "notin" and cl["split_subset"] is not None:
-            return {"column": col, "comparison": "in",
-                    "value_comp": [levels[i] for i, s in enumerate(cl["split_subset"]) if s == 0],
-                    "kind": kind}
-    return None
+    return _branch(cl["col"], cl["col_kind"], cl["split_type"],
+                   cl["split_point"], cl["split_lev"], cl["split_subset"],
+                   levels)
 
 
-def _cond_from_tree_edge(parent: dict, child: dict, levels_by_col: dict) -> dict | None:
-    """Condition implied by entering ``child`` from ``parent``."""
+def edge_condition(parent: dict, child: dict, levels: dict) -> tuple | None:
+    """The condition for entering ``child`` from ``parent``: a follow_all
+    branch carries its own, a separate-mode subtree is one level of the
+    parent's column, and any other child is a side of the parent's
+    split.  None means every row enters (the root, and the binarize-mode
+    subtrees of a categorical target)."""
     br = child["parent_branch"]
-    col = parent.get("col")
-    kind = parent.get("col_kind")
     if br == "root":
         return None
     if br == "allbranch":
         own = child.get("own") or {}
-        ocol, okind = own.get("col"), own.get("kind")
-        if ocol is None:
+        if own.get("col") is None:
             return None
-        levels = levels_by_col.get(ocol)
-        b = own["branch"]
-        if b == "isna":
-            return {"column": ocol, "comparison": "is NA", "value_comp": None,
-                    "kind": okind}
-        if okind == "numeric":
-            return {"column": ocol, "comparison": "<=" if b == "le" else ">",
-                    "value_comp": own["point"], "kind": okind}
-        if b == "eq":
-            return {"column": ocol, "comparison": "=",
-                    "value_comp": levels[own["lev"]], "kind": okind}
-        if b == "le":
-            return {"column": ocol, "comparison": "in",
-                    "value_comp": [levels[i] for i in range(own["lev"] + 1)],
-                    "kind": okind}
-        if b == "gt":
-            return {"column": ocol, "comparison": "in",
-                    "value_comp": [levels[i] for i in range(own["lev"] + 1, len(levels))],
-                    "kind": okind}
-        ss = own.get("subset") or []
-        want = 1 if b == "in" else 0
-        return {"column": ocol, "comparison": "in",
-                "value_comp": [levels[i] for i, s in enumerate(ss) if s == want],
-                "kind": okind}
-    if br == "subtrees":
-        lev = child.get("branch_lev")
-        if lev is None or col is None:
-            return None  # binarize-mode root subtree: no condition
-        return {"column": col, "comparison": "=",
-                "value_comp": levels_by_col[col][lev], "kind": kind}
+        return _branch(own["col"], own["kind"], own["branch"],
+                       own.get("point"), own.get("lev"), own.get("subset"),
+                       levels)
+    col = parent.get("col")
     if col is None:
         return None
-    levels = levels_by_col.get(col)
-    if br == "isna":
-        return {"column": col, "comparison": "is NA", "value_comp": None, "kind": kind}
-    if kind == "numeric":
-        return {"column": col, "comparison": "<=" if br == "le" else ">",
-                "value_comp": parent["split_point"], "kind": kind}
-    if kind == "ordinal":
-        lev = parent["split_lev"]
-        if br == "le":
-            return {"column": col, "comparison": "in",
-                    "value_comp": [levels[i] for i in range(lev + 1)], "kind": kind}
-        return {"column": col, "comparison": "in",
-                "value_comp": [levels[i] for i in range(lev + 1, len(levels))], "kind": kind}
-    # categorical subset split
-    ss = parent.get("split_subset")
-    if ss is None:
-        return None
-    if br == "in":
-        return {"column": col, "comparison": "in",
-                "value_comp": [levels[i] for i, s in enumerate(ss) if s == 1], "kind": kind}
-    return {"column": col, "comparison": "in",
-            "value_comp": [levels[i] for i, s in enumerate(ss) if s == 0], "kind": kind}
+    if br == "subtrees":
+        lev = child.get("branch_lev")
+        return None if lev is None else (col, parent["col_kind"], "eq", lev)
+    return _branch(col, parent["col_kind"], br, parent["split_point"],
+                   parent["split_lev"], parent["split_subset"], levels)
+
+
+_SHOWN = {"isna": "is NA", "le": "<=", "gt": ">", "eq": "=", "neq": "!=",
+          "in": "in"}
+
+
+def _shown(cond: tuple, levels: dict) -> dict:
+    """One condition as the explanation's display dict."""
+    col, kind, op, arg = cond
+    if op == "isna":
+        value = None
+    elif kind == "numeric":
+        value = arg
+    elif op == "in":
+        value = [levels[col][i] for i in arg]
+    else:
+        value = levels[col][arg]
+    return {"column": col, "comparison": _SHOWN[op], "value_comp": value,
+            "kind": kind}
 
 
 def attach_conditions(model: dict) -> dict:
     """Precompute each cluster's condition chain (leaf -> root order)."""
-    levels_by_col = {}
-    for cm in model["columns"]:
-        if cm["levels"] is not None:
-            levels_by_col[cm["name"]] = cm["levels"]
-    # predictor columns may not be targets; engine passes extra levels via
-    # model["predictor_levels"]
-    levels_by_col.update(model.get("predictor_levels", {}))
-
+    levels = levels_by_column(model)
     for cm in model["columns"]:
         trees = cm["trees"]
         for cl in cm["clusters"]:
-            conds = []
-            own = _cond_from_cluster(cl, levels_by_col)
-            if own is not None:
-                conds.append(own)
+            conds = [cluster_condition(cl, levels)]
             t_ix = cl["tree"]
             while t_ix is not None and trees:
                 child = trees[t_ix]
                 if child["parent_branch"] == "root":
                     break
-                parent = trees[child["parent"]]
-                edge = _cond_from_tree_edge(parent, child, levels_by_col)
-                if edge is not None:
-                    conds.append(edge)
+                conds.append(edge_condition(trees[child["parent"]], child,
+                                            levels))
                 t_ix = child["parent"]
-            cl["conditions"] = conds
+            cl["conditions"] = [_shown(c, levels) for c in conds
+                                if c is not None]
     return model
 
 

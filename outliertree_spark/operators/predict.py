@@ -13,6 +13,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from ..model import cluster_condition, edge_condition, levels_by_column
+
 
 class BatchResult:
     """Per-row best outlier assignment for one batch."""
@@ -27,85 +29,32 @@ class BatchResult:
         self.size = np.zeros(n, dtype=np.int64)
 
 
-def _cond_mask(cl: dict, data: dict, levels_count: dict, rows: np.ndarray) -> np.ndarray:
-    """Which of ``rows`` satisfy the cluster's own extra condition
-    (src/predict.cpp:536-663)."""
-    st = cl["split_type"]
-    if st == "root":
-        return np.ones(rows.shape[0], dtype=bool)
-    col = cl["col"]
-    kind = cl["col_kind"]
-    xv = data[col][rows]
+def _condition_mask(cond: tuple, data: dict, levels: dict,
+                    rows: np.ndarray) -> np.ndarray:
+    """Which of ``rows`` satisfy one branch condition of the
+    ``model.py`` form (src/predict.cpp:536-663)."""
+    col, kind, op, arg = cond
+    xv = data.get(col)
+    if xv is None:
+        return np.zeros(rows.shape[0], dtype=bool)
+    xv = xv[rows]
     if kind == "numeric":
-        if st == "isna":
+        if op == "isna":
             return np.isnan(xv)
-        if st == "le":
-            return ~np.isnan(xv) & (xv <= cl["split_point"])
-        if st == "gt":
-            return ~np.isnan(xv) & (xv > cl["split_point"])
-        return np.zeros(rows.shape[0], dtype=bool)
-    ncat = levels_count.get(col, 0)
-    seen = xv < ncat  # unseen category -> cluster skipped for that row
-    if st == "isna":
-        return seen & (xv < 0)
-    if st == "le":
-        return seen & (xv >= 0) & (xv <= cl["split_lev"])
-    if st == "gt":
-        return seen & (xv >= 0) & (xv > cl["split_lev"])
-    if st == "eq":
-        return seen & (xv == cl["split_lev"])
-    if st == "neq":
-        return seen & (xv >= 0) & (xv != cl["split_lev"])
-    ss = np.asarray(cl["split_subset"] if cl["split_subset"] is not None else [],
-                    dtype=np.int64)
-    if ss.shape[0] == 0:
-        return np.zeros(rows.shape[0], dtype=bool)
+        return xv <= arg if op == "le" else xv > arg  # NaN compares False
+    if op == "isna":
+        return xv < 0
+    ncat = len(levels.get(col, ()))
+    seen = (xv >= 0) & (xv < ncat)  # an unseen category takes no branch
+    if op == "eq":
+        return seen & (xv == arg)
+    if op == "neq":
+        return seen & (xv != arg)
+    member = np.zeros(ncat, dtype=bool)
+    member[list(arg)] = True
     ok = np.zeros(rows.shape[0], dtype=bool)
-    nn = seen & (xv >= 0)
-    if st == "in":
-        ok[nn] = ss[xv[nn]] == 1
-    elif st == "notin":
-        ok[nn] = ss[xv[nn]] == 0
+    ok[seen] = member[xv[seen]]
     return ok
-
-
-def _own_cond_mask(own: dict, data: dict, levels_count: dict,
-                   rows: np.ndarray) -> np.ndarray:
-    """Evaluate a follow_all branch's own entry condition."""
-    col = own.get("col")
-    if col is None or col not in data:
-        return np.zeros(rows.shape[0], dtype=bool)
-    branch = own["branch"]
-    kind = own["kind"]
-    xv = data[col][rows]
-    if kind == "numeric":
-        if branch == "isna":
-            return np.isnan(xv)
-        if branch == "le":
-            return ~np.isnan(xv) & (xv <= own["point"])
-        if branch == "gt":
-            return ~np.isnan(xv) & (xv > own["point"])
-        return np.zeros(rows.shape[0], dtype=bool)
-    ncat = levels_count.get(col, 0)
-    seen = xv < ncat
-    if branch == "isna":
-        return seen & (xv < 0)
-    if branch == "eq":
-        return seen & (xv == own["lev"])
-    if branch == "le":
-        return seen & (xv >= 0) & (xv <= own["lev"])
-    if branch == "gt":
-        return seen & (xv >= 0) & (xv > own["lev"])
-    ss = np.asarray(own.get("subset") or [], dtype=np.int64)
-    if ss.shape[0] == 0:
-        return np.zeros(rows.shape[0], dtype=bool)
-    out = np.zeros(rows.shape[0], dtype=bool)
-    nn = seen & (xv >= 0)
-    if branch == "in":
-        out[nn] = ss[xv[nn]] == 1
-    elif branch == "notin":
-        out[nn] = ss[xv[nn]] == 0
-    return out
 
 
 def _take_better(res: BatchResult, rows: np.ndarray, score: np.ndarray,
@@ -150,10 +99,7 @@ def predict_batch(model: dict, data: dict[str, np.ndarray]) -> BatchResult:
     """Run every target column's tree over one encoded batch."""
     n = next(iter(data.values())).shape[0] if data else 0
     res = BatchResult(n)
-    levels_count = {k: len(v) for k, v in model.get("predictor_levels", {}).items()}
-    for cm in model["columns"]:
-        if cm["levels"] is not None:
-            levels_count.setdefault(cm["name"], len(cm["levels"]))
+    levels = levels_by_column(model)
 
     for col_ix, cm in enumerate(model["columns"]):
         if not cm["trees"] or not cm["clusters"]:
@@ -175,15 +121,25 @@ def predict_batch(model: dict, data: dict[str, np.ndarray]) -> BatchResult:
         rows0 = np.flatnonzero(cand)
         if rows0.shape[0] == 0:
             continue
-        _follow_tree_column(model, cm, col_ix, data, levels_count, rows0, res)
+        _follow_tree_column(cm, col_ix, data, levels, rows0, res)
     return res
 
 
-def _follow_tree_column(model, cm, col_ix, data, levels_count, rows0, res: BatchResult):
+def _children(node: dict) -> list[int]:
+    """A node's subtrees in visit order: the follow_all branches, else the
+    per-category subtrees, then left, right and NA."""
+    branches = [b for b in node["all_branches"] if b > 0]
+    if branches:
+        return branches
+    return [b for b in node["binary_branches"] if b > 0] + \
+        [b for b in (node["tree_left"], node["tree_right"], node["tree_NA"])
+         if b > 0]
+
+
+def _follow_tree_column(cm, col_ix, data, levels, rows0, res: BatchResult):
     trees = cm["trees"]
     clusters = cm["clusters"]
-    name = cm["name"]
-    vals = data[name]
+    vals = data[cm["name"]]
     is_num = cm["kind"] == "numeric"
     if is_num:
         tvals = _transform_target(vals, cm)
@@ -207,9 +163,10 @@ def _follow_tree_column(model, cm, col_ix, data, levels_count, rows0, res: Batch
                 bound = sc[vals[rows]] != 0
             if not bound.any():
                 continue
-            sub = rows[bound]
-            ok = _cond_mask(cl, data, levels_count, sub)
-            hit = sub[ok]
+            hit = rows[bound]
+            own = cluster_condition(cl, levels)
+            if own is not None:
+                hit = hit[_condition_mask(own, data, levels, hit)]
             if hit.shape[0] == 0:
                 continue
             if is_num:
@@ -232,67 +189,11 @@ def _follow_tree_column(model, cm, col_ix, data, levels_count, rows0, res: Batch
             if rows.shape[0] == 0:
                 continue
 
-        ab = node.get("all_branches") or []
-        has_children = (node["tree_NA"] or node["tree_left"] or node["tree_right"]
-                        or (node["binary_branches"] and max(node["binary_branches"]) > 0)
-                        or (ab and max(ab) > 0))
-        if not has_children:
-            continue
-
-        if ab and max(ab) > 0:
-            # follow_all: every branch whose own condition matches is
-            # explored; no standard routing (predict.cpp:193-376)
-            for br in reversed([b for b in ab if b > 0]):
-                own = trees[br].get("own") or {}
-                mask = _own_cond_mask(own, data, levels_count, rows)
-                sub = rows[mask]
-                if sub.shape[0]:
-                    stack.append((br, sub))
-            continue
-
-        col = node.get("col")
-        if col is None:
-            # binarize-mode root: follow every subtree with all rows
-            for br in reversed(node["binary_branches"]):
-                if br > 0:
-                    stack.append((br, rows))
-            continue
-
-        kind = node["col_kind"]
-        xv = data[col][rows]
-        if kind == "numeric":
-            isna = np.isnan(xv)
-            if node["tree_NA"] > 0:
-                stack.append((node["tree_NA"], rows[isna]))
-            if node["tree_right"] > 0:
-                stack.append((node["tree_right"], rows[~isna & (xv > node["split_point"])]))
-            if node["tree_left"] > 0:
-                stack.append((node["tree_left"], rows[~isna & (xv <= node["split_point"])]))
-        else:
-            ncat_x = levels_count.get(col, 0)
-            seen = xv < ncat_x
-            isna = xv < 0
-            if node["tree_NA"] > 0:
-                stack.append((node["tree_NA"], rows[seen & isna]))
-            nn = seen & ~isna
-            if kind == "categorical" and node["binary_branches"]:
-                bb = node["binary_branches"]
-                for cat_x in range(len(bb) - 1, -1, -1):
-                    if bb[cat_x] > 0:
-                        stack.append((bb[cat_x], rows[nn & (xv == cat_x)]))
-            elif kind == "ordinal" or node.get("split_lev") is not None:
-                lev = node["split_lev"]
-                if node["tree_right"] > 0:
-                    stack.append((node["tree_right"], rows[nn & (xv > lev)]))
-                if node["tree_left"] > 0:
-                    stack.append((node["tree_left"], rows[nn & (xv <= lev)]))
-            else:
-                ss = np.asarray(node["split_subset"], dtype=np.int64)
-                go_left = np.zeros(rows.shape[0], dtype=bool)
-                go_right = np.zeros(rows.shape[0], dtype=bool)
-                go_left[nn] = ss[xv[nn]] == 1
-                go_right[nn] = ss[xv[nn]] == 0
-                if node["tree_right"] > 0:
-                    stack.append((node["tree_right"], rows[go_right]))
-                if node["tree_left"] > 0:
-                    stack.append((node["tree_left"], rows[go_left]))
+        # every child whose entry condition holds; follow_all branches
+        # overlap and are all explored (predict.cpp:193-376)
+        for child in reversed(_children(node)):
+            cond = edge_condition(node, trees[child], levels)
+            sub = rows if cond is None else \
+                rows[_condition_mask(cond, data, levels, rows)]
+            if sub.shape[0]:
+                stack.append((child, sub))

@@ -37,6 +37,7 @@ import math
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ..colref import qcol, ts_seconds
+from ..model import cluster_condition, edge_condition, levels_by_column
 
 _WORST = (1, 9999, 0, 2.0)  # sentinel losing to every real candidate
 _CHUNK = 24  # clusters per partial-winner chunk (janino method budget)
@@ -56,116 +57,26 @@ def _num_ref_exprs(col: str, schema: dict):
     return c.cast("double"), lambda ref: c.isNull() | F.isnan(ref)
 
 
-def _num_ref(col: str, schema: dict, numref=None):
-    """(value reference, is-NA predicate) for a numeric condition
-    column.  ``numref`` (when given) maps the column to a shared
-    factored reference built by compile_score_exprs; without it the
-    encoding is inlined (legacy single-expression behavior)."""
-    if numref is not None:
-        return numref(col)
-    v, isna = _num_ref_exprs(col, schema)
-    return v, isna(v)
-
-
-def _edge_condition(parent: dict, child: dict, levels_by_col: dict,
-                    schema: dict, numref=None):
-    """Column predicate for entering ``child`` from ``parent`` (None = no
-    restriction)."""
-    br = child["parent_branch"]
-    if br == "root":
-        return None
-    if br == "allbranch":
-        own = child.get("own") or {}
-        return _own_condition(own, levels_by_col, schema, numref)
-    if br == "subtrees":
-        lev = child.get("branch_lev")
-        col = parent.get("col")
-        if lev is None or col is None:
-            return None
-        return qcol(col) == F.lit(levels_by_col[col][lev])
-    col = parent.get("col")
-    if col is None:
-        return None
-    kind = parent.get("col_kind")
-    c = qcol(col)
+def _condition(cond: tuple, levels: dict, numref):
+    """Column predicate for one branch condition of the ``model.py``
+    form; ``numref`` gives a numeric column's shared (value, is-NA)
+    references.  An unseen category is not NULL, so only ``neq`` needs
+    the explicit seen-level test."""
+    col, kind, op, arg = cond
     if kind == "numeric":
-        v, isna = _num_ref(col, schema, numref)
-        if br == "isna":
+        v, isna = numref(col)
+        if op == "isna":
             return isna
-        return ~isna & (v <= parent["split_point"] if br == "le"
-                        else v > parent["split_point"])
-    if br == "isna":
-        return c.isNull()
-    levels = levels_by_col[col]
-    if kind == "ordinal":
-        lev = parent["split_lev"]
-        members = levels[:lev + 1] if br == "le" else levels[lev + 1:]
-        return c.isin([_lv(v) for v in members])
-    ss = parent.get("split_subset") or []
-    want = 1 if br == "in" else 0
-    members = [levels[i] for i, s in enumerate(ss) if s == want]
-    return c.isin([_lv(v) for v in members])
-
-
-def _lv(v):
-    return bool(v) if isinstance(v, bool) else v
-
-
-def _own_condition(own: dict, levels_by_col: dict, schema: dict,
-                   numref=None):
-    col = own.get("col")
-    if col is None:
-        return None
+        return ~isna & (v <= arg if op == "le" else v > arg)
     c = qcol(col)
-    kind = own["kind"]
-    br = own["branch"]
-    if kind == "numeric":
-        v, isna = _num_ref(col, schema, numref)
-        if br == "isna":
-            return isna
-        return ~isna & (v <= own["point"] if br == "le" else v > own["point"])
-    if br == "isna":
+    if op == "isna":
         return c.isNull()
-    levels = levels_by_col[col]
-    if br == "eq":
-        return c == F.lit(_lv(levels[own["lev"]]))
-    if br in ("le", "gt"):
-        members = levels[:own["lev"] + 1] if br == "le" else levels[own["lev"] + 1:]
-        return c.isin([_lv(v) for v in members])
-    ss = own.get("subset") or []
-    want = 1 if br == "in" else 0
-    return c.isin([_lv(levels[i]) for i, s in enumerate(ss) if s == want])
-
-
-def _cluster_own_condition(cl: dict, levels_by_col: dict, schema: dict,
-                           numref=None):
-    st = cl["split_type"]
-    if st == "root":
-        return None
-    col = cl["col"]
-    kind = cl["col_kind"]
-    c = qcol(col)
-    if kind == "numeric":
-        v, isna = _num_ref(col, schema, numref)
-        if st == "isna":
-            return isna
-        return ~isna & (v <= cl["split_point"] if st == "le"
-                        else v > cl["split_point"])
-    if st == "isna":
-        return c.isNull()
-    levels = levels_by_col[col]
-    seen = c.isin([_lv(v) for v in levels])  # unseen category -> cluster skipped
-    if st == "eq":
-        return c == F.lit(_lv(levels[cl["split_lev"]]))
-    if st == "neq":
-        return seen & (c != F.lit(_lv(levels[cl["split_lev"]])))
-    if st in ("le", "gt"):
-        lev = cl["split_lev"]
-        members = levels[:lev + 1] if st == "le" else levels[lev + 1:]
-        return c.isin([_lv(v) for v in members])
-    ss = cl["split_subset"] or []
-    want = 1 if st == "in" else 0
-    return c.isin([_lv(levels[i]) for i, s in enumerate(ss) if s == want])
+    lv = levels[col]
+    if op == "eq":
+        return c == F.lit(lv[arg])
+    if op == "neq":
+        return c.isin(list(lv)) & (c != F.lit(lv[arg]))
+    return c.isin([lv[i] for i in arg])
 
 
 def _target_value_expr(cm: dict):
@@ -202,7 +113,7 @@ def _score_expr(cm: dict, cl: dict, val: Column):
     expr = F.lit(0.0)
     for i, s in enumerate(sc):
         if s != 0.0 and i < len(levels):
-            expr = F.when(qcol(cm["name"]) == F.lit(_lv(levels[i])),
+            expr = F.when(qcol(cm["name"]) == F.lit(levels[i]),
                           F.lit(float(s))).otherwise(expr)
     return expr
 
@@ -234,10 +145,7 @@ def compile_score_exprs(model: dict, df_cols: set[str],
     so each projection stays small enough for whole-stage codegen.
     Expression content is unchanged, only factored; equivalence with the
     Arrow ``predict_batch`` path is pinned by tests/test_sql_predict.py."""
-    levels_by_col = dict(model.get("predictor_levels") or {})
-    for cm in model["columns"]:
-        if cm.get("levels") is not None:
-            levels_by_col.setdefault(cm["name"], cm["levels"])
+    levels = levels_by_column(model)
     while any(c.startswith(prefix) for c in df_cols):
         prefix += "x"
 
@@ -287,12 +195,12 @@ def compile_score_exprs(model: dict, df_cols: set[str],
             child = trees[ix]
             parent_ix = child["parent"]
             depth_of[ix] = depth_of[parent_ix] + 1
-            edge = _edge_condition(trees[parent_ix], child, levels_by_col,
-                                   schema, numref)
+            edge = edge_condition(trees[parent_ix], child, levels)
             pname = path_col[parent_ix]
             if edge is None:
                 path_col[ix] = pname
                 continue
+            edge = _condition(edge, levels, numref)
             cond = edge if pname is None else (F.col(pname) & edge)
             d = depth_of[ix] - 1
             while len(cond_layers) <= d:
@@ -316,14 +224,14 @@ def compile_score_exprs(model: dict, df_cols: set[str],
                            if s != 0 and i < len(cm["levels"])]
                 if not flagged:
                     continue
-                bound = val.isin([_lv(v) for v in flagged])
+                bound = val.isin(flagged)
             pname = path_col[cl["tree"]]
-            own = _cluster_own_condition(cl, levels_by_col, schema, numref)
+            own = cluster_condition(cl, levels)
             matched = candidate & bound
             if pname is not None:
                 matched = matched & F.col(pname)
             if own is not None:
-                matched = matched & own
+                matched = matched & _condition(own, levels, numref)
             cand = F.struct(
                 F.lit(_pack_rank(1 if cl["has_NA_branch"] else 0,
                                  int(cl["depth"]),

@@ -25,7 +25,8 @@ from typing import Callable
 from pyspark.sql import DataFrame, functions as F
 
 from .config import ValidationConfig
-from .engine import SparkOutlierTree
+from .colref import qcol
+from .engine import SparkOutlierTree, partition_verdicts, violation_keys
 from .operators import checks as C
 
 
@@ -49,9 +50,9 @@ class ValidationSuite:
 
         def fn(df: DataFrame) -> DataFrame:
             dups = C.uniqueness_violations(df, key_col)
-            return (df.join(F.broadcast(dups.select(key_col)), key_col,
+            return (df.join(F.broadcast(dups.select(qcol(key_col))), key_col,
                             "left_semi")
-                    .withColumn("_check_value", F.col(key_col).cast("string")))
+                    .withColumn("_check_value", qcol(key_col).cast("string")))
 
         self._checks.append(_Check(nm, "uniqueness", fn))
         return self
@@ -65,7 +66,7 @@ class ValidationSuite:
             orphans = C.referential_orphans(df, parent, child_key, parent_key,
                                             broadcast_parent=broadcast_parent)
             return orphans.withColumn("_check_value",
-                                      F.col(child_key).cast("string"))
+                                      qcol(child_key).cast("string"))
 
         self._checks.append(_Check(nm, "referential", fn))
         return self
@@ -76,7 +77,7 @@ class ValidationSuite:
 
         def fn(df: DataFrame) -> DataFrame:
             v = C.timestamp_range_violations(df, ts_col, lo, hi)
-            return v.withColumn("_check_value", F.col(ts_col).cast("string"))
+            return v.withColumn("_check_value", qcol(ts_col).cast("string"))
 
         self._checks.append(_Check(nm, "timestamp_range", fn))
         return self
@@ -87,7 +88,7 @@ class ValidationSuite:
 
         def fn(df: DataFrame) -> DataFrame:
             v = C.group_bound_violations(df, group_cols, value_col, z=z)
-            return v.withColumn("_check_value", F.col(value_col).cast("string"))
+            return v.withColumn("_check_value", qcol(value_col).cast("string"))
 
         self._checks.append(_Check(nm, "group_bounds", fn))
         return self
@@ -101,8 +102,8 @@ class ValidationSuite:
         nm = name or f"extract_{text_col}"
 
         def fn(df: DataFrame) -> DataFrame:
-            ex = html_to_text(F.col(html_col))
-            return (df.filter(~ex.eqNullSafe(F.col(text_col)))
+            ex = html_to_text(qcol(html_col))
+            return (df.filter(~ex.eqNullSafe(qcol(text_col)))
                       .withColumn("_check_value",
                                   F.length(ex).cast("string")))
 
@@ -152,7 +153,7 @@ class ValidationSuite:
                 rfailed = F.concat_ws(",", *[
                     F.when(~F.col(c), F.lit(c)) for c in rrules])
                 rbad = (r.filter(~F.col("repetition_keep"))
-                         .select(F.col(id_col),
+                         .select(qcol(id_col),
                                  F.concat(F.lit("repetition:"), rfailed)
                                   .alias("_check_value")))
                 bad = bad.unionByName(df.join(rbad, id_col, "inner"))
@@ -216,16 +217,14 @@ class ValidationSuite:
     def run(self, df: DataFrame, partition_col: str,
             id_cols: list[str] | None = None,
             max_violation_rate: float | None = None) -> tuple[DataFrame, DataFrame]:
-        # explanations are labelled by predict's first id column: the
-        # caller's row id, not the partition
-        row_ids = list(dict.fromkeys((id_cols or []) + [partition_col]))
-        id_cols = list(dict.fromkeys([partition_col] + (id_cols or [])))
+        row_ids, keys = violation_keys(id_cols, partition_col)
+        key_cols = [qcol(c) for c in keys]
         rate = (max_violation_rate if max_violation_rate is not None
                 else self.engine.config.pct_outliers)
 
         # derived (tree) violations
         derived = (self.engine.predict(df, id_cols=row_ids)
-                   .select(*id_cols, "suspicious_column",
+                   .select(*key_cols, "suspicious_column",
                            F.col("suspicious_value").alias("check_value"),
                            "outlier_score", "explanation")
                    .withColumn("check", F.lit("derived")))
@@ -233,7 +232,7 @@ class ValidationSuite:
         for ch in self._checks:
             v = ch.fn(df)
             parts.append(v.select(
-                *id_cols,
+                *key_cols,
                 F.lit(ch.kind).alias("suspicious_column"),
                 F.col("_check_value").alias("check_value"),
                 F.lit(None).cast("double").alias("outlier_score"),
@@ -242,17 +241,7 @@ class ValidationSuite:
         viols = parts[0]
         for p in parts[1:]:
             viols = viols.unionByName(p)
-
-        totals = df.groupBy(partition_col).agg(F.count(F.lit(1)).alias("n_rows"))
-        vcnt = viols.groupBy(partition_col).agg(
-            F.count(F.lit(1)).alias("n_violations"))
-        verdicts = (totals.join(vcnt, partition_col, "left")
-                    .withColumn("n_violations",
-                                F.coalesce("n_violations", F.lit(0)))
-                    .withColumn("violation_rate",
-                                F.col("n_violations") / F.col("n_rows"))
-                    .withColumn("passed",
-                                F.col("violation_rate") <= F.lit(rate)))
+        verdicts = partition_verdicts(df, viols, partition_col, rate)
 
         # drift checks gate whole partitions: one grouped-histogram pass per
         # check (no per-partition jobs -- scales to any partition count)
@@ -276,14 +265,14 @@ def _per_partition_psi(df: DataFrame, baseline: DataFrame, partition_col: str,
     computed from two grouped histograms and one broadcast join."""
     from pyspark.sql import Window
     if width is not None:
-        bucket = (F.floor(F.col(col) / float(width)) * float(width)) \
+        bucket = (F.floor(qcol(col) / float(width)) * float(width)) \
             .cast("double").alias("_psi_bucket")
     else:
-        bucket = F.col(col).alias("_psi_bucket")
-    obs = (df.select(F.col(partition_col), bucket)
-             .groupBy(partition_col, "_psi_bucket")
+        bucket = qcol(col).alias("_psi_bucket")
+    obs = (df.select(qcol(partition_col), bucket)
+             .groupBy(qcol(partition_col), "_psi_bucket")
              .agg(F.count(F.lit(1)).alias("n")))
-    w = Window.partitionBy(partition_col)
+    w = Window.partitionBy(qcol(partition_col))
     obs = obs.withColumn("p", F.col("n") / F.sum("n").over(w) + F.lit(eps))
     base = (baseline.select(bucket).groupBy("_psi_bucket")
             .agg(F.count(F.lit(1)).alias("bn")))
@@ -293,7 +282,7 @@ def _per_partition_psi(df: DataFrame, baseline: DataFrame, partition_col: str,
     # contribute (eps - q) * ln(eps/q): add them via the baseline side
     j = obs.join(F.broadcast(base.select("_psi_bucket", "q")), "_psi_bucket", "left")
     j = j.withColumn("q", F.coalesce("q", F.lit(eps)))
-    seen = (j.groupBy(partition_col)
+    seen = (j.groupBy(qcol(partition_col))
              .agg(F.sum((F.col("p") - F.col("q"))
                         * F.log(F.col("p") / F.col("q"))).alias("psi_seen"),
                   F.collect_set("_psi_bucket").alias("_seen")))
@@ -306,15 +295,15 @@ def _per_partition_psi(df: DataFrame, baseline: DataFrame, partition_col: str,
     from .localrel import local_df
     miss_df = local_df(spark, miss_lookup, ["_psi_bucket", "miss_term"])
 
-    exploded = (seen.select(partition_col, "psi_seen",
+    exploded = (seen.select(qcol(partition_col), "psi_seen",
                             F.explode_outer("_seen").alias("_psi_bucket")))
     # total missing-bucket contribution = sum over baseline buckets not seen
     total_miss = float(sum(t for _, t in miss_lookup))
     seen_miss = (exploded.join(F.broadcast(miss_df), "_psi_bucket", "left")
-                 .groupBy(partition_col, "psi_seen")
+                 .groupBy(qcol(partition_col), "psi_seen")
                  .agg(F.sum(F.coalesce("miss_term", F.lit(0.0)))
                       .alias("_seen_miss")))
     return seen_miss.select(
-        F.col(partition_col),
+        qcol(partition_col),
         (F.col("psi_seen") + F.lit(total_miss) - F.col("_seen_miss"))
         .alias("psi"))

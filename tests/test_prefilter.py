@@ -14,6 +14,7 @@ from outliertree_spark.deploy import ensure_package_on_executors
 
 WINNER = ["id", "suspicious_column", "tree_depth", "uses_NA_branch"]
 BASE = pd.Timestamp("2024-01-01")
+SIZES = ["S", "M", "L", "XL"]
 
 
 def _sub_second(rng, n, days=20):
@@ -104,7 +105,9 @@ def _mixed_table(seed, conditional, n=2500):
     if conditional:
         y += np.array([0.0, 50.0, 100.0])[grp]
     y[np.flatnonzero(grp == 1)[:2]] = [400.0, -250.0]
-    x = rng.normal(0, 1, n)
+    # an ordinal that ``x`` depends on and that follows ``lang``
+    size = np.where(rng.rand(n) < 0.6, grp, rng.randint(0, 4, n))
+    x = rng.normal(0, 1, n) + 3.0 * size
     x[rng.rand(n) < 0.1] = np.nan
     ts = pd.Series(_sub_second(rng, n))
     ts[rng.rand(n) < 0.03] = pd.NaT
@@ -114,8 +117,10 @@ def _mixed_table(seed, conditional, n=2500):
     lang = pd.Series(lang, dtype=object)
     lang[rng.rand(n) < 0.03] = None
     seen = pd.Series(_sub_second(rng, n))
+    size = pd.Series(np.array(SIZES, dtype=object)[size])
+    size[rng.rand(n) < 0.03] = None
     return pd.DataFrame({"id": np.arange(n), "y": y, "x": x,
-                         "lang": lang, "ts": ts, "seen": seen})
+                         "lang": lang, "ts": ts, "seen": seen, "size": size})
 
 
 def _edge_rows(eng, pdf, rng, per_col=15):
@@ -136,6 +141,7 @@ def _edge_rows(eng, pdf, rng, per_col=15):
                 pd.to_datetime(cm["ts_min"] + hi, unit="s").floor("us")
                 if cm.get("is_ts") else hi)
     rows.loc[len(rows) - 3:, "lang"] = ["zz", "yy", "zz"]
+    rows.loc[len(rows) - 3:, "size"] = ["XXL", "XXL", "XS"]
     return pd.concat([pdf, rows], ignore_index=True)
 
 
@@ -143,15 +149,21 @@ def _edge_rows(eng, pdf, rng, per_col=15):
     ValidationConfig(),
     ValidationConfig(categ_outliers="majority"),
     ValidationConfig(follow_all=True),
-], ids=["tail", "majority", "follow_all"])
+    ValidationConfig(categ_split="separate", gain_as_pct=False),
+    ValidationConfig(categ_split="bruteforce", gain_as_pct=False),
+], ids=["tail", "majority", "follow_all", "separate", "bruteforce"])
 @pytest.mark.parametrize("seed, conditional", [(21, True), (22, False)],
                          ids=["conditional", "flat"])
 def test_prefilter_is_exact(spark, cfg, seed, conditional):
     pdf = _mixed_table(seed, conditional)
     schema = ("id long, y double, x double, lang string, ts timestamp, "
-              "seen timestamp")
+              "seen timestamp, size string")
     eng = SparkOutlierTree(cfg)
-    eng.fit(spark.createDataFrame(pdf, schema), id_cols=["id"])
+    # follow_all over one more predictor doubles its trees (to ~450
+    # nodes and ~2,600 clusters), past what score() plans in minutes
+    eng.fit(spark.createDataFrame(pdf, schema), id_cols=["id"],
+            ordinal_cols={"size": SIZES},
+            cols_ignore=["size"] if cfg.follow_all else None)
     df = spark.createDataFrame(
         _edge_rows(eng, pdf, np.random.RandomState(seed)), schema)
 
