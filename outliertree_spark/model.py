@@ -10,7 +10,6 @@ root) and ``flaggable_values`` (reference __init__.py:750-780).
 from __future__ import annotations
 
 import json
-import math
 
 import numpy as np
 
@@ -149,15 +148,7 @@ class _NpEncoder(json.JSONEncoder):
 
 def model_to_json(model: dict) -> str:
     clean = {k: v for k, v in model.items() if not k.startswith("_")}
-
-    def enc(o):
-        if isinstance(o, float):
-            if math.isinf(o):
-                return "Infinity" if o > 0 else "-Infinity"
-            if math.isnan(o):
-                return "NaN"
-        return o
-
+    # json.dumps writes inf and nan as Infinity / NaN, which json.loads reads
     return json.dumps(clean, cls=_NpEncoder)
 
 

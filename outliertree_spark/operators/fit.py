@@ -58,8 +58,6 @@ from .split import (
     split_ordx_categy,
 )
 
-NEG_INF = -math.inf
-
 
 @dataclass
 class FitColumn:
@@ -101,6 +99,66 @@ def _new_cluster(column_type, col, col_kind, split_type, split_point=None,
         "subset_common": None, "score_categ": None,
         "perc_in_subset": 1.0, "perc_next_most_comm": 0.0, "categ_maj": -1,
     }
+
+
+# the (left, right) branches of a split, by predictor kind
+_SIDES = {"numeric": ("le", "gt"), "ordinal": ("le", "gt"),
+          "categorical": ("in", "notin")}
+_NO_ARGS = (None, None, None)
+
+
+def _split_args(kind: str, res: SplitResult) -> tuple:
+    """A split's (point, subset, lev): the one its predictor kind fills."""
+    if kind == "numeric":
+        return res.split_point, None, None
+    if kind == "categorical":
+        return None, res.split_subset, None
+    return None, None, res.split_lev
+
+
+def _push_col(pred: FitColumn, kind: str, res: SplitResult) -> str | None:
+    """The predictor a split exhausts below its branches: a categorical or
+    ordinal one once each side keeps one level, or a separate-mode split
+    (one branch per level, no subset)."""
+    if kind == "numeric":
+        return None
+    if (len(pred.levels) == 2 or res.is_binary_split
+            or (kind == "categorical" and res.split_subset is None)):
+        return pred.name
+    return None
+
+
+def _info(n: int, counts) -> float:
+    """n ln n - sum c ln c over the counts above 1."""
+    return float(n * math.log(n) - sum(c * math.log(c) for c in counts if c > 1))
+
+
+def _partition(ix, pred: FitColumn, kind: str, res: SplitResult):
+    """(NA, left, right) rows of ``ix`` under a split of ``pred``.  A
+    separate-mode split (categorical, no subset) has no sides: both are
+    None."""
+    xv = pred.values[ix]
+    if kind == "numeric":
+        na = np.isnan(xv)
+        left = xv <= res.split_point
+    else:
+        na = xv < 0
+        if kind == "ordinal":
+            left = ~na & (xv <= res.split_lev)
+        elif res.split_subset is None:
+            return ix[na], None, None
+        else:
+            left = np.zeros_like(na)
+            left[~na] = np.asarray(res.split_subset)[xv[~na]] == 1
+    return ix[na], ix[left], ix[~na & ~left]
+
+
+def _branch_rows(ix, pred: FitColumn, kind: str, res: SplitResult):
+    """(NA, left, right) rows of a candidate split: a numeric predictor's
+    as the split kernel found them, the others by ``_partition``."""
+    if kind == "numeric":
+        return res.na_ix, res.left_ix, res.right_ix
+    return _partition(ix, pred, kind, res)
 
 
 class _FitContext:
@@ -164,8 +222,10 @@ class _ColumnFit:
     def __init__(self, ctx: _FitContext, target: FitColumn,
                  stale_has_outliers: bool = False):
         self.ctx = ctx
-        self.cfg = ctx.cfg
+        self.cfg = cfg = ctx.cfg
         self.target = target
+        self.min_size = (cfg.min_size_numeric if target.kind == "numeric"
+                         else cfg.min_size_categ)
         # Mirrors the reference's Workspace.has_outliers, which at
         # process_numeric_col:559-568 still holds the LAST branch-cluster
         # result of the previously fitted column (it is only assigned per
@@ -197,49 +257,162 @@ class _ColumnFit:
         self.y_bin = None      # binarized target (binarize mode)
         self.col_is_bin = False
         self.ncat = 0
-        self.is_ord = False
         self.already_split_main = False
         self.base_info = 0.0
         self.base_info_orig = 0.0
 
     # ------------------------------------------------------------------
     def predictors(self):
-        """(column, kind) candidates in reference order."""
-        for c in self.ctx.numeric:
-            yield c, "numeric"
-        for c in self.ctx.categ:
-            yield c, "categorical"
-        for c in self.ctx.ordinal:
-            yield c, "ordinal"
+        """(column, kind) split candidates in reference order: every column
+        but the target, the skipped ones and those exhausted on this path."""
+        for c in self.ctx.columns:
+            if (c.name != self.target.name and not self.ctx.skip_col[c.name]
+                    and c.name not in self.exhausted):
+                yield c, c.kind
 
-    def _follow_all_subtree(self, rows, tree_from: int, depth: int,
-                            is_na_branch: bool, own: dict,
-                            push_col: str | None, rec_fn) -> None:
-        """follow_all mode: recurse into this qualifying branch as its own
-        subtree (reference all_branches, fit_model.cpp:644-654 etc.)."""
+    def _define_cluster(self, rows, pred, kind, branch, args, is_na,
+                        tree_from, depth) -> bool:
+        """The 1-D cluster of one split branch, numeric or categorical by
+        the target; returns whether it flagged rows."""
         cfg = self.cfg
-        if not cfg.follow_all or (depth + 1) >= cfg.max_depth:
-            return
+        cl = _new_cluster(kind, pred.name, kind, branch, *args, is_na,
+                          tree_from, depth)
+        if self.target.kind == "numeric":
+            found = define_numerical_cluster(
+                self.y, rows, self.y_orig, self.state, cl, self.clusters,
+                len(self.clusters), tree_from, depth,
+                self.log_transf, self.log_minval, self.exp_transf,
+                self.orig_mean, self.orig_sd, self.left_tail, self.right_tail,
+                cfg.pct_outliers, cfg.z_norm, cfg.z_outlier, False)
+            drop = False
+        else:
+            found, drop = define_categ_cluster(
+                self.codes, rows, self.ncat, cfg.categ_from_maj,
+                self.state, cl, self.clusters, len(self.clusters), tree_from,
+                depth, cfg.pct_outliers, cfg.z_norm, cfg.z_outlier,
+                self.ctx.prop_small[self.target.name],
+                self.ctx.prior[self.target.name])
+        # stale for the next target: the last branch cluster's result
+        self.has_outliers = found
+        if not drop:
+            self.trees[tree_from]["clusters"].append(len(self.clusters))
+            self.clusters.append(cl)
+        return found
+
+    def _branch(self, rows, pred, kind, branch, args, is_na, tree_from,
+                depth, push, own_args=None) -> bool:
+        """One branch of a candidate split of node ``tree_from``: its
+        cluster, then in follow_all mode its own subtree, with ``push``
+        exhausted below it (reference all_branches, fit_model.cpp:644-654).
+        ``args`` is the cluster's (point, subset, lev); the subtree's
+        ``own`` records ``own_args``, by default the same."""
+        found = self._define_cluster(rows, pred, kind, branch, args, is_na,
+                                     tree_from, depth + 1)
+        cfg = self.cfg
+        if not cfg.follow_all or depth + 1 >= cfg.max_depth:
+            return found
+        point, subset, lev = args if own_args is None else own_args
         child = len(self.trees)
         self.trees[tree_from]["all_branches"].append(child)
         t = _new_tree(tree_from, "allbranch", depth + 1)
-        t["own"] = own
+        t["own"] = {"col": pred.name, "kind": kind, "branch": branch,
+                    "point": point,
+                    "subset": [int(x) for x in subset] if subset is not None else None,
+                    "lev": lev}
         self.trees.append(t)
-        pushed = []
-        if push_col is not None:
-            self.exhausted.add(push_col)
-            pushed.append(push_col)
-        rec_fn(rows, child, depth + 1, is_na_branch)
-        self._restore_exhausted(pushed)
+        if push is not None:
+            self.exhausted.add(push)
+        self._recurse(rows, child, depth + 1, is_na)
+        self.exhausted.discard(push)
+        return found
+
+    def _na_branch(self, rows, pred, kind, res, tree_from, depth) -> bool:
+        """The NA branch of a candidate split, taken with more rows than the
+        target's min size.  A numeric target's subtree records the split's
+        arguments in ``own`` and a categorical target's none; conditions
+        ignore them on an NA branch, the model keeps them as fitted."""
+        if rows.shape[0] <= self.min_size:
+            return False
+        own = _split_args(kind, res) if self.target.kind == "numeric" else _NO_ARGS
+        return self._branch(rows, pred, kind, "isna", _NO_ARGS, True,
+                            tree_from, depth, pred.name, own)
+
+    def _side_branches(self, left, right, pred, kind, res, is_na, tree_from,
+                       depth) -> bool:
+        """The le/gt (numeric, ordinal) or in/notin (subset) branches."""
+        lo, hi = _SIDES[kind]
+        args = _split_args(kind, res)
+        push = _push_col(pred, kind, res)
+        found = self._branch(left, pred, kind, lo, args, is_na, tree_from,
+                             depth, push)
+        found |= self._branch(right, pred, kind, hi, args, is_na, tree_from,
+                              depth, push)
+        return found
+
+    def _split_node(self, ix, pred, kind, res, is_na, tree_from, depth) -> None:
+        """Split node ``tree_from`` by its best candidate: record the split,
+        exhaust the predictor when each side keeps one level, and fit a
+        subtree on each side with at least twice the min size of rows.
+        The NA side never gets one: the reference's guard can never hold
+        (fit_model.cpp:1039)."""
+        node = self.trees[tree_from]
+        node["col"], node["col_kind"] = pred.name, kind
+        if kind == "numeric":
+            node["split_point"] = res.split_point
+        elif kind == "ordinal":
+            node["split_lev"] = int(res.split_lev)
+        elif res.split_subset is not None:
+            node["split_subset"] = [int(s) for s in res.split_subset]
+        push = _push_col(pred, kind, res)
+        if push is not None:
+            self.exhausted.add(push)
+        need = 2 * self.min_size
+        if kind == "categorical" and res.split_subset is None:
+            # separate mode: one subtree per predictor level
+            node["binary_branches"] = [0] * len(pred.levels)
+            for cat_x in range(len(pred.levels)):
+                rows = ix[pred.values[ix] == cat_x]
+                if rows.shape[0] >= need:
+                    child = len(self.trees)
+                    node["binary_branches"][cat_x] = child
+                    t = _new_tree(tree_from, "subtrees", depth + 1)
+                    t["branch_lev"] = cat_x  # condition: col == cat_x
+                    self.trees.append(t)
+                    self._recurse(rows, child, depth + 1, is_na)
+        else:
+            _, left, right = _partition(ix, pred, kind, res)
+            lo, hi = _SIDES[kind]
+            # a categorical target's right side needs strictly more rows
+            # (reference fit_model.cpp:2053)
+            right_need = need + (self.target.kind != "numeric")
+            for slot, branch, rows, n in (("tree_left", lo, left, need),
+                                          ("tree_right", hi, right, right_need)):
+                if rows.shape[0] >= n:
+                    child = len(self.trees)
+                    node[slot] = child
+                    self.trees.append(_new_tree(tree_from, branch, depth + 1))
+                    self._recurse(rows, child, depth + 1, is_na)
+        self.exhausted.discard(push)
+
+    def _recurse(self, rows, tree_from, depth, is_na) -> None:
+        if self.target.kind == "numeric":
+            self._rec_numeric(rows, tree_from, depth, is_na)
+        else:
+            self._rec_categ(rows, tree_from, depth, is_na)
+
+    def _qualifies(self, res, pred, scale, exhausted_here) -> float | None:
+        """The candidate's gain when it reaches ``min_gain``; a predictor
+        constant on these rows is exhausted below this node."""
+        if res.has_zero_variance:
+            self.exhausted.add(pred.name)
+            exhausted_here.append(pred.name)
+            return None
+        gain = res.gain / scale if self.cfg.gain_as_pct else res.gain
+        return gain if gain >= self.cfg.min_gain else None
 
     def _drop_tree_if_not_needed(self, tree_ix: int) -> None:
         t = self.trees[tree_ix]
-        needed = (
-            t["tree_NA"] or t["tree_left"] or t["tree_right"] or t["clusters"]
-            or (t["binary_branches"] and max(t["binary_branches"]) > 0)
-            or (t["all_branches"] and max(t["all_branches"]) > 0)
-        )
-        if needed:
+        if not _tree_not_needed(t):
             return
         if tree_ix == 0:
             self.trees.clear()
@@ -317,43 +490,9 @@ class _ColumnFit:
         if cfg.max_depth > 0 and sd_y > 0 and ix.shape[0] >= 2 * cfg.min_size_numeric:
             self._rec_numeric(ix, 0, 0, False, sd_y, mean_y)
 
-    def _branch_partition_numeric_x(self, ix, res: SplitResult):
-        return res.na_ix, res.left_ix, res.right_ix
-
-    def _branch_partition_categ_x(self, ix, codes, subset):
-        xv = codes[ix]
-        na = ix[xv < 0]
-        su = np.asarray(subset)
-        nn = xv >= 0
-        in_l = np.zeros_like(xv, dtype=bool)
-        in_l[nn] = su[xv[nn]] == 1
-        return na, ix[in_l], ix[nn & ~in_l]
-
-    def _branch_partition_ord_x(self, ix, codes, lev):
-        xv = codes[ix]
-        na = ix[xv < 0]
-        left = ix[(xv >= 0) & (xv <= lev)]
-        right = ix[xv > lev]
-        return na, left, right
-
-    def _define_num_cluster_branch(self, rows, column_type, col, col_kind,
-                                   split_type, split_point, split_subset,
-                                   split_lev, has_nab, tree_from, depth) -> bool:
-        cl = _new_cluster(column_type, col, col_kind, split_type, split_point,
-                          split_subset, split_lev, has_nab, tree_from, depth)
-        cfg = self.cfg
-        found = define_numerical_cluster(
-            self.y, rows, self.y_orig, self.state, cl, self.clusters,
-            len(self.clusters), tree_from, depth,
-            self.log_transf, self.log_minval, self.exp_transf,
-            self.orig_mean, self.orig_sd, self.left_tail, self.right_tail,
-            cfg.pct_outliers, cfg.z_norm, cfg.z_outlier, False)
-        self.has_outliers = found
-        self.trees[tree_from]["clusters"].append(len(self.clusters))
-        self.clusters.append(cl)
-        return found
-
-    def _rec_numeric(self, ix, tree_from, depth, is_na_branch, sd_y, mean_y):
+    def _rec_numeric(self, ix, tree_from, depth, is_na_branch,
+                     sd_y=None, mean_y=None):
+        """Below the root the target's moments come from ``ix``."""
         cfg = self.cfg
         if depth > 0:
             mean_y, sd_y = welford_mean_sd(self.y[ix])
@@ -361,162 +500,41 @@ class _ColumnFit:
                 self._drop_tree_if_not_needed(tree_from)
                 return
         exhausted_here: list[str] = []
-        best = None  # (gain, col, kind, res)
+        best = None  # (gain, pred, kind, res)
         lev_has_outliers = False
 
         for pred, kind in self.predictors():
-            if pred.name == self.target.name:
-                continue
-            if self.ctx.skip_col.get(pred.name):
-                continue
-            if pred.name in self.exhausted:
-                continue
             if kind == "numeric":
                 res = split_numericx_numericy(ix, pred.values, self.y, sd_y,
-                                              cfg.min_size_numeric, cfg.take_mid)
-            elif kind == "categorical":
-                res = split_categx_numericy(ix, pred.values, self.y, sd_y, mean_y,
-                                            False, len(pred.levels),
-                                            cfg.min_size_numeric)
+                                              self.min_size, cfg.take_mid)
             else:
                 res = split_categx_numericy(ix, pred.values, self.y, sd_y, mean_y,
-                                            True, len(pred.levels),
-                                            cfg.min_size_numeric)
-            if res.has_zero_variance:
-                self.exhausted.add(pred.name)
-                exhausted_here.append(pred.name)
+                                            kind == "ordinal", len(pred.levels),
+                                            self.min_size)
+            gain = self._qualifies(res, pred, sd_y, exhausted_here)
+            if gain is None:
                 continue
-            gain = res.gain / sd_y if cfg.gain_as_pct else res.gain
-            if not (gain >= cfg.min_gain):
-                continue
-
-            if kind == "numeric":
-                na_ix, left_ix, right_ix = res.na_ix, res.left_ix, res.right_ix
-                ct, sp, ss, sl = "numeric", res.split_point, None, None
-                st_l, st_r = "le", "gt"
-                push_lr = None
-            elif kind == "categorical":
-                na_ix, left_ix, right_ix = self._branch_partition_categ_x(
-                    ix, pred.values, res.split_subset)
-                ct, sp, ss, sl = "categorical", None, res.split_subset, None
-                st_l, st_r = "in", "notin"
-                push_lr = pred.name if (len(pred.levels) == 2
-                                        or res.is_binary_split) else None
-            else:
-                na_ix, left_ix, right_ix = self._branch_partition_ord_x(
-                    ix, pred.values, res.split_lev)
-                ct, sp, ss, sl = "ordinal", None, None, res.split_lev
-                st_l, st_r = "le", "gt"
-                push_lr = pred.name if res.is_binary_split else None
-
-            def _own(branch):
-                return {"col": pred.name, "kind": kind, "branch": branch,
-                        "point": sp,
-                        "subset": [int(x) for x in ss] if ss is not None else None,
-                        "lev": sl}
-
-            if na_ix.shape[0] > cfg.min_size_numeric:
-                f = self._define_num_cluster_branch(
-                    na_ix, ct, pred.name, kind, "isna", None, None, None,
-                    True, tree_from, depth + 1)
-                lev_has_outliers |= f
-                self._follow_all_subtree(na_ix, tree_from, depth, True,
-                                         _own("isna"), pred.name,
-                                         self._rec_num_follow)
-            f = self._define_num_cluster_branch(
-                left_ix, ct, pred.name, kind, st_l, sp, ss, sl,
-                is_na_branch, tree_from, depth + 1)
-            lev_has_outliers |= f
-            self._follow_all_subtree(left_ix, tree_from, depth, is_na_branch,
-                                     _own(st_l), push_lr, self._rec_num_follow)
-            f = self._define_num_cluster_branch(
-                right_ix, ct, pred.name, kind, st_r, sp, ss, sl,
-                is_na_branch, tree_from, depth + 1)
-            lev_has_outliers |= f
-            self._follow_all_subtree(right_ix, tree_from, depth, is_na_branch,
-                                     _own(st_r), push_lr, self._rec_num_follow)
-
+            na_ix, left_ix, right_ix = _branch_rows(ix, pred, kind, res)
+            lev_has_outliers |= self._na_branch(na_ix, pred, kind, res,
+                                                tree_from, depth)
+            lev_has_outliers |= self._side_branches(
+                left_ix, right_ix, pred, kind, res, is_na_branch, tree_from, depth)
             if (best is None or gain > best[0]) and not cfg.follow_all:
                 best = (gain, pred, kind, res)
 
         self.col_has_outliers |= lev_has_outliers
-
-        if best is not None and best[0] >= cfg.min_gain:
-            depth += 1
-            if depth >= cfg.max_depth:
-                self._drop_tree_if_not_needed(tree_from)
-                self._restore_exhausted(exhausted_here)
-                return
+        if best is not None and depth + 1 < cfg.max_depth:
             if lev_has_outliers:
                 ix = ix[self.state.scores[ix] >= 1.0]
-            _, pred, kind, res = best
-            node = self.trees[tree_from]
-            node["col"] = pred.name
-            node["col_kind"] = kind
-            best_pushed = []
-            if kind == "numeric":
-                na_ix, left_ix, right_ix = self._partition_num_x(ix, pred.values,
-                                                                 res.split_point)
-                node["split_point"] = res.split_point
-                spl1, spl2 = "le", "gt"
-            elif kind == "categorical":
-                na_ix, left_ix, right_ix = self._branch_partition_categ_x(
-                    ix, pred.values, res.split_subset)
-                node["split_subset"] = [int(s) for s in res.split_subset]
-                spl1, spl2 = "in", "notin"
-                if len(pred.levels) == 2 or res.is_binary_split:
-                    self.exhausted.add(pred.name)
-                    best_pushed.append(pred.name)
-            else:
-                na_ix, left_ix, right_ix = self._branch_partition_ord_x(
-                    ix, pred.values, res.split_lev)
-                node["split_lev"] = int(res.split_lev)
-                spl1, spl2 = "le", "gt"
-                if len(pred.levels) == 2 or res.is_binary_split:
-                    self.exhausted.add(pred.name)
-                    best_pushed.append(pred.name)
-
-            # NA subtree: reference's guard can never hold (fit_model.cpp:1039),
-            # so NA branches get clusters but never subtrees; mirrored here.
-            if left_ix.shape[0] >= 2 * cfg.min_size_numeric:
-                child = len(self.trees)
-                node["tree_left"] = child
-                self.trees.append(_new_tree(tree_from, spl1, depth))
-                self._rec_numeric(left_ix, child, depth, is_na_branch, sd_y, mean_y)
-            if right_ix.shape[0] >= 2 * cfg.min_size_numeric:
-                child = len(self.trees)
-                node["tree_right"] = child
-                self.trees.append(_new_tree(tree_from, spl2, depth))
-                self._rec_numeric(right_ix, child, depth, is_na_branch, sd_y, mean_y)
-            self._restore_exhausted(best_pushed)
-
+            self._split_node(ix, *best[1:], is_na_branch, tree_from, depth)
         self._drop_tree_if_not_needed(tree_from)
-        self._restore_exhausted(exhausted_here)
-
-    def _rec_num_follow(self, rows, child, depth, is_na_branch):
-        self._rec_numeric(rows, child, depth, is_na_branch, 1.0, 0.0)
-
-    def _rec_categ_follow(self, rows, child, depth, is_na_branch):
-        self._rec_categ(rows, child, depth, is_na_branch)
-
-    @staticmethod
-    def _partition_num_x(ix, x, split_point):
-        xv = x[ix]
-        na = ix[np.isnan(xv)]
-        left = ix[xv <= split_point]
-        right = ix[(~np.isnan(xv)) & (xv > split_point)]
-        return na, left, right
-
-    def _restore_exhausted(self, names) -> None:
-        for n in names:
-            self.exhausted.discard(n)
+        self.exhausted.difference_update(exhausted_here)
 
     # ------------------------------------------------------------------
     # categorical / ordinal target
     # ------------------------------------------------------------------
     def fit_categ(self, is_ord: bool) -> None:
         cfg = self.cfg
-        self.is_ord = is_ord
         codes = self.target.values
         self.codes = codes
         ncat = len(self.target.levels)
@@ -552,18 +570,12 @@ class _ColumnFit:
 
         n_other_categ = len(self.ctx.categ) - (0 if is_ord else 1)
         binarize = (cfg.categ_as_bin if not is_ord else cfg.ord_as_bin)
+        self.base_info_orig = _info(ix.shape[0], counts)
         if (not binarize) or self.col_is_bin or n_other_categ < 1:
-            self.base_info_orig = float(
-                ix.shape[0] * math.log(ix.shape[0])
-                - sum(c * math.log(c) for c in counts if c > 1))
             self.base_info = self.base_info_orig
             self._rec_categ(ix, 0, 0, False)
         else:
             self.col_is_bin = True
-            self.already_split_main = False
-            self.base_info_orig = float(
-                ix.shape[0] * math.log(ix.shape[0])
-                - sum(c * math.log(c) for c in counts if c > 1))
             for cat in range(ncat - (1 if is_ord else 0)):
                 if not is_ord:
                     ybin = (codes == cat).astype(np.int64)
@@ -575,36 +587,17 @@ class _ColumnFit:
                     c1 = ix.shape[0] - c0
                 if c0 > 0 and c1 > 0:
                     self.y_bin = ybin
-                    bc = np.array([c0, c1], dtype=np.int64)
-                    self.base_info = float(
-                        ix.shape[0] * math.log(ix.shape[0])
-                        - sum(c * math.log(c) for c in bc if c > 1))
+                    self.base_info = _info(ix.shape[0], (c0, c1))
                     child = len(self.trees)
                     self.trees[0]["binary_branches"].append(child)
                     self.trees.append(_new_tree(0, "subtrees", 0))
                     self._rec_categ(ix, child, 0, False)
 
-    def _define_categ_cluster_branch(self, rows, column_type, col, col_kind,
-                                     split_type, split_point, split_subset,
-                                     split_lev, has_nab, tree_from, depth) -> bool:
-        cfg = self.cfg
-        cl = _new_cluster(column_type, col, col_kind, split_type, split_point,
-                          split_subset, split_lev, has_nab, tree_from, depth)
-        found, drop = define_categ_cluster(
-            self.codes, rows, self.ncat, cfg.categ_from_maj,
-            self.state, cl, self.clusters, len(self.clusters), tree_from, depth,
-            cfg.pct_outliers, cfg.z_norm, cfg.z_outlier,
-            self.ctx.prop_small[self.target.name],
-            self.ctx.prior[self.target.name])
-        self.has_outliers = found
-        if not drop:
-            self.trees[tree_from]["clusters"].append(len(self.clusters))
-            self.clusters.append(cl)
-        return found
-
     def _rec_categ(self, ix, tree_from, depth, is_na_branch):
+        """``y_bin`` is set only when a multi-level target is binarized."""
         cfg = self.cfg
         ncat = self.ncat
+        ybin = self.y_bin
         base_info = self.base_info
         base_info_orig = self.base_info_orig
         if depth > 0:
@@ -613,11 +606,11 @@ class _ColumnFit:
             if int((sub_counts > 0).sum()) < 2:
                 self._drop_tree_if_not_needed(tree_from)
                 return
-            if self.col_is_bin and ncat > 2:
-                bc = np.bincount(self.y_bin[ix], minlength=2)
+            if ybin is not None:
+                bc = np.bincount(ybin[ix], minlength=2)
                 base_info = total_info(bc)
                 # '==' mirrors the reference's comparison (fit_model.cpp:1304)
-                if bc[0] < cfg.min_size_categ or bc[1] == cfg.min_size_categ:
+                if bc[0] < self.min_size or bc[1] == self.min_size:
                     self._drop_tree_if_not_needed(tree_from)
                     return
             else:
@@ -626,258 +619,89 @@ class _ColumnFit:
             self._drop_tree_if_not_needed(tree_from)
             return
 
-        ybin = self.y_bin if (self.col_is_bin and ncat > 2) else None
-        ywork = ybin if ybin is not None else self.codes
         exhausted_here: list[str] = []
-        best = None  # (gain, pred, kind, res, mode)
+        best = None  # (gain, pred, kind, res)
         lev_has_outliers = False
 
         for pred, kind in self.predictors():
-            if kind == "numeric":
-                if depth == 0 and self.col_is_bin and ncat > 2 and self.already_split_main:
-                    continue
-            if kind == "ordinal":
-                if depth == 0 and self.col_is_bin and ncat > 2 and self.already_split_main:
-                    continue
-                if self.is_ord and pred.name == self.target.name:
-                    continue
-            if kind == "categorical" and pred.name == self.target.name and not self.is_ord:
+            # once a binarized target's subtree ends without a best split at
+            # its root (always under follow_all), the later subtrees try
+            # only categorical predictors at theirs
+            if kind != "categorical" and depth == 0 and self.already_split_main:
                 continue
-            if self.ctx.skip_col.get(pred.name):
-                continue
-            if pred.name in self.exhausted:
-                continue
-
-            mode = "subset"
+            ncat_x = len(pred.levels) if kind != "numeric" else 0
             if kind == "numeric":
                 res = split_numericx_categy(ix, pred.values, self.codes, ncat,
-                                            base_info_orig, cfg.min_size_categ,
+                                            base_info_orig, self.min_size,
                                             cfg.take_mid)
-            elif kind == "categorical":
-                ncat_x = len(pred.levels)
-                if self.col_is_bin:
-                    yb = ywork if ybin is not None else self.codes
-                    res = split_categx_biny(ix, pred.values, yb, ncat_x,
-                                            base_info, cfg.min_size_categ)
-                    if (not res.has_zero_variance and math.isfinite(res.gain)
-                            and ncat > 2):
-                        na_ix, l_ix, r_ix = self._branch_partition_categ_x(
-                            ix, pred.values, res.split_subset)
-                        res.gain = categ_gain_from_split(
-                            na_ix, l_ix, r_ix, self.codes, ncat, base_info_orig)
-                elif cfg.cat_bruteforce_subset and ncat_x > 2:
-                    res = split_categx_categy_subset(
-                        ix, pred.values, self.codes, ncat_x, ncat,
-                        base_info_orig, cfg.min_size_categ)
-                else:
-                    res = split_categx_categy_separate(
-                        ix, pred.values, self.codes, ncat_x, ncat,
-                        base_info_orig, cfg.min_size_categ)
-                    mode = "separate"
+            elif kind == "ordinal":
+                res = split_ordx_categy(ix, pred.values, self.codes, ncat, ncat_x,
+                                        base_info_orig, self.min_size)
+            elif self.col_is_bin:
+                res = split_categx_biny(ix, pred.values,
+                                        self.codes if ybin is None else ybin,
+                                        ncat_x, base_info, self.min_size)
+                if (ybin is not None and not res.has_zero_variance
+                        and math.isfinite(res.gain)):
+                    res.gain = categ_gain_from_split(
+                        *_partition(ix, pred, kind, res), self.codes, ncat,
+                        base_info_orig)
+            elif cfg.cat_bruteforce_subset and ncat_x > 2:
+                res = split_categx_categy_subset(
+                    ix, pred.values, self.codes, ncat_x, ncat,
+                    base_info_orig, self.min_size)
             else:
-                res = split_ordx_categy(ix, pred.values, self.codes, ncat,
-                                        len(pred.levels), base_info_orig,
-                                        cfg.min_size_categ)
-            if res.has_zero_variance:
-                self.exhausted.add(pred.name)
-                exhausted_here.append(pred.name)
-                continue
-            gain = res.gain / base_info_orig if cfg.gain_as_pct else res.gain
-            if not (gain >= cfg.min_gain):
+                res = split_categx_categy_separate(
+                    ix, pred.values, self.codes, ncat_x, ncat,
+                    base_info_orig, self.min_size)
+            gain = self._qualifies(res, pred, base_info_orig, exhausted_here)
+            if gain is None:
                 continue
 
-            def _own(branch, point=None, subset=None, lev=None):
-                return {"col": pred.name, "kind": kind, "branch": branch,
-                        "point": point,
-                        "subset": [int(x) for x in subset] if subset is not None else None,
-                        "lev": lev}
-
-            if kind == "numeric":
-                na_ix, left_ix, right_ix = res.na_ix, res.left_ix, res.right_ix
-                if na_ix.shape[0] > cfg.min_size_categ:
-                    lev_has_outliers |= self._define_categ_cluster_branch(
-                        na_ix, "numeric", pred.name, kind, "isna",
-                        None, None, None, True, tree_from, depth + 1)
-                    self._follow_all_subtree(na_ix, tree_from, depth, True,
-                                             _own("isna"), pred.name,
-                                             self._rec_categ_follow)
-                lev_has_outliers |= self._define_categ_cluster_branch(
-                    left_ix, "numeric", pred.name, kind, "le",
-                    res.split_point, None, None, is_na_branch, tree_from, depth + 1)
-                self._follow_all_subtree(left_ix, tree_from, depth, is_na_branch,
-                                         _own("le", point=res.split_point),
-                                         None, self._rec_categ_follow)
-                lev_has_outliers |= self._define_categ_cluster_branch(
-                    right_ix, "numeric", pred.name, kind, "gt",
-                    res.split_point, None, None, is_na_branch, tree_from, depth + 1)
-                self._follow_all_subtree(right_ix, tree_from, depth, is_na_branch,
-                                         _own("gt", point=res.split_point),
-                                         None, self._rec_categ_follow)
-            elif kind == "categorical":
-                ncat_x = len(pred.levels)
-                xv = pred.values[ix]
-                na_ix = ix[xv < 0]
-                if na_ix.shape[0] > cfg.min_size_categ:
-                    lev_has_outliers |= self._define_categ_cluster_branch(
-                        na_ix, "categorical", pred.name, kind, "isna",
-                        None, None, None, True, tree_from, depth + 1)
-                    self._follow_all_subtree(na_ix, tree_from, depth, True,
-                                             _own("isna"), pred.name,
-                                             self._rec_categ_follow)
-                if mode == "separate" and ncat_x > 2:
-                    present = [c for c in range(ncat_x)
-                               if (pred.values[ix] == c).any()]
-                    for cat_x in present:
-                        rows = ix[pred.values[ix] == cat_x]
-                        # reference requires >= min_size for middle categories
-                        # but strictly > for the last one (fit_model.cpp:1565,1601)
-                        need = (cfg.min_size_categ + 1 if cat_x == present[-1]
-                                else cfg.min_size_categ)
-                        if rows.shape[0] >= need:
-                            lev_has_outliers |= self._define_categ_cluster_branch(
-                                rows, "categorical", pred.name, kind, "eq",
-                                None, None, cat_x, is_na_branch, tree_from, depth + 1)
-                            self._follow_all_subtree(
-                                rows, tree_from, depth, is_na_branch,
-                                _own("eq", lev=cat_x), pred.name,
-                                self._rec_categ_follow)
-                else:
-                    if ncat_x == 2:
-                        subset = np.array([1, 0], dtype=np.int8)
-                        nn = xv >= 0
-                        l_ix = ix[nn & (xv == 0)]
-                        r_ix = ix[nn & (xv == 1)]
-                        if (l_ix.shape[0] < cfg.min_size_categ
-                                or r_ix.shape[0] < cfg.min_size_categ):
-                            continue
-                    else:
-                        subset = res.split_subset
-                        _, l_ix, r_ix = self._branch_partition_categ_x(
-                            ix, pred.values, subset)
-                    push_lr = pred.name if (ncat_x == 2 or res.is_binary_split) \
-                        else None
-                    lev_has_outliers |= self._define_categ_cluster_branch(
-                        l_ix, "categorical", pred.name, kind, "in",
-                        None, subset, None, is_na_branch, tree_from, depth + 1)
-                    self._follow_all_subtree(l_ix, tree_from, depth, is_na_branch,
-                                             _own("in", subset=subset), push_lr,
-                                             self._rec_categ_follow)
-                    lev_has_outliers |= self._define_categ_cluster_branch(
-                        r_ix, "categorical", pred.name, kind, "notin",
-                        None, subset, None, is_na_branch, tree_from, depth + 1)
-                    self._follow_all_subtree(r_ix, tree_from, depth, is_na_branch,
-                                             _own("notin", subset=subset), push_lr,
-                                             self._rec_categ_follow)
-                    res.split_subset = subset
+            two_levels = kind == "categorical" and ncat_x == 2
+            if two_levels:
+                res.split_subset = np.array([1, 0], dtype=np.int8)
+            na_ix, left_ix, right_ix = _branch_rows(ix, pred, kind, res)
+            lev_has_outliers |= self._na_branch(na_ix, pred, kind, res,
+                                                tree_from, depth)
+            if left_ix is None:
+                lev_has_outliers |= self._level_branches(ix, pred, is_na_branch,
+                                                         tree_from, depth)
             else:
-                na_ix, left_ix, right_ix = self._branch_partition_ord_x(
-                    ix, pred.values, res.split_lev)
-                push_lr = pred.name if res.is_binary_split else None
-                if na_ix.shape[0] > cfg.min_size_categ:
-                    lev_has_outliers |= self._define_categ_cluster_branch(
-                        na_ix, "ordinal", pred.name, kind, "isna",
-                        None, None, None, True, tree_from, depth + 1)
-                    self._follow_all_subtree(na_ix, tree_from, depth, True,
-                                             _own("isna"), pred.name,
-                                             self._rec_categ_follow)
-                lev_has_outliers |= self._define_categ_cluster_branch(
-                    left_ix, "ordinal", pred.name, kind, "le",
-                    None, None, res.split_lev, is_na_branch, tree_from, depth + 1)
-                self._follow_all_subtree(left_ix, tree_from, depth, is_na_branch,
-                                         _own("le", lev=res.split_lev), push_lr,
-                                         self._rec_categ_follow)
-                lev_has_outliers |= self._define_categ_cluster_branch(
-                    right_ix, "ordinal", pred.name, kind, "gt",
-                    None, None, res.split_lev, is_na_branch, tree_from, depth + 1)
-                self._follow_all_subtree(right_ix, tree_from, depth, is_na_branch,
-                                         _own("gt", lev=res.split_lev), push_lr,
-                                         self._rec_categ_follow)
-
+                # the NA cluster above is kept even when this skips the split
+                if two_levels and min(left_ix.shape[0],
+                                      right_ix.shape[0]) < self.min_size:
+                    continue
+                lev_has_outliers |= self._side_branches(
+                    left_ix, right_ix, pred, kind, res, is_na_branch,
+                    tree_from, depth)
             if (best is None or gain > best[0]) and not cfg.follow_all:
-                best = (gain, pred, kind, res, mode)
+                best = (gain, pred, kind, res)
 
         self.col_has_outliers |= lev_has_outliers
-
-        if best is not None and best[0] >= cfg.min_gain:
-            depth += 1
-            if depth < cfg.max_depth:
-                if lev_has_outliers:
-                    ix = ix[self.state.scores[ix] >= 1.0]
-                _, pred, kind, res, mode = best
-                node = self.trees[tree_from]
-                node["col"] = pred.name
-                node["col_kind"] = kind
-                best_pushed = []
-                if kind == "numeric":
-                    na_ix, left_ix, right_ix = self._partition_num_x(
-                        ix, pred.values, res.split_point)
-                    node["split_point"] = res.split_point
-                    spl1, spl2 = "le", "gt"
-                elif kind == "ordinal":
-                    na_ix, left_ix, right_ix = self._branch_partition_ord_x(
-                        ix, pred.values, res.split_lev)
-                    node["split_lev"] = int(res.split_lev)
-                    spl1, spl2 = "le", "gt"
-                    if len(pred.levels) == 2 or res.is_binary_split:
-                        self.exhausted.add(pred.name)
-                        best_pushed.append(pred.name)
-                else:
-                    ncat_x = len(pred.levels)
-                    if ncat_x == 2:
-                        subset = np.array([1, 0], dtype=np.int8)
-                        na_ix, left_ix, right_ix = self._branch_partition_categ_x(
-                            ix, pred.values, subset)
-                        node["split_subset"] = [1, 0]
-                        spl1, spl2 = "in", "notin"
-                        self.exhausted.add(pred.name)
-                        best_pushed.append(pred.name)
-                    elif self.col_is_bin or cfg.cat_bruteforce_subset:
-                        na_ix, left_ix, right_ix = self._branch_partition_categ_x(
-                            ix, pred.values, res.split_subset)
-                        node["split_subset"] = [int(s) for s in res.split_subset]
-                        spl1, spl2 = "in", "notin"
-                        if res.is_binary_split:
-                            self.exhausted.add(pred.name)
-                            best_pushed.append(pred.name)
-                    else:
-                        # separate mode: one subtree per predictor category
-                        node["split_subset"] = None
-                        node["binary_branches"] = [0] * ncat_x
-                        self.exhausted.add(pred.name)
-                        best_pushed.append(pred.name)
-                        for cat_x in range(ncat_x):
-                            rows = ix[pred.values[ix] == cat_x]
-                            if rows.shape[0] >= 2 * cfg.min_size_categ:
-                                child = len(self.trees)
-                                node["binary_branches"][cat_x] = child
-                                t = _new_tree(tree_from, "subtrees", depth)
-                                t["branch_lev"] = cat_x  # condition: col == cat_x
-                                self.trees.append(t)
-                                self._rec_categ(rows, child, depth, is_na_branch)
-                        self._restore_exhausted(best_pushed)
-                        self._drop_tree_if_not_needed(tree_from)
-                        self._restore_exhausted(exhausted_here)
-                        return
-
-                # NA subtree never taken (same reference quirk as numeric)
-                if left_ix.shape[0] >= 2 * cfg.min_size_categ:
-                    child = len(self.trees)
-                    node["tree_left"] = child
-                    self.trees.append(_new_tree(tree_from, spl1, depth))
-                    self._rec_categ(left_ix, child, depth, is_na_branch)
-                # reference uses strict '>' for the right branch (line 2053)
-                if right_ix.shape[0] > 2 * cfg.min_size_categ:
-                    child = len(self.trees)
-                    node["tree_right"] = child
-                    self.trees.append(_new_tree(tree_from, spl2, depth))
-                    self._rec_categ(right_ix, child, depth, is_na_branch)
-                self._restore_exhausted(best_pushed)
-
-        if depth == 0 and self.col_is_bin and ncat > 2 and not self.already_split_main:
+        if best is not None and depth + 1 < cfg.max_depth:
+            if lev_has_outliers:
+                ix = ix[self.state.scores[ix] >= 1.0]
+            self._split_node(ix, *best[1:], is_na_branch, tree_from, depth)
+        if depth == 0 and best is None and ybin is not None:
             self.already_split_main = True
         self._drop_tree_if_not_needed(tree_from)
-        self._restore_exhausted(exhausted_here)
+        self.exhausted.difference_update(exhausted_here)
 
+    def _level_branches(self, ix, pred, is_na, tree_from, depth) -> bool:
+        """Separate mode: an ``eq`` branch per predictor level present."""
+        xv = pred.values[ix]
+        present = [c for c in range(len(pred.levels)) if (xv == c).any()]
+        found = False
+        for cat_x in present:
+            rows = ix[xv == cat_x]
+            # reference requires >= min_size for middle categories but
+            # strictly > for the last one (fit_model.cpp:1565,1601)
+            if rows.shape[0] >= self.min_size + (cat_x == present[-1]):
+                found |= self._branch(rows, pred, "categorical", "eq",
+                                      (None, None, cat_x), is_na, tree_from,
+                                      depth, pred.name)
+        return found
 
 def _simplify_cluster_conditions(clusters: list[dict], levels: dict[str, list]) -> None:
     """C7: rewrite singleton subset conditions to eq/neq

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..colref import qcol
+
 # Gopher's required-stopword list (Table A1: "contains at least 2 of
 # the following English words")
 GOPHER_STOPWORDS = ("the", "be", "to", "of", "and", "that", "have", "with")
@@ -247,9 +249,9 @@ def _rep_feature_frame_arrow(df, id_col: str, text_col: str) -> DataFrame:
 
     def _batches(it):
         for pdf in it:
-            out = {"_id": pdf[id_col]}
+            out = {"_id": pdf["_id"]}
             cols = {k: [] for k in REP_FEATURE_COLS}
-            for text in pdf[text_col]:
+            for text in pdf["_text"]:
                 text = text or ""
                 tc = len(text)
                 words = [t for t in split_ws.split(text.strip(" ")) if t]
@@ -291,7 +293,8 @@ def _rep_feature_frame_arrow(df, id_col: str, text_col: str) -> DataFrame:
     id_type = df.schema[id_col].dataType.simpleString()
     schema = ", ".join([f"_id {id_type}"]
                        + [f"{k} double" for k in REP_FEATURE_COLS])
-    return (df.select(F.col(id_col), F.col(text_col))
+    # positional names: mapInPandas reads a dotted input name as a path
+    return (df.select(qcol(id_col).alias("_id"), qcol(text_col).alias("_text"))
               .mapInPandas(_batches, schema)
               .withColumnRenamed("_id", id_col))
 
@@ -345,6 +348,6 @@ def gopher_repetition(df: DataFrame, id_col: str = "doc_id",
     keep = rules[0].cast("boolean")
     for r in rules[1:]:
         keep = keep & r
-    return d3.select(F.col(id_col),
+    return d3.select(qcol(id_col),
                      *[c for c in d3.columns if c != id_col],
                      *rules, keep.alias("repetition_keep"))

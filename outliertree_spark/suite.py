@@ -82,17 +82,6 @@ class ValidationSuite:
         self._checks.append(_Check(nm, "timestamp_range", fn))
         return self
 
-    def add_group_bounds(self, group_cols: list[str], value_col: str,
-                         z: float = 8.0, name: str | None = None):
-        nm = name or f"bounds_{value_col}"
-
-        def fn(df: DataFrame) -> DataFrame:
-            v = C.group_bound_violations(df, group_cols, value_col, z=z)
-            return v.withColumn("_check_value", qcol(value_col).cast("string"))
-
-        self._checks.append(_Check(nm, "group_bounds", fn))
-        return self
-
     def add_extraction_parity(self, html_col: str = "html",
                               text_col: str = "text",
                               name: str | None = None):
@@ -144,7 +133,7 @@ class ValidationSuite:
                 F.when(~expr, F.lit(rn)) for rn, expr in rules.items()])
             bad = (gopher_features(df, text_col, prefix="_gq_")
                    .filter(~keep)
-                   .select(*df.columns,
+                   .select(*[qcol(c) for c in df.columns],
                            F.concat(F.lit("gopher:"), failed)
                             .alias("_check_value")))
             if include_repetition:

@@ -38,6 +38,23 @@ from collections import Counter
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
+def _violation_rows(df, args, **given):
+    """``df`` projected to the engine's violation row shape: the partition
+    and id columns, then every ``engine.VIOLATION_FIELDS`` column, taken
+    from ``given`` or NULL, cast to the engine's type.  One parquet sink
+    carries the rows of every check family; two schemas in one directory
+    would silently lose columns for any reader without mergeSchema."""
+    from pyspark.sql import functions as F
+
+    from outliertree_spark.colref import qcol
+    from outliertree_spark.engine import VIOLATION_FIELDS
+    idc = dict.fromkeys([args.partition_col] + ([args.id_col] if args.id_col else []))
+    return df.select(
+        *[qcol(c).alias(c) for c in idc],
+        *[given.get(f.name, F.lit(None)).cast(f.dataType).alias(f.name)
+          for f in VIOLATION_FIELDS])
+
+
 def _snapshot_check(spark, ledger, args, df_full) -> bool:
     """Cross-snapshot check (north rule): changed rows are violations in
     their current partition, silently-removed rows in their old one;
@@ -65,25 +82,17 @@ def _snapshot_check(spark, ledger, args, df_full) -> bool:
     if not key:
         raise SystemExit("--prev-snapshot requires --snapshot-key "
                          "or --id-col")
-    idc = list(dict.fromkeys(
-        [args.partition_col] + ([args.id_col] if args.id_col else [])))
     d = snapshot_diff(prev, df_full, [key])
 
     def _shape(src, ct):
         rows = src.join(d.filter(F.col("change_type") == ct),
                         [key], "inner")
-        return rows.select(
-            *idc,
-            F.lit("snapshot_delta").alias("suspicious_column"),
-            F.col("change_type").alias("suspicious_value"),
-            F.lit(None).cast("double").alias("suspicious_value_num"),
-            F.lit(None).cast("string").alias("group_statistics"),
-            F.lit(None).cast("string").alias("conditions"),
-            F.lit(None).cast("long").alias("tree_depth"),
-            F.lit(None).cast("boolean").alias("uses_NA_branch"),
-            F.lit(None).cast("double").alias("outlier_score"),
-            F.concat(F.lit("row "), F.col("change_type"),
-                     F.lit(" vs previous snapshot")).alias("explanation"))
+        return _violation_rows(
+            rows, args,
+            suspicious_column=F.lit("snapshot_delta"),
+            suspicious_value=F.col("change_type"),
+            explanation=F.concat(F.lit("row "), F.col("change_type"),
+                                 F.lit(" vs previous snapshot")))
 
     snap = _shape(df_full, "changed").unionByName(_shape(prev, "removed"))
     snap.write.mode("append").parquet(args.violations_out)
@@ -204,28 +213,19 @@ def main(argv=None) -> int:
         # cache the union itself, not the projection below: the verdicts
         # aggregate the union, so only its plan matches in the cache
         cached = viols.persist()
-        # conform the suite's unified rows to the ENGINE violation
-        # schema: violations_out is an append-mode parquet dir shared
-        # with _snapshot_check rows and prior non-quality runs — two
-        # schemas in one dir silently lose columns for any reader
-        # without mergeSchema.  The check name + failed-rule list land
-        # in suspicious_value/explanation.
+        # conform the suite's unified rows to the engine violation
+        # schema; the check name + failed-rule list land in
+        # suspicious_value/explanation
         from pyspark.sql import functions as F
-        idc = list(dict.fromkeys(
-            [args.partition_col] + ([args.id_col] if args.id_col else [])))
-        viols = viols.select(
-            *idc, "suspicious_column",
-            F.col("check_value").alias("suspicious_value"),
-            F.lit(None).cast("double").alias("suspicious_value_num"),
-            F.lit(None).cast("string").alias("group_statistics"),
-            F.lit(None).cast("string").alias("conditions"),
-            F.lit(None).cast("long").alias("tree_depth"),
-            F.lit(None).cast("boolean").alias("uses_NA_branch"),
-            "outlier_score",
-            F.coalesce("explanation",
-                       F.concat(F.lit("check ["), F.col("check"),
-                                F.lit("] failed: "),
-                                F.col("check_value"))).alias("explanation"))
+        viols = _violation_rows(
+            viols, args,
+            suspicious_column=F.col("suspicious_column"),
+            suspicious_value=F.col("check_value"),
+            outlier_score=F.col("outlier_score"),
+            explanation=F.coalesce(
+                "explanation",
+                F.concat(F.lit("check ["), F.col("check"),
+                         F.lit("] failed: "), F.col("check_value"))))
     else:
         viols, verdicts = eng.validate(
             df, partition_col=args.partition_col,

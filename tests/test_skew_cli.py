@@ -167,30 +167,39 @@ def test_domain_profile_ppm_and_hot_flag(spark):
 
 
 def test_cli_prev_snapshot(spark, tmp_path):
+    """The snapshot delta lands in the violations sink, also when the id
+    and partition columns carry dots (read literally, not as struct
+    paths)."""
+    for case, (id_col, part_col) in enumerate((("doc_id", "bucket"),
+                                               ("doc.id", "src.bucket"))):
+        _check_prev_snapshot(spark, tmp_path / str(case), id_col, part_col)
+
+
+def _check_prev_snapshot(spark, tmp_path, id_col, part_col):
     src = str(tmp_path / "docs.parquet")
     prev = str(tmp_path / "prev.parquet")
     rng = np.random.RandomState(7)
     n = 2000
     pdf = pd.DataFrame({
-        "doc_id": np.arange(n),
+        id_col: np.arange(n),
         "text_len": rng.lognormal(5, 0.3, n),
         "lang": np.array(["en", "de"])[np.arange(n) % 2],
-        "bucket": np.arange(n) % 3,
+        part_col: np.arange(n) % 3,
     })
     spark.createDataFrame(pdf).write.mode("overwrite").parquet(src)
     # previous snapshot: doc 42's content differed; doc 5000 existed then
     ppdf = pdf.copy()
     ppdf.loc[42, "text_len"] = 1.0
     extra = pdf.iloc[[0]].copy()
-    extra["doc_id"] = 5000
+    extra[id_col] = 5000
     ppdf = pd.concat([ppdf, extra], ignore_index=True)
     spark.createDataFrame(ppdf).write.mode("overwrite").parquet(prev)
 
     ledger = str(tmp_path / "ledger.jsonl")
     vout = str(tmp_path / "violations.parquet")
     cmd = [sys.executable, "scripts/run_validate.py",
-           "--input", src, "--partition-col", "bucket",
-           "--id-col", "doc_id", "--checkpoint", ledger,
+           "--input", src, "--partition-col", part_col,
+           "--id-col", id_col, "--checkpoint", ledger,
            "--violations-out", vout, "--prev-snapshot", prev,
            "--master", "local[2]"]
     r = subprocess.run(cmd, capture_output=True, text=True, timeout=420,
@@ -198,10 +207,10 @@ def test_cli_prev_snapshot(spark, tmp_path):
     assert r.returncode == 0, r.stderr[-2000:]
     viols = spark.read.parquet(vout).toPandas()
     snap = viols[viols["suspicious_column"] == "snapshot_delta"]
-    got = dict(zip(snap["doc_id"], snap["suspicious_value"]))
+    got = dict(zip(snap[id_col], snap["suspicious_value"]))
     assert got == {42: "changed", 5000: "removed"}
     # removed row attributed to its partition in the previous snapshot
-    assert set(snap[snap["doc_id"] == 5000]["bucket"]) == {0}
+    assert set(snap[snap[id_col] == 5000][part_col]) == {0}
 
 
 def test_cli_prev_snapshot_with_resume(spark, tmp_path):
@@ -309,7 +318,14 @@ def test_cli_snapshot_runs_on_nothing_to_do_resume(spark, tmp_path):
 def test_cli_quality_rules_gate(spark, tmp_path):
     """--quality-rules routes the run through the ValidationSuite: a
     planted short doc lands in the violations parquet with the failed
-    rule list, unified with the derived tree violations."""
+    rule list, unified with the derived tree violations.  A second run
+    has dotted id and partition columns and adds the repetition rules."""
+    _check_quality_rules(spark, tmp_path / "0", "doc_id", "bucket", [])
+    _check_quality_rules(spark, tmp_path / "1", "doc.id", "src.bucket",
+                         ["--quality-repetition"])
+
+
+def _check_quality_rules(spark, tmp_path, id_col, part_col, extra):
     import numpy as np
     import pandas as pd
     rng = np.random.RandomState(3)
@@ -321,9 +337,9 @@ def test_cli_quality_rules_gate(spark, tmp_path):
              "quiet again")
     n = 40
     pdf = pd.DataFrame({
-        "doc_id": np.arange(n),
+        id_col: np.arange(n),
         "text": [prose + f" end{i}" for i in range(n)],
-        "bucket": np.arange(n) % 4,
+        part_col: np.arange(n) % 4,
         "value": rng.normal(100, 10, n),
     })
     pdf.loc[6, "text"] = "way too short"
@@ -332,10 +348,10 @@ def test_cli_quality_rules_gate(spark, tmp_path):
     ledger = str(tmp_path / "qledger.jsonl")
     vout = str(tmp_path / "qviolations.parquet")
     cmd = [sys.executable, "scripts/run_validate.py",
-           "--input", src, "--partition-col", "bucket",
-           "--id-col", "doc_id", "--checkpoint", ledger,
+           "--input", src, "--partition-col", part_col,
+           "--id-col", id_col, "--checkpoint", ledger,
            "--violations-out", vout, "--cols-ignore", "text",
-           "--quality-rules", "--master", "local[2]"]
+           "--quality-rules", "--master", "local[2]", *extra]
     r = subprocess.run(cmd, capture_output=True, text=True, timeout=420,
                        cwd=".")
     assert r.returncode == 0, r.stderr[-2000:]
@@ -346,8 +362,10 @@ def test_cli_quality_rules_gate(spark, tmp_path):
     # dir): quality rows carry the kind in suspicious_column and the
     # failed-rule list in suspicious_value/explanation
     q = viols[viols["suspicious_column"] == "quality"]
-    assert set(q["doc_id"]) == {6}
-    assert "rule_word_count" in q.iloc[0]["suspicious_value"]
-    assert "quality_rules" in q.iloc[0]["explanation"]
+    assert set(q[id_col]) == {6}
+    gopher = q[q["suspicious_value"].str.startswith("gopher:")]
+    assert "rule_word_count" in gopher.iloc[0]["suspicious_value"]
+    assert "quality_rules" in gopher.iloc[0]["explanation"]
     assert set(viols.columns) >= {"suspicious_value_num", "conditions",
                                   "tree_depth"}  # engine schema fields
+    assert len(q) - len(gopher) == (1 if extra else 0)  # repetition: row
