@@ -16,10 +16,10 @@ fit_model.cpp:285-286); the hot loops are NumPy sorts and scans, which
 release the GIL.  One order dependency is kept for parity with the
 single-threaded reference: a numeric target reads the stale
 ``has_outliers`` the previous target left behind (see
-``_ColumnFit.__init__``).  So the numeric targets are fitted in column
-order inside one task that hands the flag on, and each categorical or
-ordinal target, which never reads it, is its own task.  Simplifying the
-cluster conditions and merging the per-row winners stay one walk in
+``_ColumnFit.__init__``).  Every target is its own task, fitted as if
+that flag were False; a walk in column order then refits, on the calling
+thread, each numeric target whose predecessor left True.  Simplifying
+the cluster conditions and merging the per-row winners stay one walk in
 column order, because merge ties depend on that order.  The model is
 byte-identical to fitting the columns one after another.
 """
@@ -105,6 +105,8 @@ def _new_cluster(column_type, col, col_kind, split_type, split_point=None,
 _SIDES = {"numeric": ("le", "gt"), "ordinal": ("le", "gt"),
           "categorical": ("in", "notin")}
 _NO_ARGS = (None, None, None)
+# float slack on the categorical-target gain bound in _rec_categ
+_GAIN_EPS = 1e-9
 
 
 def _split_args(kind: str, res: SplitResult) -> tuple:
@@ -234,8 +236,9 @@ class _ColumnFit:
         # on the previous column -- deliberate parity with the reference,
         # verified by the tools/diff_vs_reference.py harness.  Only numeric
         # targets read it, and they come first in column order, so
-        # fit_arrays fits them as one ordered chain that hands the flag on;
-        # categorical and ordinal targets never read it.
+        # _fit_targets fits every target with False and refits a numeric
+        # target whose predecessor left True; categorical and ordinal
+        # targets never read it.
         self.has_outliers = stale_has_outliers
         self.trees: list[dict] = []
         self.clusters: list[dict] = []
@@ -623,7 +626,17 @@ class _ColumnFit:
         best = None  # (gain, pred, kind, res)
         lev_has_outliers = False
 
-        for pred, kind in self.predictors():
+        # Every gain of a categorical target is (base_info_orig - sum of
+        # the branches' info) / ix.shape[0], each branch's info >= 0, so
+        # gain / base_info_orig <= 1 / ix.shape[0] (base_info_orig > 0
+        # here).  Under gain_as_pct no candidate then reaches min_gain on
+        # more than 1 / min_gain rows.  A search that qualifies none adds
+        # no branch and no split, and the predictors it exhausts are
+        # restored below, so it is skipped; best stays None, so
+        # already_split_main is set as the search would set it.
+        searched = () if (cfg.gain_as_pct and ix.shape[0] * cfg.min_gain
+                          > 1 + _GAIN_EPS) else self.predictors()
+        for pred, kind in searched:
             # once a binarized target's subtree ends without a best split at
             # its root (always under follow_all), the later subtrees try
             # only categorical predictors at theirs
@@ -754,6 +767,7 @@ class _TargetFit:
     log_minval: float
     left_tail: float
     right_tail: float
+    has_outliers: bool             # the stale flag left for the next target
     rows: np.ndarray               # flagged rows (score < 1), ascending
     scores: np.ndarray             # RowState entries of those rows
     cluster: np.ndarray
@@ -762,27 +776,23 @@ class _TargetFit:
     nab: np.ndarray
 
 
-def _fit_chain(ctx: _FitContext, cols: list[FitColumn]) -> list[_TargetFit]:
-    """Fit ``cols`` in order, handing each target's stale ``has_outliers``
-    on to the next (see ``_ColumnFit.__init__``)."""
-    fits = []
-    stale_has_outliers = False
-    for col in cols:
-        w = _ColumnFit(ctx, col, stale_has_outliers)
-        if col.kind == "numeric":
-            w.fit_numeric()
-        else:
-            w.fit_categ(is_ord=(col.kind == "ordinal"))
-        stale_has_outliers = w.has_outliers
-        st = w.state
-        rows = np.flatnonzero(st.scores < 1.0)
-        fits.append(_TargetFit(
-            col, w.trees, w.clusters, w.col_has_outliers,
-            "exp" if w.exp_transf else ("log" if w.log_transf else "none"),
-            w.orig_mean, w.orig_sd, w.log_minval, w.left_tail, w.right_tail,
-            rows, st.scores[rows], st.cluster[rows], st.tree[rows],
-            st.depth[rows], st.cl_nab[rows]))
-    return fits
+def _fit_target(ctx: _FitContext, col: FitColumn,
+                stale_has_outliers: bool = False) -> _TargetFit:
+    """Fit one target, given the stale ``has_outliers`` it receives (see
+    ``_ColumnFit.__init__``)."""
+    w = _ColumnFit(ctx, col, stale_has_outliers)
+    if col.kind == "numeric":
+        w.fit_numeric()
+    else:
+        w.fit_categ(is_ord=(col.kind == "ordinal"))
+    st = w.state
+    rows = np.flatnonzero(st.scores < 1.0)
+    return _TargetFit(
+        col, w.trees, w.clusters, w.col_has_outliers,
+        "exp" if w.exp_transf else ("log" if w.log_transf else "none"),
+        w.orig_mean, w.orig_sd, w.log_minval, w.left_tail, w.right_tail,
+        w.has_outliers, rows, st.scores[rows], st.cluster[rows],
+        st.tree[rows], st.depth[rows], st.cl_nab[rows])
 
 
 def _driver_cpus() -> int:
@@ -792,23 +802,33 @@ def _driver_cpus() -> int:
 
 
 def _fit_targets(ctx: _FitContext) -> list[_TargetFit]:
-    """Fit every modeled target, in column order, on a thread pool: the
-    non-skipped numeric targets as one ordered chain (they pass the stale
-    flag along), each categorical or ordinal target as its own task."""
-    numeric = [c for c in ctx.numeric if not ctx.skip_col[c.name]]
-    chains = ([numeric] if numeric else []) + [[c] for c in ctx.categ + ctx.ordinal]
-    if not chains:
+    """Fit every modeled target, in column order: each non-skipped numeric,
+    categorical or ordinal target as its own task on a thread pool, with
+    the stale flag False.  Then walk the numeric targets in order and
+    refit, on this thread, each one whose predecessor left the flag True,
+    so every target has the flag the serial walk hands it."""
+    cols = ([c for c in ctx.numeric if not ctx.skip_col[c.name]]
+            + ctx.categ + ctx.ordinal)
+    if not cols:
         return []
-    workers = min(len(chains), _driver_cpus())
+    workers = min(len(cols), _driver_cpus())
     with ThreadPoolExecutor(max_workers=workers,
                             thread_name_prefix="fit_arrays") as pool:
-        futures = [pool.submit(_fit_chain, ctx, chain) for chain in chains]
+        futures = [pool.submit(_fit_target, ctx, col) for col in cols]
         try:
-            return [fit for f in futures for fit in f.result()]
+            fits = [f.result() for f in futures]
         except BaseException:
             for f in futures:
                 f.cancel()
             raise
+    stale = False
+    for i, fit in enumerate(fits):
+        if fit.col.kind != "numeric":
+            break
+        if stale:
+            fits[i] = fit = _fit_target(ctx, fit.col, True)
+        stale = fit.has_outliers
+    return fits
 
 
 def fit_arrays(columns: list[FitColumn], cfg: ValidationConfig) -> dict:

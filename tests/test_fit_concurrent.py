@@ -1,12 +1,12 @@
 """The concurrent per-target fit against the serial column walk.
 
-``fit_arrays`` fits the target columns on a driver thread pool: the
-numeric targets as one ordered chain that hands the stale
-``has_outliers`` flag on, each categorical or ordinal target as its own
-task.  The oracle here is the serial loop it replaced: one ``_ColumnFit``
-per target in column order, each given the flag the previous one left,
-then the per-row winner merge one row at a time.  Model JSON and
-``_train_rows`` must match byte for byte.
+``fit_arrays`` fits every target column as its own task on a driver
+thread pool, with the stale ``has_outliers`` flag False, then refits each
+numeric target whose predecessor left the flag True.  The oracle here is
+the serial loop it replaced: one ``_ColumnFit`` per target in column
+order, each given the flag the previous one left, then the per-row
+winner merge one row at a time.  Model JSON and ``_train_rows`` must
+match byte for byte.
 """
 
 import math
@@ -245,6 +245,9 @@ def test_task_failure_propagates_and_joins_pool(monkeypatch):
 
 
 def test_single_cpu_fits_each_target_once(monkeypatch):
+    """On one CPU the pool has one thread.  No numeric target of this
+    table receives a stale True, so none is refitted and each target is
+    fitted once, in column order, on that thread."""
     cols = _random_table(5)
     cfg = ValidationConfig()
     want = _serial_fit(cols, cfg)
@@ -313,3 +316,65 @@ def test_more_threads_than_cores_short_switch_interval(monkeypatch):
         sys.setswitchinterval(interval)
     assert not t.is_alive(), "fit_arrays did not finish"
     _assert_identical(out["m"], want)
+
+
+# the split kernels that only a categorical or ordinal target calls
+CATEG_TARGET_KERNELS = (
+    "split_numericx_categy", "split_ordx_categy", "split_categx_biny",
+    "categ_gain_from_split", "split_categx_categy_separate",
+    "split_categx_categy_subset")
+
+
+def _count_fits(monkeypatch):
+    """Wrap the split kernels and the per-target fits with call logs."""
+    calls = []
+    for name in CATEG_TARGET_KERNELS + ("split_numericx_numericy",):
+        def counted(*args, _real=getattr(fit, name), _name=name, **kw):
+            calls.append(_name)
+            return _real(*args, **kw)
+        monkeypatch.setattr(fit, name, counted)
+    real_numeric, real_categ = fit._ColumnFit.fit_numeric, fit._ColumnFit.fit_categ
+
+    def numeric(self):
+        calls.append(("numeric", self.target.name, self.has_outliers))
+        real_numeric(self)
+
+    def categ(self, is_ord):
+        calls.append(("categ", self.target.name))
+        real_categ(self, is_ord)
+
+    monkeypatch.setattr(fit._ColumnFit, "fit_numeric", numeric)
+    monkeypatch.setattr(fit._ColumnFit, "fit_categ", categ)
+    return calls
+
+
+@pytest.mark.parametrize("seed", [0, 1, 2])
+def test_default_gain_skips_categorical_searches(monkeypatch, seed):
+    """Under the default ``gain_as_pct`` and ``min_gain`` every node of a
+    categorical target here has more than 100 rows, where no candidate
+    can qualify: no categorical-target kernel runs.  Without
+    ``gain_as_pct`` they do."""
+    cols = _random_table(seed)
+    calls = _count_fits(monkeypatch)
+    fit_arrays(cols, ValidationConfig())
+    assert "split_numericx_numericy" in calls
+    assert not set(calls) & set(CATEG_TARGET_KERNELS)
+    calls.clear()
+    fit_arrays(cols, ValidationConfig(gain_as_pct=False))
+    assert set(calls) & set(CATEG_TARGET_KERNELS)
+
+
+def test_only_a_stale_target_is_refitted(monkeypatch):
+    """``_stale_table``'s first target leaves the flag True: the second is
+    fitted on the pool with False, then refitted with True; every other
+    target is fitted once."""
+    cols = _stale_table()
+    calls = _count_fits(monkeypatch)
+    model = fit_arrays(cols, ValidationConfig())
+    fits = [c for c in calls if isinstance(c, tuple)]
+    assert sorted(fits) == [("categ", "grp"), ("categ", "region"),
+                            ("numeric", "first", False),
+                            ("numeric", "second", False),
+                            ("numeric", "second", True)]
+    assert fits[-1] == ("numeric", "second", True)
+    _assert_identical(model, _serial_fit(cols, ValidationConfig()))

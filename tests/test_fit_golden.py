@@ -6,7 +6,8 @@ test pins what the recursion produces: for each table of
 ``test_fit_concurrent.TABLES`` and each config below, the sha256 of
 ``model_to_json`` followed by the name, dtype and bytes of every
 ``_train_rows`` array.  A refactor of ``operators/fit.py`` must keep
-every digest.
+every digest.  ``_small_node_table`` adds what those tables lack:
+categorical targets that split under the default ``gain_as_pct``.
 
 The digests are host-specific: the fit accumulates in NumPy
 ``longdouble``, whose width differs between platforms (80-bit x87 on
@@ -14,7 +15,7 @@ x86-64 Linux, 64-bit on others), so the last bits of a cluster bound can
 change with the host.  They were recorded on x86-64 Linux; on another
 host the test skips.  To re-record after an intended change of the model,
 run ``python -m tests.test_fit_golden`` and paste its output into
-``GOLDEN``.
+``GOLDEN`` (and ``SMALL_NODE_GOLDEN``).
 """
 
 import hashlib
@@ -25,7 +26,7 @@ import pytest
 
 from outliertree_spark.config import ValidationConfig
 from outliertree_spark.model import model_to_json
-from outliertree_spark.operators.fit import fit_arrays
+from outliertree_spark.operators.fit import FitColumn, fit_arrays
 
 from .test_fit_concurrent import CONFIGS, TABLES
 
@@ -48,6 +49,43 @@ PCT0 = [
     for outliers in ("tail", "majority")
 ]
 GOLDEN_CONFIGS = list({_config_id(c): c for c in CONFIGS + PCT0}.values())
+
+
+def _small_node_table():
+    """80 rows, so every categorical target's root node has at most 100.
+    Under ``gain_as_pct`` a categorical target's gain over
+    ``base_info_orig`` is at most 1/n on n rows, so with the default
+    ``min_gain`` of 0.01 only such a small node can split.  ``v`` and
+    ``o`` determine ``x``; ``x`` determines ``y`` but for one row.  The
+    splits reach ``gain / base_info_orig * n`` of 1 and 0.92, so a skip
+    on ``n * min_gain > c`` with any ``c < 0.8`` in place of 1 (say 0.5)
+    loses them."""
+    rng = np.random.RandomState(7)
+    n = 80
+    x = np.repeat([0, 1], n // 2)
+    rng.shuffle(x)
+    v = 10.0 * x + rng.normal(0, 1, n)
+    o = np.where(x == 0, rng.randint(0, 2, n), 2)
+    y = x.copy()
+    y[np.flatnonzero(x == 0)[0]] = 1
+    return [
+        FitColumn("v", "numeric", v),
+        FitColumn("x", "categorical", x.astype(np.int64), levels=["p", "q"]),
+        FitColumn("y", "categorical", y.astype(np.int64), levels=["a", "b"]),
+        FitColumn("o", "ordinal", o.astype(np.int64),
+                  levels=["lo", "mid", "hi"]),
+    ]
+
+
+# majority mode keeps a branch cluster whose target level is unseen there,
+# so each categorical target's split shows in the model
+SMALL_NODE_CONFIGS = [
+    ValidationConfig(categ_split=split, categ_outliers="majority",
+                     follow_all=follow, max_depth=depth,
+                     min_size_numeric=10, min_size_categ=10)
+    for follow, depth in ((False, 4), (True, 3))
+    for split in ("binarize", "bruteforce", "separate")
+]
 
 
 def _digest(model):
@@ -324,6 +362,21 @@ GOLDEN = {
     ],
 }
 
+SMALL_NODE_GOLDEN = {
+    'binarize-majority-raw-d4-follow0-pct1-min10':
+        '235ac3350e171f8ea46c4402b9ed8a02784775ed4a7e4227ea8227d37b223a89',
+    'bruteforce-majority-raw-d4-follow0-pct1-min10':
+        'ea9a4a3a6fb255ef8ca2f0c6fb83bddc6bbfdc7062528dfd8347b2156bc5f8d0',
+    'separate-majority-raw-d4-follow0-pct1-min10':
+        'e832991d7af5bd147270d2882af001ca3978e385bed5f1b78ecbcd5244efb54b',
+    'binarize-majority-raw-d3-follow1-pct1-min10':
+        'a84f7d42b9a4cc2007fc4c25d7e4b3212f90c3bbbff06d9b52ea82a2d7dbb4e3',
+    'bruteforce-majority-raw-d3-follow1-pct1-min10':
+        'ee658075b54abd1624b693510b75ca563a1f31db5b3c23f314db7c928e4f0e78',
+    'separate-majority-raw-d3-follow1-pct1-min10':
+        'b19898021014d4eee63958c03448dc72f36be0b3c46772ddba9839087f3d1ee1',
+}
+
 
 @pytest.mark.skipif(not _HOST, reason="digests recorded on x86-64 Linux "
                     "with 80-bit longdouble")
@@ -337,6 +390,18 @@ def test_fit_matches_golden_digests(cfg):
 
 def test_golden_covers_every_config():
     assert list(GOLDEN) == [_config_id(c) for c in GOLDEN_CONFIGS]
+    assert list(SMALL_NODE_GOLDEN) == [_config_id(c) for c in SMALL_NODE_CONFIGS]
+
+
+@pytest.mark.skipif(not _HOST, reason="digests recorded on x86-64 Linux "
+                    "with 80-bit longdouble")
+@pytest.mark.parametrize("cfg", SMALL_NODE_CONFIGS, ids=_config_id)
+def test_small_node_categorical_splits_match_golden(cfg):
+    model = fit_arrays(_small_node_table(), cfg)
+    split = {c["name"] for c in model["columns"]
+             if any(cl["split_type"] != "root" for cl in c["clusters"])}
+    assert {"x", "y"} <= split
+    assert _digest(model) == SMALL_NODE_GOLDEN[_config_id(cfg)]
 
 
 if __name__ == "__main__":
@@ -346,4 +411,9 @@ if __name__ == "__main__":
         for d in _digests(cfg):
             print(f"        {d!r},")
         print("    ],")
+    print("}")
+    print("SMALL_NODE_GOLDEN = {")
+    for cfg in SMALL_NODE_CONFIGS:
+        d = _digest(fit_arrays(_small_node_table(), cfg))
+        print(f"    {_config_id(cfg)!r}:\n        {d!r},")
     print("}")

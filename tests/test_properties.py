@@ -242,3 +242,70 @@ def test_novelty_against_pure_python(spark, texts):
     want = {i: (len(sh), sum(1 for g in sh if owner[g] == i))
             for i, sh in shingles.items() if sh}
     assert got == want
+
+
+@settings(max_examples=150, deadline=None)
+@given(st.integers(min_value=2, max_value=5),
+       st.integers(min_value=2, max_value=4),
+       st.data(),
+       st.floats(min_value=1e-6, max_value=1e6),
+       st.integers(min_value=1, max_value=3),
+       st.integers(min_value=0, max_value=2**31 - 1))
+def test_categorical_target_gain_bound(ncat_x, ncat_y, data, base_info,
+                                       min_size, seed):
+    """Every gain path of a categorical target returns at most
+    ``base_info / n`` on a node of n rows: it is base_info minus the
+    branches' info (each >= 0) over n.  ``_ColumnFit._rec_categ`` skips a
+    search under ``gain_as_pct`` on that bound, so it must hold for any
+    crosstab, NA counts and ``base_info > 0``, and with rows outside the
+    node in the arrays."""
+    import math
+
+    import numpy as np
+    from outliertree_spark.operators import split
+    from outliertree_spark.operators.fit import _GAIN_EPS
+
+    cells = data.draw(st.lists(st.integers(0, 12), min_size=ncat_x * ncat_y,
+                               max_size=ncat_x * ncat_y))
+    na = data.draw(st.lists(st.integers(0, 6), min_size=ncat_y,
+                            max_size=ncat_y))
+    xs = [x for x in range(ncat_x) for y in range(ncat_y)
+          for _ in range(cells[x * ncat_y + y])]
+    ys = [y for x in range(ncat_x) for y in range(ncat_y)
+          for _ in range(cells[x * ncat_y + y])]
+    xs += [-1] * sum(na)
+    ys += [y for y in range(ncat_y) for _ in range(na[y])]
+    n = len(xs)
+    if n == 0:
+        return
+    rng = np.random.RandomState(seed)
+    outside = int(rng.randint(0, 5))     # rows in the arrays, not the node
+    xcodes = np.array(xs + list(rng.randint(-1, ncat_x, outside)), np.int64)
+    ycodes = np.array(ys + list(rng.randint(0, ncat_y, outside)), np.int64)
+    perm = rng.permutation(xcodes.shape[0])
+    xcodes, ycodes = xcodes[perm], ycodes[perm]
+    ix = np.sort(np.argsort(perm)[:n])
+    xnum = np.where(xcodes < 0, np.nan,
+                    xcodes + 0.5 * rng.rand(xcodes.shape[0]))
+    ybin = (ycodes > 0).astype(np.int64)
+    in_left = rng.rand(ncat_x) < 0.5
+    xv = xcodes[ix]
+    parts = (ix[xv < 0], ix[(xv >= 0) & in_left[xv]],
+             ix[(xv >= 0) & ~in_left[xv]])
+    gains = {
+        "numericx": split.split_numericx_categy(
+            ix, xnum, ycodes, ncat_y, base_info, min_size, False).gain,
+        "ordx": split.split_ordx_categy(
+            ix, xcodes, ycodes, ncat_y, ncat_x, base_info, min_size).gain,
+        "biny": split.split_categx_biny(
+            ix, xcodes, ybin, ncat_x, base_info, min_size).gain,
+        "from_split": split.categ_gain_from_split(
+            *parts, ycodes, ncat_y, base_info),
+        "separate": split.split_categx_categy_separate(
+            ix, xcodes, ycodes, ncat_x, ncat_y, base_info, min_size).gain,
+        "subset": split.split_categx_categy_subset(
+            ix, xcodes, ycodes, ncat_x, ncat_y, base_info, min_size).gain,
+    }
+    bound = base_info * (1 + _GAIN_EPS) / n
+    over = {k: g for k, g in gains.items() if math.isfinite(g) and g > bound}
+    assert not over, (over, bound)
