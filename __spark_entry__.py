@@ -71,8 +71,9 @@ def _flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
                            .otherwise("l"))
               .select("doc_id", "text_len", "lang", "source", "warc_ts",
                       "size_bucket"))
-    # materialize the derived fixture once: fit reads it twice (count +
-    # toPandas) and predict a third time; a real corpus is a stored
+    # materialize the derived fixture once: fit reads it (a limit probe
+    # while it is within max_fit_rows; over it, the probe, a count and a
+    # sample) and predict reads it again; a real corpus is a stored
     # table and this is a no-op re-scan (A/B: 0.91 -> 0.78s minima,
     # outputs identical)
     df = df.localCheckpoint(eager=False)
@@ -1028,8 +1029,9 @@ def q_outlier_validate_root(spark, sf_dir):
     differential parity with the compiled reference core."""
     from outliertree_spark import SparkOutlierTree, ValidationConfig
 
-    # materialize the derived fixture once: fit reads it twice (count +
-    # toPandas) and predict a third time — the flagship's checkpoint
+    # materialize the derived fixture once: fit reads it (a limit probe
+    # while it is within max_fit_rows; over it, the probe, a count and a
+    # sample) and predict reads it again — the flagship's checkpoint
     # rule (round 6).
     df = _root_frame(spark, sf_dir).localCheckpoint(eager=False)
     eng = SparkOutlierTree(ValidationConfig(max_depth=0))

@@ -834,6 +834,13 @@ def _fit_targets(ctx: _FitContext) -> list[_TargetFit]:
 def fit_arrays(columns: list[FitColumn], cfg: ValidationConfig) -> dict:
     """Fit the full model over in-memory columns; returns a plain-dict,
     JSON-serializable model ready to broadcast."""
+    # schema.pandas_to_fit_columns rejects these, as the reference does
+    # (__init__.py:504-510): split_categx_numericy returns a 2-level
+    # predictor with split_lev -1, which an ordinal split would use as
+    # its level
+    short = [c.name for c in columns
+             if c.kind == "ordinal" and len(c.levels or ()) < 3]
+    assert not short, f"ordinal columns need >= 3 levels: {short}"
     ctx = _FitContext(columns, cfg)
     nrows = ctx.nrows
     levels_by_col = {c.name: (c.levels or []) for c in ctx.columns}

@@ -30,13 +30,17 @@ def _warm_engine(spark: SparkSession) -> None:
     use (Lion et al., "Don't Get Caught in the Cold, Warm-up Your JVM",
     OSDI 2016), so the warm-up makes one small first use of each
     operator ``scripts/run_validate.py`` executes, on a few thousand
-    generated rows: a parquet write and read, the fit sample's Arrow
-    ``limit(n).toPandas()``, the verdicts' filter plus hash aggregate
-    collect, and a persist filled by a noop write and a blocking
-    unpersist; plus an eager ``localCheckpoint``, the lineage cut the
-    suite's dedup and text operators take.  It starts no Python worker,
-    reads no input data, keeps no result, and writes only into a private
-    temp directory that it removes.
+    generated rows: a parquet write and read, the fit's probe read (the
+    Arrow ``limit(n).toPandas()`` that ``engine._fit_sample`` runs on an
+    input within the cap, and first on an input with no Parquet files),
+    the verdicts' filter plus hash aggregate collect, and a persist
+    filled by a noop write and a blocking unpersist; plus an eager
+    ``localCheckpoint``, the lineage cut the suite's dedup and text
+    operators take.  The fit's read of a Parquet input over the cap, a
+    count then a seeded ``sample().toPandas()``, has no step of its own:
+    its aggregate and its Arrow collect are the ones warmed here.  It
+    starts no Python worker, reads no input data, keeps no result, and
+    writes only into a private temp directory that it removes.
 
     Class-loading and JIT state is JVM-wide and the py4j-launched JVM
     outlives its SparkContexts, so only the first session of a process
@@ -79,7 +83,8 @@ def _warm_engine_inner(spark: SparkSession) -> None:
                       F.col("id").cast("string").alias("s"))
               .write.parquet(path))
         df = spark.read.parquet(path)
-        # the fit sample: an Arrow collect through CollectLimit
+        # the fit's probe read (an input within the cap, or one with no
+        # Parquet files): an Arrow collect through CollectLimit
         df.limit(_WARM_ROWS // 2).toPandas()
         # the verdicts: filter, hash aggregate, collect
         (df.filter(F.col("x") > 100).groupBy("k")
@@ -129,10 +134,10 @@ def get_spark(app: str = "outliertree_spark", master: str | None = None,
     ``local[$SPARK_GRAFT_CPUS]``.  For a local master the Python workers
     start from ``workerd`` (``spark.python.daemon.module``, its directory
     on ``spark.executorEnv.PYTHONPATH``): it imports the interpreter's
-    installed pyspark, with its cached bytecode, when that is the release
-    of ``$SPARK_HOME/python/lib/pyspark.zip``, instead of compiling the
-    zip in every SparkContext's daemon.  A daemon module set in
-    ``extra_conf`` or by spark-submit is left alone.  To see which pyspark
+    installed pyspark and py4j, with their cached bytecode, when each is
+    the release of its zip under ``$SPARK_HOME/python/lib``, instead of
+    compiling the zips in every SparkContext's daemon.  A daemon module
+    set in ``extra_conf`` or by spark-submit is left alone.  To see which pyspark
     a worker runs, return ``pyspark.__file__`` from a ``mapInPandas``
     function: a path inside ``pyspark.zip`` is the zip."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")

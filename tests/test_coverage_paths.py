@@ -69,6 +69,18 @@ def test_ordinal_target_fit():
             assert "conditions" in cl
 
 
+def test_two_level_ordinal_rejected():
+    """A 2-level ordinal would split at level -1 (split_categx_numericy's
+    early return); fit_arrays refuses it, as pandas_to_fit_columns does."""
+    rng = np.random.RandomState(9)
+    o = rng.randint(0, 2, size=1000)
+    cols = [FitColumn("y", "numeric", 50.0 * o + rng.normal(size=1000)),
+            FitColumn("o", "ordinal", o.astype(np.int64),
+                      levels=["lo", "hi"])]
+    with pytest.raises(AssertionError, match="'o'"):
+        fit_arrays(cols, ValidationConfig())
+
+
 def test_na_branch_cluster():
     rng = np.random.RandomState(5)
     n = 4000

@@ -3,6 +3,7 @@
 table with planted violations (FIXTURES.md F1)."""
 
 import json
+import math
 
 import numpy as np
 import pandas as pd
@@ -10,7 +11,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from outliertree_spark import SparkOutlierTree, ValidationConfig
+from outliertree_spark import SparkOutlierTree, ValidationConfig, engine
 
 
 @pytest.fixture(scope="module")
@@ -84,6 +85,102 @@ def test_fit_sample_capped_when_input_exceeds_cap(spark, docs_df):
     eng2 = SparkOutlierTree(ValidationConfig(max_fit_rows=1000))
     eng2.fit(docs_df, id_cols=["doc_id"], cols_ignore=["bucket"])
     assert list(eng._fit_pdf["doc_id"]) == list(eng2._fit_pdf["doc_id"])
+
+
+@pytest.fixture(scope="module")
+def docs_parquet(spark, docs_df, tmp_path_factory):
+    """docs_df as a Parquet table of 4 files of 1,000 rows."""
+    path = str(tmp_path_factory.mktemp("docs") / "docs.parquet")
+    docs_df.coalesce(1).write.option("maxRecordsPerFile", 1000).parquet(path)
+    return spark.read.parquet(path)
+
+
+def _fit_jobs(spark, eng, df):
+    """Spark jobs that ``eng.fit(df, ...)`` runs."""
+    tracker = spark.sparkContext.statusTracker()
+    before = len(tracker.getJobIdsForGroup(None) or [])
+    eng.fit(df, id_cols=["doc_id"], cols_ignore=["bucket"])
+    return len(tracker.getJobIdsForGroup(None) or []) - before
+
+
+def _spy_limit(monkeypatch, df):
+    """The ``n`` of every ``limit(n)`` on frames of ``df``'s class."""
+    calls = []
+    cls = type(df)
+    limit = cls.limit
+    monkeypatch.setattr(cls, "limit",
+                        lambda self, n: calls.append(n) or limit(self, n))
+    return calls
+
+
+def _fit_frame(df):
+    return df.select("doc_id", "lang", "text_len")
+
+
+def test_fit_single_job_when_parquet_input_fits_cap(spark, docs_parquet):
+    """A Parquet input under the cap: its footers sum to no more than
+    the cap, and the probe is the one fit-stage job."""
+    jobs = _fit_jobs(spark, SparkOutlierTree(ValidationConfig()), docs_parquet)
+    assert jobs == 1, f"fit ran {jobs} jobs, want 1"
+
+
+def test_fit_over_cap_parquet_runs_no_probe(spark, docs_parquet, monkeypatch):
+    """A Parquet input over the cap: count, then the seeded sample, and
+    no limit probe; the sample is the seeded Bernoulli sample."""
+    cfg = ValidationConfig(max_fit_rows=1000)
+    limits = _spy_limit(monkeypatch, docs_parquet)
+    eng = SparkOutlierTree(cfg)
+    jobs = _fit_jobs(spark, eng, docs_parquet)
+    assert limits == []
+    monkeypatch.undo()
+    want = (_fit_frame(docs_parquet).sample(fraction=1000 / 4000, seed=cfg.seed)
+            .toPandas())
+    pd.testing.assert_frame_equal(eng._fit_pdf, want)
+    # an input with no files still reads probe, count, sample: the
+    # probe is the one job saved
+    probe_jobs = _fit_jobs(spark, SparkOutlierTree(cfg),
+                           docs_parquet.localCheckpoint())
+    assert jobs == probe_jobs - 1, (jobs, probe_jobs)
+
+
+def test_fit_filtered_parquet_under_cap_reads_probe(spark, docs_parquet,
+                                                    monkeypatch):
+    """Footers over the cap, rows under it (a filtered input): the count
+    sends the read back to the probe, rows and order as limit() gives
+    them."""
+    cfg = ValidationConfig(max_fit_rows=1000)
+    hints = []
+    exceed = engine._footer_rows_exceed
+    monkeypatch.setattr(engine, "_footer_rows_exceed",
+                        lambda sdf, cap: hints.append(exceed(sdf, cap))
+                        or hints[-1])
+    limits = _spy_limit(monkeypatch, docs_parquet)
+    df = docs_parquet.filter((F.col("doc_id") < 1200)
+                             & (F.col("doc_id") % 5 != 0))   # 960 rows
+    eng = SparkOutlierTree(cfg).fit(df, id_cols=["doc_id"],
+                                    cols_ignore=["bucket"])
+    assert hints == [True] and limits == [1001]
+    monkeypatch.undo()
+    want = _fit_frame(df).limit(1001).toPandas()
+    assert len(want) == 960
+    pd.testing.assert_frame_equal(eng._fit_pdf, want)
+
+
+def test_fit_footer_reads_stop_past_cap(spark, docs_df, tmp_path, monkeypatch):
+    """Many small files: footers are read only until their sum passes the
+    cap, ceil((cap + 1) / rows_per_file) of them."""
+    path = str(tmp_path / "small.parquet")
+    docs_df.coalesce(1).write.option("maxRecordsPerFile", 100).parquet(path)
+    df = spark.read.parquet(path)
+    assert len(df.inputFiles()) == 40
+    reads = []
+    footer_rows = engine._footer_rows
+    monkeypatch.setattr(engine, "_footer_rows",
+                        lambda jvm, conf, p: reads.append(p)
+                        or footer_rows(jvm, conf, p))
+    SparkOutlierTree(ValidationConfig(max_fit_rows=1000)).fit(
+        df, id_cols=["doc_id"], cols_ignore=["bucket"])
+    assert len(reads) == math.ceil(1001 / 100)
 
 
 def test_prefilter_is_selective(spark, docs_df):

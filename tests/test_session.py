@@ -1,8 +1,8 @@
 """Session set-up: the warm-up runs once per process and leaves no files
 behind, the package zip shipped to executors holds this process's
 sources, the master is the caller's or the launcher's, and a local
-session's Python workers import the installed pyspark, not Spark's
-``pyspark.zip``."""
+session's Python workers import the installed pyspark and py4j, not
+Spark's ``pyspark.zip`` and ``py4j-*-src.zip``."""
 
 import json
 import os
@@ -126,6 +126,45 @@ def test_workerd_keeps_path_without_same_release(tmp_path, installed):
     assert workerd.worker_path(path) == [spark_zip, site]
 
 
+def _py4j_zip(path, version):
+    path.parent.mkdir(parents=True, exist_ok=True)
+    with zipfile.ZipFile(path, "w") as zf:
+        zf.writestr("py4j/__init__.py", "")
+        zf.writestr("py4j/version.py", f"__version__ = '{version}'\n")
+    return str(path)
+
+
+def _py4j_tree(root, version):
+    (root / "py4j").mkdir(parents=True)
+    (root / "py4j" / "__init__.py").write_text("")
+    (root / "py4j" / "version.py").write_text(f"__version__ = '{version}'\n")
+    return str(root)
+
+
+def test_workerd_drops_py4j_zip_of_installed_release(tmp_path):
+    spark_zip = _spark_zip(tmp_path / "lib" / "pyspark.zip", "4.1.2")
+    py4j = _py4j_zip(tmp_path / "lib" / "py4j-0.10.9.9-src.zip", "0.10.9.9")
+    site = _pyspark_tree(tmp_path / "site", "4.1.2")
+    _py4j_tree(tmp_path / "site", "0.10.9.9")
+    assert workerd.worker_path(["", spark_zip, py4j, "/x", site]) == [
+        "", "/x", site]
+    # each zip is judged on its own: another pyspark keeps only its zip
+    other = _pyspark_tree(tmp_path / "other", "4.1.1")
+    _py4j_tree(tmp_path / "other", "0.10.9.9")
+    assert workerd.worker_path([spark_zip, py4j, other]) == [spark_zip, other]
+
+
+@pytest.mark.parametrize("installed", ["0.10.9.7", None])
+def test_workerd_keeps_py4j_zip_without_same_release(tmp_path, installed):
+    """Another installed py4j, or none: the py4j zip stays where it was."""
+    spark_zip = _spark_zip(tmp_path / "lib" / "pyspark.zip", "4.1.2")
+    py4j = _py4j_zip(tmp_path / "lib" / "py4j-0.10.9.9-src.zip", "0.10.9.9")
+    site = _pyspark_tree(tmp_path / "site", "4.1.2")
+    if installed:
+        _py4j_tree(tmp_path / "site", installed)
+    assert workerd.worker_path([spark_zip, py4j, site]) == [py4j, site]
+
+
 def test_workerd_keeps_path_on_unreadable_zip(tmp_path):
     spark_zip = tmp_path / "lib" / "pyspark.zip"
     spark_zip.parent.mkdir()
@@ -156,6 +195,7 @@ WORKER_ORIGIN = """
 import json, sys
 sys.path.insert(0, {root!r})
 import pandas as pd
+import py4j
 import pyspark
 from outliertree_spark.session import get_spark
 
@@ -167,22 +207,29 @@ def commands():
             jvm.java.lang.ProcessHandle.current().descendants().toArray()]
 
 def origin(it):
-    import pyspark
+    import py4j, pyspark
     for _ in it:
         pass
-    yield pd.DataFrame({{"f": [pyspark.__file__]}})
+    yield pd.DataFrame({{"f": [pyspark.__file__], "g": [py4j.__file__]}})
 
 before = commands()
-rows = spark.range(0, 8, numPartitions=2).mapInPandas(origin, "f string").collect()
+rows = (spark.range(0, 8, numPartitions=2)
+        .mapInPandas(origin, "f string, g string").collect())
 print(json.dumps({{"before": before, "after": commands(),
                   "workers": sorted({{r.f for r in rows}}),
-                  "driver": pyspark.__file__}}))
+                  "driver": pyspark.__file__,
+                  "py4j_workers": sorted({{r.g for r in rows}}),
+                  "py4j_driver": py4j.__file__}}))
 spark.stop()
 """
 
 
 SPARK_HOME = os.environ.get("SPARK_HOME", "")
 SPARK_ZIP = os.path.join(SPARK_HOME, "python", "lib", "pyspark.zip")
+PY4J_ZIPS = [os.path.join(SPARK_HOME, "python", "lib", f)
+             for f in (os.listdir(os.path.join(SPARK_HOME, "python", "lib"))
+                       if SPARK_HOME else ())
+             if f.startswith("py4j-") and f.endswith("-src.zip")]
 
 
 @pytest.mark.skipif(
@@ -204,6 +251,8 @@ def test_local_workers_import_installed_pyspark():
     assert any(f"-m {deploy.DAEMON_MODULE} " in c for c in out["after"]), out
     assert ".zip" not in out["driver"]
     assert out["workers"] == [out["driver"]]
+    if PY4J_ZIPS and workerd.worker_path([*PY4J_ZIPS, *sys.path]) == sys.path:
+        assert out["py4j_workers"] == [out["py4j_driver"]]
 
 
 MASTER_PROBE = """
