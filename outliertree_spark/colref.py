@@ -27,7 +27,7 @@ def qcol(name: str) -> Column:
 def ts_seconds(name: str, ts_min: float) -> Column:
     """A timestamp or date column in the model's shifted-seconds space,
     bit for bit as the Python worker encodes it
-    (``schema.pandas_to_predict_arrays``: int64 nanoseconds to float64,
+    (``schema.epoch_seconds``: int64 nanoseconds to float64,
     divided by 1e9, minus ``ts_min``), sub-second part included."""
     ns = F.unix_micros(qcol(name).cast("timestamp")) * 1000
     return ns.cast("double") / F.lit(1e9) - F.lit(ts_min)

@@ -220,12 +220,17 @@ def violation_keys(id_cols: list[str] | None,
 def partition_verdicts(df: DataFrame, viols: DataFrame, partition_col: str,
                        rate: float) -> DataFrame:
     """One row per value of ``partition_col`` with row count, violation
-    count, rate, and pass/fail: pure Catalyst aggregation."""
+    count, rate, and pass/fail: pure Catalyst aggregation.  A null
+    partition is a partition too: the join is null-safe."""
     totals = df.groupBy(qcol(partition_col)).agg(
         F.count(F.lit(1)).alias("n_rows"))
-    vcnt = viols.groupBy(qcol(partition_col)).agg(
+    # a key name other than both of totals' columns
+    key = "_viol_" + partition_col
+    vcnt = viols.groupBy(qcol(partition_col).alias(key)).agg(
         F.count(F.lit(1)).alias("n_violations"))
-    return (totals.join(vcnt, partition_col, "left")
+    return (totals.join(vcnt, qcol(partition_col).eqNullSafe(qcol(key)),
+                        "left")
+            .drop(key)
             .withColumn("n_violations", F.coalesce("n_violations", F.lit(0)))
             .withColumn("violation_rate",
                         F.col("n_violations") / F.col("n_rows"))
@@ -607,7 +612,14 @@ class CheckpointLedger:
         done = self.done_partitions()
         if not done:
             return df
-        return df.filter(~qcol(partition_col).isin(list(done)))
+        col = qcol(partition_col)
+        values = [v for v in done if v is not None]
+        if not values:
+            return df.filter(col.isNotNull())
+        # ``isin`` is null on a null partition: keep its rows unless the
+        # null partition is done
+        return df.filter(F.coalesce(~col.isin(values),
+                                    F.lit(None not in done)))
 
     def record_verdicts(self, verdicts: DataFrame, partition_col: str,
                         lineage: dict | None = None) -> list:

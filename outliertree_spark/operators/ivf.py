@@ -22,6 +22,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, Window, functions as F, types as T
 
+from ..engine import _fit_sample
 from .similarity import bucket_pairs, dot_expr, norm_expr
 
 
@@ -31,20 +32,13 @@ def train_centroids(emb: DataFrame, vec_col: str = "embedding",
     """Seeded Lloyd's k-means on a bounded sample; returns (k, dim)
     L2-normalized centroids.  Deterministic for fixed inputs/seed.
 
-    One action on the common path (round 6, the engine.fit probe
-    pattern): a ``limit(sample_rows + 1)`` collect — CollectLimit
-    gathers partitions in order, so when the input fits the cap the
-    probe IS the full table in the same row order the old
-    ``toPandas()`` returned (centroids bit-identical; asserted in
-    tests/test_similarity_ops.py).  Only when the probe overflows does
-    the count + seeded Bernoulli sample run, exactly as before."""
-    probe = emb.select(vec_col).limit(sample_rows + 1).toPandas()
-    if len(probe) <= sample_rows:
-        pdf = probe
-    else:
-        n = emb.count()
-        frac = min(1.0, sample_rows / max(n, 1))
-        pdf = emb.select(vec_col).sample(fraction=frac, seed=seed).toPandas()
+    The sample is the fit's (``engine._fit_sample`` of ``vec_col``): the
+    whole input, in ``limit(sample_rows + 1).toPandas()`` order, when it
+    has at most ``sample_rows`` rows, else the seeded Bernoulli sample of
+    fraction ``sample_rows / count``.  A Parquet input whose footers
+    count more than ``sample_rows`` rows is counted first and skips the
+    ``limit`` probe, which shuffles every input row into one task."""
+    pdf = _fit_sample(emb.select(vec_col), sample_rows, seed)
     x = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
     x = x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
     k = min(k_cells, len(x))

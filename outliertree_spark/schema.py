@@ -47,6 +47,21 @@ def infer_kinds(spark_dtypes: list[tuple[str, str]],
     return kinds
 
 
+def epoch_seconds(s: pd.Series) -> np.ndarray:
+    """Float64 seconds since the epoch of a timestamp or date column, NaN
+    where ``s`` is missing: int64 nanoseconds to float64, divided by 1e9.
+
+    A datetime64 column (naive or tz-aware) is read as it is:
+    ``pd.to_datetime`` returns it unchanged, but first turns up to 500 of
+    its values into ``Timestamp`` objects to decide whether to cache, on
+    every batch.  A ``DateType`` column arrives as ``datetime.date``
+    objects and is converted."""
+    ts = s if pd.api.types.is_datetime64_any_dtype(s.dtype) else pd.to_datetime(s)
+    vals = ts.astype("int64").to_numpy().astype(np.float64) / 1e9
+    vals[s.isna().to_numpy()] = np.nan
+    return vals
+
+
 def pandas_to_fit_columns(pdf: pd.DataFrame, kinds: dict[str, str],
                           ordinal_cols: dict[str, list] | None = None,
                           max_categ: int = 1000) -> list[FitColumn]:
@@ -60,9 +75,7 @@ def pandas_to_fit_columns(pdf: pd.DataFrame, kinds: dict[str, str],
             cols.append(FitColumn(name, "numeric",
                                   s.astype(np.float64).to_numpy()))
         elif kind == "timestamp":
-            vals = pd.to_datetime(s).astype("int64").to_numpy().astype(np.float64)
-            vals = vals / 1e9  # ns -> s
-            vals[s.isna().to_numpy()] = np.nan
+            vals = epoch_seconds(s)
             finite = vals[~np.isnan(vals)]
             if finite.shape[0] == 0:
                 continue
@@ -107,9 +120,7 @@ def pandas_to_predict_arrays(pdf: pd.DataFrame, model: dict) -> dict[str, np.nda
         if kind == "numeric":
             out[name] = s.astype(np.float64).to_numpy()
         elif kind == "timestamp":
-            vals = pd.to_datetime(s).astype("int64").to_numpy().astype(np.float64) / 1e9
-            vals[s.isna().to_numpy()] = np.nan
-            out[name] = vals - info["ts_min"]
+            out[name] = epoch_seconds(s) - info["ts_min"]
         else:
             levels = info["levels"]
             lut = {lev: i for i, lev in enumerate(levels)}

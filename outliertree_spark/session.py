@@ -5,9 +5,13 @@ from __future__ import annotations
 import logging
 import os
 import re
+import select
 import shutil
+import struct
 import tempfile
 
+from pyspark import accumulators
+from pyspark.serializers import read_int
 from pyspark.sql import SparkSession
 
 from . import deploy
@@ -99,6 +103,60 @@ def _warm_engine_inner(spark: SparkSession) -> None:
         shutil.rmtree(tmp, ignore_errors=True)
 
 
+# how often an accumulator connection checks for the server's shutdown
+_ACCUMULATOR_POLL_S = 0.05
+
+
+class _PromptUpdateHandler(accumulators.UpdateRequestHandler):
+    """PySpark's accumulator update handler
+    (``pyspark.accumulators.UpdateRequestHandler.handle``, whose source
+    ``tests/test_session.py`` pins), checking the server's shutdown flag
+    every ``_ACCUMULATOR_POLL_S`` seconds instead of every second.
+
+    After the first Python task the JVM keeps one connection open to the
+    driver's accumulator server, and the server's one thread stays in
+    ``handle`` until it sees the flag.  ``SparkContext.stop()`` sets the
+    flag and waits for that thread, so with PySpark's 1 s ``select`` it
+    waited 1 s minus the time since the last update: 0.86-0.95 s right
+    after a Python job, 4-core host.  The wire protocol is PySpark's, byte
+    for byte: the token, then per message an int count of pickled
+    ``(aid, update)`` pairs, each added to the driver's accumulator, and
+    a one-byte acknowledgement."""
+
+    def handle(self) -> None:
+        auth_token = self.server.auth_token
+
+        def poll(func) -> None:
+            while not self.server.server_shutdown:
+                r, _, _ = select.select([self.rfile], [], [],
+                                        _ACCUMULATOR_POLL_S)
+                if self.rfile in r and func():
+                    break
+
+        def accum_updates() -> bool:
+            for _ in range(read_int(self.rfile)):
+                aid, update = accumulators.pickleSer._read_with_length(
+                    self.rfile)
+                accumulators._accumulatorRegistry[aid] += update
+            self.wfile.write(struct.pack("!b", 1))
+            return False
+
+        def authenticate_and_accum_updates() -> bool:
+            received = self.rfile.read(len(auth_token))
+            if isinstance(received, bytes):
+                received = received.decode("utf-8")
+            if received != auth_token:
+                raise ValueError("The value of the provided token to the "
+                                 "AccumulatorServer is not correct.")
+            accum_updates()
+            return True
+
+        # a Unix domain socket carries no token
+        if auth_token is not None:
+            poll(authenticate_and_accum_updates)
+        poll(accum_updates)
+
+
 def _launcher_conf():
     """The conf spark-submit started this driver's JVM with, or None for a
     plain interpreter, whose JVM ``getOrCreate`` starts from the builder's
@@ -136,10 +194,18 @@ def get_spark(app: str = "outliertree_spark", master: str | None = None,
     on ``spark.executorEnv.PYTHONPATH``): it imports the interpreter's
     installed pyspark and py4j, with their cached bytecode, when each is
     the release of its zip under ``$SPARK_HOME/python/lib``, instead of
-    compiling the zips in every SparkContext's daemon.  A daemon module
-    set in ``extra_conf`` or by spark-submit is left alone.  To see which pyspark
-    a worker runs, return ``pyspark.__file__`` from a ``mapInPandas``
-    function: a path inside ``pyspark.zip`` is the zip."""
+    compiling the zips in every SparkContext's daemon, and it leaves no
+    archive without a module to be re-read at the start of every task.
+    A daemon module set in ``extra_conf`` or by spark-submit is left
+    alone.  To see which pyspark a worker runs, return
+    ``pyspark.__file__`` from a ``mapInPandas`` function: a path inside
+    ``pyspark.zip`` is the zip.
+
+    The new context's accumulator server gets ``_PromptUpdateHandler``,
+    so ``stop()`` after a Python job returns in about 0.1 s instead of
+    waiting out PySpark's one-second poll; only that server instance
+    changes, and a context that ``getOrCreate`` returns after a Python
+    job keeps its open connection's handler."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     launched = _launcher_conf()
     conf = dict(launched.getAll()) if launched is not None else {}
@@ -169,6 +235,11 @@ def get_spark(app: str = "outliertree_spark", master: str | None = None,
     for k, v in {**(extra_conf or {}), **_daemon_conf(master, conf)}.items():
         b = b.config(k, v)
     spark = b.getOrCreate()
+    # the JVM connects on the first Python task's accumulator update, so
+    # every connection of this context gets the prompt handler
+    server = getattr(spark.sparkContext, "_accumulatorServer", None)
+    if server is not None:
+        server.RequestHandlerClass = _PromptUpdateHandler
     spark.sparkContext.setLogLevel("WARN")
     _warm_engine(spark)
     return spark

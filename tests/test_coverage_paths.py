@@ -183,3 +183,48 @@ def test_follow_all_mode():
     res = predict_batch(m, {"age": age, "pregnant": preg.astype(np.int64),
                             "x": np.zeros(n)})
     assert res.score[planted] < 1.0
+
+
+def _ns_series():
+    rng = np.random.RandomState(4)
+    s = pd.Series(pd.to_datetime(rng.randint(0, 2 ** 40, 600) * 1000
+                                 + rng.randint(0, 999, 600)))
+    s[[5, 77]] = pd.NaT
+    return s
+
+
+@pytest.mark.parametrize("case", ["ns", "tz", "date", "all_nat"])
+def test_timestamp_encode_skips_to_datetime_identically(case, monkeypatch):
+    """``epoch_seconds`` skips ``pd.to_datetime`` on datetime64 data, and
+    the fit and predict encodes still give the arrays the call gave:
+    naive and tz-aware datetime64, ``datetime.date`` objects (a Spark
+    ``DateType``) and NaT."""
+    from outliertree_spark.schema import (epoch_seconds, pandas_to_fit_columns,
+                                          pandas_to_predict_arrays)
+    s = _ns_series()
+    s = {"ns": s,
+         "tz": s.dt.tz_localize("UTC").dt.tz_convert("America/New_York"),
+         "date": pd.Series([None if pd.isna(t) else t.date() for t in s],
+                           dtype=object),
+         "all_nat": pd.Series(pd.NaT, index=range(50),
+                              dtype="datetime64[ns]")}[case]
+    want = pd.to_datetime(s).astype("int64").to_numpy().astype(np.float64) / 1e9
+    want[s.isna().to_numpy()] = np.nan
+    calls = []
+    to_datetime = pd.to_datetime
+    monkeypatch.setattr(pd, "to_datetime",
+                        lambda *a, **k: calls.append(1) or to_datetime(*a, **k))
+    assert epoch_seconds(s).tobytes() == want.tobytes()
+    assert len(calls) == (case == "date")
+
+    pdf = pd.DataFrame({"t": s})
+    cols = pandas_to_fit_columns(pdf, {"t": "timestamp"})
+    if case == "all_nat":
+        assert cols == []
+        return
+    ts_min = float(np.nanmin(want)) - 1.0
+    assert cols[0].ts_min == ts_min
+    assert cols[0].values.tobytes() == (want - ts_min).tobytes()
+    got = pandas_to_predict_arrays(
+        pdf, {"schema": {"t": {"kind": "timestamp", "ts_min": ts_min}}})
+    assert got["t"].tobytes() == (want - ts_min).tobytes()

@@ -312,6 +312,45 @@ def test_checkpoint_ledger_resume_mid_run(spark, docs_df, tmp_path):
     assert merged == full_rows
 
 
+def _null_partitions(spark):
+    """Six rows in partitions None (2 rows), "a" (3) and "b" (1)."""
+    return spark.createDataFrame(
+        [(1, None), (2, None), (3, "a"), (4, "a"), (5, "a"), (6, "b")],
+        "row_id long, part string")
+
+
+def test_verdicts_count_null_partition(spark):
+    """Both rows of the null partition are violations: its verdict counts
+    them and fails."""
+    df = _null_partitions(spark)
+    viols = df.filter(F.col("part").isNull() | (F.col("row_id") == 3))
+    got = {r["part"]: (r["n_rows"], r["n_violations"], r["passed"])
+           for r in engine.partition_verdicts(df, viols, "part",
+                                              0.5).collect()}
+    assert got == {None: (2, 2, False), "a": (3, 1, True),
+                   "b": (1, 0, True)}
+
+
+def test_resume_with_null_partition(spark, tmp_path):
+    """A done null partition drops only its own rows; an unfinished one
+    keeps them."""
+    from outliertree_spark import CheckpointLedger
+    df = _null_partitions(spark)
+
+    def remaining(done):
+        led = CheckpointLedger(str(tmp_path / f"{len(done)}{done}.jsonl"))
+        for part in done:
+            led.record(part, {"passed": True})
+        return sorted(r["row_id"] for r in
+                      led.filter_remaining(df, "part").collect())
+
+    assert remaining([None]) == [3, 4, 5, 6]
+    assert remaining(["a"]) == [1, 2, 6]
+    assert remaining([None, "a"]) == [6]
+    assert remaining(["a", "b"]) == [1, 2]
+    assert remaining([None, "a", "b"]) == []
+
+
 def test_model_save_load_roundtrip(spark, docs_df, tmp_path):
     eng = SparkOutlierTree(ValidationConfig())
     eng.fit(docs_df, id_cols=["doc_id"], cols_ignore=["bucket"])

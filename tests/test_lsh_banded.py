@@ -274,3 +274,45 @@ def test_ivf_topk_matches_bruteforce_on_clustered_data(spark):
     iv1 = dict(zip(iv.query_id, iv.neighbor_id))
     hits = sum(1 for k in bf1 if iv1.get(k) == bf1[k])
     assert hits >= 7, (bf1, iv1)
+
+
+def _legacy_centroid_sample(emb, vec_col, sample_rows, seed):
+    """The rows ``train_centroids`` read before it shared the fit's
+    sample: a ``limit(sample_rows + 1)`` probe, then, over the cap, the
+    seeded Bernoulli sample of fraction ``sample_rows / count``."""
+    probe = emb.select(vec_col).limit(sample_rows + 1).toPandas()
+    if len(probe) <= sample_rows:
+        return probe
+    frac = min(1.0, sample_rows / max(emb.count(), 1))
+    return emb.select(vec_col).sample(fraction=frac, seed=seed).toPandas()
+
+
+def test_train_centroids_reads_the_fit_sample(spark, tmp_path, monkeypatch):
+    """``train_centroids`` reads the rows the old probe-first read gave,
+    in the same order, so the centroids are bit-identical to the ones
+    trained on those rows; on a Parquet input over the cap it runs no
+    ``limit`` probe."""
+    from outliertree_spark.operators import ivf
+
+    path = str(tmp_path / "emb.parquet")
+    (_emb_df(spark).coalesce(1).write.option("maxRecordsPerFile", 100)
+     .parquet(path))
+    emb = spark.read.parquet(path)
+    cls, limit = type(emb), type(emb).limit
+    for sample_rows, probes, n in ((1000, [1001], 325), (120, [], None)):
+        limits = []
+        monkeypatch.setattr(cls, "limit",
+                            lambda self, k: limits.append(k) or limit(self, k))
+        got = ivf.train_centroids(emb, k_cells=8, sample_rows=sample_rows,
+                                  seed=3)
+        monkeypatch.setattr(cls, "limit", limit)
+        assert limits == probes
+        want = _legacy_centroid_sample(emb, "embedding", sample_rows, 3)
+        assert len(want) == n if n else 60 <= len(want) < 325
+        rows = spark.createDataFrame(
+            [([float(v) for v in e],) for e in want["embedding"]],
+            "embedding array<double>")
+        ref = ivf.train_centroids(rows, k_cells=8, sample_rows=len(want),
+                                  seed=3)
+        assert got.shape == (8, 32)
+        assert got.tobytes() == ref.tobytes()

@@ -1,9 +1,13 @@
 """Session set-up: the warm-up runs once per process and leaves no files
 behind, the package zip shipped to executors holds this process's
-sources, the master is the caller's or the launcher's, and a local
+sources, the master is the caller's or the launcher's, a local
 session's Python workers import the installed pyspark and py4j, not
-Spark's ``pyspark.zip`` and ``py4j-*-src.zip``."""
+Spark's ``pyspark.zip`` and ``py4j-*-src.zip``, and hold no importer
+of an archive off their path, and ``stop()`` does not wait out a
+one-second accumulator poll."""
 
+import hashlib
+import inspect
 import json
 import os
 import subprocess
@@ -12,6 +16,7 @@ import tempfile
 import zipfile
 from types import SimpleNamespace
 
+import pandas as pd
 import pytest
 
 import outliertree_spark
@@ -169,9 +174,51 @@ def test_workerd_keeps_path_on_unreadable_zip(tmp_path):
     spark_zip = tmp_path / "lib" / "pyspark.zip"
     spark_zip.parent.mkdir()
     spark_zip.write_text("not a zip")
+    # an archive whose directory cannot be read stays too
+    jar = tmp_path / "lib" / "core.jar"
+    jar.write_bytes(b"PK\x03\x04trunc")
     site = _pyspark_tree(tmp_path / "site", "4.1.2")
-    path = [str(spark_zip), site]
+    path = [str(spark_zip), str(jar), site]
     assert workerd.worker_path(path) == path
+
+
+def _jar(path, *names):
+    path.parent.mkdir(parents=True, exist_ok=True)
+    with zipfile.ZipFile(path, "w") as zf:
+        for name in names:
+            zf.writestr(name, "")
+    return str(path)
+
+
+def test_workerd_drops_archive_without_python(tmp_path):
+    """A jar that holds no Python module is taken off the path, whatever
+    its name; one that holds a ``.py`` stays."""
+    core = _jar(tmp_path / "jars" / "core.jar", "org/a/B.class",
+                "META-INF/MANIFEST.MF")
+    named = _jar(tmp_path / "lib" / "py4j-0.10.9.9-src.zip", "README")
+    nested = _jar(tmp_path / "jars" / "nested.jar", "org/a/B.class",
+                  "org/a/mod.py")
+    top = _jar(tmp_path / "jars" / "top.jar", "mod.pyc")
+    path = ["", core, nested, named, top, "/x"]
+    assert workerd.worker_path(path) == ["", nested, top, "/x"]
+
+
+def test_workerd_forgets_importers_of_dropped_entries(tmp_path):
+    """The path is set in place, and no importer stays cached for an
+    entry taken off it or for a location inside one."""
+    core = _jar(tmp_path / "jars" / "core.jar", "org/a/B.class")
+    spark_zip = _spark_zip(tmp_path / "lib" / "pyspark.zip", "4.1.2")
+    site = _pyspark_tree(tmp_path / "site", "4.1.2")
+    path = [spark_zip, core, site]
+    cache = {p: object() for p in
+             (spark_zip, core, os.path.join(core, "org"),
+              os.path.join(spark_zip, "pyspark"), site,
+              os.path.join(site, "pyspark"), core + "x")}
+    kept = {k: cache[k] for k in (site, os.path.join(site, "pyspark"),
+                                  core + "x")}
+    workerd.use_worker_path(path, cache)
+    assert path == [site]
+    assert cache == kept
 
 
 def test_daemon_conf_only_for_local_master():
@@ -289,3 +336,84 @@ def test_master_from_launcher(tmp_path):
     assert got["plain"]["master"] == "local[3]"
     for how in got:
         assert got[how]["daemon"] == deploy.DAEMON_MODULE
+
+
+def _worker_imports(it):
+    import importlib
+    import sys
+    import time
+    import zipimport
+    for _ in it:
+        pass
+    times = []
+    for _ in range(3):
+        t = time.perf_counter()
+        importlib.invalidate_caches()
+        times.append(time.perf_counter() - t)
+    stray = sorted(
+        k for k, v in sys.path_importer_cache.items()
+        if isinstance(v, zipimport.zipimporter) and v.archive not in sys.path)
+    yield pd.DataFrame({"stray": [json.dumps(stray)],
+                        "invalidate_s": [min(times)]})
+
+
+@pytest.mark.skipif(
+    workerd.worker_path([SPARK_ZIP, *sys.path]) == [SPARK_ZIP, *sys.path],
+    reason="no installed pyspark of $SPARK_HOME's release")
+def test_local_workers_hold_no_stray_zip_importer(spark):
+    """PySpark runs ``importlib.invalidate_caches()`` at the start of every
+    task; in a local session's worker no zip importer of an archive off
+    ``sys.path`` is cached, so the call re-reads no archive."""
+    rows = (spark.range(0, 8, numPartitions=2)
+            .mapInPandas(_worker_imports, "stray string, invalidate_s double")
+            .collect())
+    assert len(rows) == 2
+    for r in rows:
+        assert json.loads(r.stray) == []
+        assert r.invalidate_s < 0.005, r
+
+
+ACCUMULATOR_STOP = """
+import json, sys, time
+sys.path.insert(0, {root!r})
+from outliertree_spark.session import get_spark
+
+spark = get_spark(master="local[2]", shuffle_partitions=2)
+sc = spark.sparkContext
+acc = sc.accumulator(0)
+sc.parallelize(range(1000), 2).foreach(lambda x: acc.add(x))
+first = acc.value
+sc.parallelize([4, 6], 2).foreach(lambda x: acc.add(x))
+second = acc.value
+t = time.perf_counter()
+spark.stop()
+print(json.dumps({{"values": [first, second],
+                  "stop_s": time.perf_counter() - t}}))
+"""
+
+
+def test_stop_after_python_job_is_prompt():
+    """After a Python job the JVM holds a connection to the driver's
+    accumulator server; ``stop()`` returns without waiting out PySpark's
+    one-second poll, and the accumulator updates of two jobs arrive."""
+    env = dict(os.environ, SPARK_DRIVER_MEM="1g", SPARK_GRAFT_NO_WARMUP="1")
+    env.pop("PYSPARK_SUBMIT_ARGS", None)
+    r = subprocess.run(
+        [sys.executable, "-c", ACCUMULATOR_STOP.format(root=ROOT)],
+        capture_output=True, text=True, timeout=300, env=env)
+    assert r.returncode == 0, r.stderr[-2000:]
+    out = json.loads(r.stdout.strip().splitlines()[-1])
+    assert out["values"] == [499500, 499510]
+    assert out["stop_s"] < 0.3, out
+
+
+def test_accumulator_handler_source_is_pinned():
+    """``session._PromptUpdateHandler`` copies the wire protocol of
+    PySpark's ``UpdateRequestHandler.handle``.  A PySpark release that
+    changes that method fails here: compare the copy with the new source,
+    then record the new digest."""
+    from pyspark.accumulators import UpdateRequestHandler
+    src = inspect.getsource(UpdateRequestHandler.handle)
+    assert hashlib.sha256(src.encode()).hexdigest() == (
+        "cc31064dc413fb61b91f46b847e766101f57c134085cb3ecf82ec9dfb7de8335")
+    assert issubclass(session._PromptUpdateHandler, UpdateRequestHandler)
