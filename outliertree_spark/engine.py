@@ -206,37 +206,6 @@ class _LazyRow:
         return arr[self.r] if arr is not None else default
 
 
-def violation_keys(id_cols: list[str] | None,
-                   partition_col: str) -> tuple[list[str], list[str]]:
-    """(predict's id columns, the violation rows' key columns).  Predict
-    labels each explanation by its first id column, so the caller's row
-    id goes first there, not the partition; the rows carry the partition
-    column first."""
-    id_cols = id_cols or []
-    return (list(dict.fromkeys(id_cols + [partition_col])),
-            list(dict.fromkeys([partition_col] + id_cols)))
-
-
-def partition_verdicts(df: DataFrame, viols: DataFrame, partition_col: str,
-                       rate: float) -> DataFrame:
-    """One row per value of ``partition_col`` with row count, violation
-    count, rate, and pass/fail: pure Catalyst aggregation.  A null
-    partition is a partition too: the join is null-safe."""
-    totals = df.groupBy(qcol(partition_col)).agg(
-        F.count(F.lit(1)).alias("n_rows"))
-    # a key name other than both of totals' columns
-    key = "_viol_" + partition_col
-    vcnt = viols.groupBy(qcol(partition_col).alias(key)).agg(
-        F.count(F.lit(1)).alias("n_violations"))
-    return (totals.join(vcnt, qcol(partition_col).eqNullSafe(qcol(key)),
-                        "left")
-            .drop(key)
-            .withColumn("n_violations", F.coalesce("n_violations", F.lit(0)))
-            .withColumn("violation_rate",
-                        F.col("n_violations") / F.col("n_rows"))
-            .withColumn("passed", F.col("violation_rate") <= F.lit(rate)))
-
-
 def _footer_rows_exceed(sdf: DataFrame, cap: int) -> bool:
     """True when the Parquet footers of the files ``sdf`` reads count more
     than ``cap`` rows, reading footers only until the sum passes ``cap``.
@@ -319,8 +288,9 @@ class SparkOutlierTree:
     """Explainable outlier / constraint validation engine on Spark.
 
     ``fit`` derives the constraints (conditioning trees + cluster bounds)
-    from a deterministic sample; ``predict`` / ``validate`` apply them to
-    arbitrarily large DataFrames.
+    from a deterministic sample; ``predict`` / ``score`` apply them to
+    arbitrarily large DataFrames (``suite.ValidationSuite.run`` turns the
+    predicted rows into violations and per-partition verdicts).
     """
 
     def __init__(self, config: ValidationConfig | None = None):
@@ -508,21 +478,6 @@ class SparkOutlierTree:
         from .plans.sql_predict import score_sql
         sdf = df.filter(self.prefilter_expr(df)) if prefilter else df
         return score_sql(self.model_, sdf, id_cols=id_cols)
-
-    # ------------------------------------------------------------------
-    def validate(self, df: DataFrame, partition_col: str,
-                 id_cols: list[str] | None = None,
-                 max_violation_rate: float | None = None) -> tuple[DataFrame, DataFrame]:
-        """(violations, per-partition verdicts).
-
-        Verdicts: one row per value of ``partition_col`` with row count,
-        violation count, rate, and pass/fail — pure Catalyst aggregation."""
-        row_ids, keys = violation_keys(id_cols, partition_col)
-        viols = self.predict(df, id_cols=row_ids).select(
-            *[qcol(c) for c in keys], *[f.name for f in VIOLATION_FIELDS])
-        rate = (max_violation_rate if max_violation_rate is not None
-                else self.config.pct_outliers)
-        return viols, partition_verdicts(df, viols, partition_col, rate)
 
     # ------------------------------------------------------------------
     def flaggable_values(self) -> dict:

@@ -13,21 +13,74 @@ verdicts — the full north-rule validation in a single run.
     suite.fit(df, id_cols=["doc_id"])
     violations, verdicts = suite.run(df, partition_col="warc_bucket")
 
-Violations carry a ``check`` column ("derived" for tree constraints, the
-check's name otherwise); verdicts aggregate all checks per partition.
+Every violation row has one shape: the partition and id columns, every
+``engine.VIOLATION_FIELDS`` column, and ``check`` ("derived" for tree
+constraints, the check's name otherwise).  A derived row keeps every
+field the engine renders; a declared-check row carries the check's kind
+in ``suspicious_column``, its value in ``suspicious_value``, the
+explanation ``check [<name>] failed: <value>`` and NULL elsewhere.
+Verdicts aggregate all checks per partition.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import reduce
 from typing import Callable
 
 from pyspark.sql import DataFrame, functions as F
 
 from .config import ValidationConfig
 from .colref import qcol
-from .engine import SparkOutlierTree, partition_verdicts, violation_keys
+from .engine import VIOLATION_FIELDS, SparkOutlierTree
 from .operators import checks as C
+
+
+def violation_keys(id_cols: list[str] | None,
+                   partition_col: str) -> tuple[list[str], list[str]]:
+    """(predict's id columns, the violation rows' key columns).  Predict
+    labels each explanation by its first id column, so the caller's row
+    id goes first there, not the partition; the rows carry the partition
+    column first.  A key column may not be named ``check``: the rows'
+    own ``check`` column would overwrite it."""
+    id_cols = id_cols or []
+    keys = list(dict.fromkeys([partition_col] + id_cols))
+    if "check" in keys:
+        raise ValueError("a partition or id column named 'check' clashes "
+                         "with the violation rows' check column; rename it")
+    return list(dict.fromkeys(id_cols + [partition_col])), keys
+
+
+def partition_verdicts(df: DataFrame, viols: DataFrame, partition_col: str,
+                       rate: float) -> DataFrame:
+    """One row per value of ``partition_col`` with row count, violation
+    count, rate, and pass/fail: pure Catalyst aggregation.  A null
+    partition is a partition too: the join is null-safe."""
+    totals = df.groupBy(qcol(partition_col)).agg(
+        F.count(F.lit(1)).alias("n_rows"))
+    # a key name other than both of totals' columns
+    key = "_viol_" + partition_col
+    vcnt = viols.groupBy(qcol(partition_col).alias(key)).agg(
+        F.count(F.lit(1)).alias("n_violations"))
+    return (totals.join(vcnt, qcol(partition_col).eqNullSafe(qcol(key)),
+                        "left")
+            .drop(key)
+            .withColumn("n_violations", F.coalesce("n_violations", F.lit(0)))
+            .withColumn("violation_rate",
+                        F.col("n_violations") / F.col("n_rows"))
+            .withColumn("passed", F.col("violation_rate") <= F.lit(rate)))
+
+
+def _violation_rows(rows: DataFrame, keys: list[str], check: str,
+                    **given) -> DataFrame:
+    """``rows`` in the violation row shape: the key columns, every
+    ``VIOLATION_FIELDS`` column taken from ``given`` or NULL, cast to the
+    engine's type, then ``check``."""
+    return rows.select(
+        *[qcol(c) for c in keys],
+        *[given.get(f.name, F.lit(None)).cast(f.dataType).alias(f.name)
+          for f in VIOLATION_FIELDS],
+        F.lit(check).alias("check"))
 
 
 @dataclass
@@ -105,7 +158,7 @@ class ValidationSuite:
                           name: str | None = None, **rule_thresholds):
         """Declared-constraint document quality gate: rows failing the
         Gopher rule set (operators/gopher.py — Rae et al. 2021 Table
-        A1) become violation rows whose ``check_value`` lists the
+        A1) become violation rows whose ``suspicious_value`` lists the
         failed rules (``"rule_stopwords,rule_word_count"``), the same
         flag-plus-reason model as the engine's derived tree violations.
         ``include_repetition=True`` adds the Table A1 repetition rules
@@ -203,33 +256,41 @@ class ValidationSuite:
         self.engine.fit(df, **fit_kw)
         return self
 
+    def check_violations(self, df: DataFrame, partition_col: str,
+                         id_cols: list[str] | None = None) -> DataFrame:
+        """The declared checks' violation rows over ``df``, in the suite's
+        row shape; an empty frame when no check is declared."""
+        keys = violation_keys(id_cols, partition_col)[1]
+        value = F.col("_check_value")
+        rows = []
+        for ch in self._checks:
+            rows.append(_violation_rows(
+                ch.fn(df), keys, ch.name,
+                suspicious_column=F.lit(ch.kind),
+                suspicious_value=value,
+                explanation=F.concat(F.lit(f"check [{ch.name}] failed: "),
+                                     value)))
+        if not rows:
+            return _violation_rows(df, keys, "").limit(0)
+        return reduce(DataFrame.unionByName, rows)
+
     def run(self, df: DataFrame, partition_col: str,
             id_cols: list[str] | None = None,
             max_violation_rate: float | None = None) -> tuple[DataFrame, DataFrame]:
+        """(violations, per-partition verdicts): the derived rows plus
+        :meth:`check_violations`; the verdicts count both and fail a
+        partition whose violation rate passes ``max_violation_rate``
+        (default ``config.pct_outliers``) or whose drift passes its
+        ``max_psi``."""
         row_ids, keys = violation_keys(id_cols, partition_col)
-        key_cols = [qcol(c) for c in keys]
         rate = (max_violation_rate if max_violation_rate is not None
                 else self.engine.config.pct_outliers)
-
-        # derived (tree) violations
-        derived = (self.engine.predict(df, id_cols=row_ids)
-                   .select(*key_cols, "suspicious_column",
-                           F.col("suspicious_value").alias("check_value"),
-                           "outlier_score", "explanation")
-                   .withColumn("check", F.lit("derived")))
-        parts = [derived]
-        for ch in self._checks:
-            v = ch.fn(df)
-            parts.append(v.select(
-                *key_cols,
-                F.lit(ch.kind).alias("suspicious_column"),
-                F.col("_check_value").alias("check_value"),
-                F.lit(None).cast("double").alias("outlier_score"),
-                F.lit(None).cast("string").alias("explanation"),
-            ).withColumn("check", F.lit(ch.name)))
-        viols = parts[0]
-        for p in parts[1:]:
-            viols = viols.unionByName(p)
+        viols = _violation_rows(
+            self.engine.predict(df, id_cols=row_ids), keys, "derived",
+            **{f.name: F.col(f.name) for f in VIOLATION_FIELDS})
+        if self._checks:
+            viols = viols.unionByName(
+                self.check_violations(df, partition_col, id_cols))
         verdicts = partition_verdicts(df, viols, partition_col, rate)
 
         # drift checks gate whole partitions: one grouped-histogram pass per

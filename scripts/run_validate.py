@@ -10,14 +10,22 @@ Usage (the north rule's launch shape):
         --violations-out /tmp/run1/violations.parquet \
         --model-out /tmp/run1/model.json [--resume]
 
+Every run validates through one ``ValidationSuite``: the derived tree
+violations, plus the Gopher quality gate with --quality-rules.  With
+--prev-snapshot the rows changed or removed since the previous snapshot
+join them.  All of a run's rows, in the suite's row shape without its
+``check`` column, go to --violations-out in one parquet append; then the
+snapshot marker and the verdicts land in the ledger.  An argument error
+(--prev-snapshot with no key) stops the run before any Spark work.
+
 Resumable: with --resume, partitions already recorded in the checkpoint
 ledger are skipped; verdicts + lineage land in the ledger as JSON lines.
 The lineage carries the wall seconds of the session set-up and the fit
 stats (sample rows, fit seconds, model bytes, cluster count), taken from
 a driver timer and the driver-side model.
 
-One execution of the predict plan per run: the violations frame is
-persisted as soon as it is built, the parquet append materializes the
+One execution of the predict plan per run: the suite's violations frame
+is persisted as soon as it is built, the parquet append materializes the
 cache, the verdicts collect aggregates the cached rows, and the printed
 summary is counted on the driver from the rows the ledger recorded.  The
 cache lives from the append until the verdicts are in the ledger and is
@@ -38,66 +46,45 @@ from collections import Counter
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def _violation_rows(df, args, **given):
-    """``df`` projected to the engine's violation row shape: the partition
-    and id columns, then every ``engine.VIOLATION_FIELDS`` column, taken
-    from ``given`` or NULL, cast to the engine's type.  One parquet sink
-    carries the rows of every check family; two schemas in one directory
-    would silently lose columns for any reader without mergeSchema."""
-    from pyspark.sql import functions as F
-
-    from outliertree_spark.colref import qcol
-    from outliertree_spark.engine import VIOLATION_FIELDS
-    idc = dict.fromkeys([args.partition_col] + ([args.id_col] if args.id_col else []))
-    return df.select(
-        *[qcol(c).alias(c) for c in idc],
-        *[given.get(f.name, F.lit(None)).cast(f.dataType).alias(f.name)
-          for f in VIOLATION_FIELDS])
+def _snapshot_marker(args) -> str:
+    return f"snapshot_delta::{args.prev_snapshot}"
 
 
-def _snapshot_check(spark, ledger, args, df_full) -> bool:
-    """Cross-snapshot check (north rule): changed rows are violations in
-    their current partition, silently-removed rows in their old one;
-    additions are growth.  Shaped to the engine's violation schema so
-    one parquet sink carries both check families.
+def _snapshot_rows(spark, ledger, args, df_full):
+    """Cross-snapshot check (north rule): rows changed since
+    ``--prev-snapshot`` are violations in their current partition,
+    silently removed rows in their old one; additions are growth.  The
+    rows come from the suite's snapshot-delta check over the full
+    current table, without its ``check`` column.
 
-    Idempotent across repeated/resumed invocations: completion is
-    recorded as a ledger marker keyed by the previous-snapshot path, and
-    the append is skipped when the marker is present — otherwise every
-    rerun with --prev-snapshot would duplicate the full snapshot_delta
-    row set in the output parquet.  Returns True iff the append ran."""
+    None when there is no previous snapshot, or when the ledger's marker
+    for it shows its rows already appended: a repeated or resumed run
+    must not append the snapshot delta again."""
     if not args.prev_snapshot:
-        return False
-    marker = f"snapshot_delta::{args.prev_snapshot}"
-    if ledger.has_marker(marker):
+        return None
+    if ledger.has_marker(_snapshot_marker(args)):
         print("snapshot check already recorded in ledger; skipping",
               file=sys.stderr)
-        return False
-
-    from pyspark.sql import functions as F
-
-    from outliertree_spark.operators.checks import snapshot_diff
+        return None
+    from outliertree_spark import ValidationSuite
     prev = spark.read.parquet(args.prev_snapshot)
-    key = args.snapshot_key or args.id_col
-    if not key:
-        raise SystemExit("--prev-snapshot requires --snapshot-key "
-                         "or --id-col")
-    d = snapshot_diff(prev, df_full, [key])
+    suite = ValidationSuite().add_snapshot_delta(
+        prev, args.snapshot_key or args.id_col)
+    return suite.check_violations(
+        df_full, args.partition_col,
+        [args.id_col] if args.id_col else None).drop("check")
 
-    def _shape(src, ct):
-        rows = src.join(d.filter(F.col("change_type") == ct),
-                        [key], "inner")
-        return _violation_rows(
-            rows, args,
-            suspicious_column=F.lit("snapshot_delta"),
-            suspicious_value=F.col("change_type"),
-            explanation=F.concat(F.lit("row "), F.col("change_type"),
-                                 F.lit(" vs previous snapshot")))
 
-    snap = _shape(df_full, "changed").unionByName(_shape(prev, "removed"))
-    snap.write.mode("append").parquet(args.violations_out)
-    ledger.record_marker(marker, {"violations_out": args.violations_out})
-    return True
+def _append(ledger, args, rows, snap) -> None:
+    """One parquet append of the run's ``rows`` and the snapshot rows
+    ``snap`` (either may be None), then the snapshot marker.  One sink
+    and one schema carry every check family."""
+    if snap is not None:
+        rows = snap if rows is None else rows.unionByName(snap)
+    rows.write.mode("append").parquet(args.violations_out)
+    if snap is not None:
+        ledger.record_marker(_snapshot_marker(args),
+                             {"violations_out": args.violations_out})
 
 
 def _fit_stats(model: dict, seconds: float | None) -> dict:
@@ -135,13 +122,13 @@ def main(argv=None) -> int:
     p.add_argument("--snapshot-key", default=None,
                    help="key column for --prev-snapshot (default: --id-col)")
     p.add_argument("--quality-rules", action="store_true",
-                   help="route the run through ValidationSuite with the "
-                        "Gopher quality gate: failed rules become "
-                        "violation rows (suspicious_column='quality', "
-                        "failed rule list in suspicious_value) unified "
-                        "with the derived tree violations, conformed to "
-                        "the engine violation schema so the output dir "
-                        "stays single-schema across runs and checks")
+                   help="add the Gopher quality gate to the run's "
+                        "suite: failed rules become violation rows "
+                        "(suspicious_column='quality', failed rule list "
+                        "in suspicious_value) next to the derived tree "
+                        "violations, in the same row shape, so the "
+                        "output dir stays single-schema across runs and "
+                        "checks")
     p.add_argument("--quality-text-col", default="text")
     p.add_argument("--quality-repetition", action="store_true",
                    help="with --quality-rules: also apply the Gopher "
@@ -151,8 +138,11 @@ def main(argv=None) -> int:
                         "non-English corpora)")
     p.add_argument("--master", default=None)
     args = p.parse_args(argv)
+    if args.prev_snapshot and not (args.snapshot_key or args.id_col):
+        p.error("--prev-snapshot requires --snapshot-key or --id-col")
 
-    from outliertree_spark import CheckpointLedger, SparkOutlierTree, ValidationConfig
+    from outliertree_spark import (CheckpointLedger, SparkOutlierTree,
+                                   ValidationConfig, ValidationSuite)
     from outliertree_spark.session import get_spark
 
     t0 = time.time()
@@ -176,10 +166,12 @@ def main(argv=None) -> int:
         if df.limit(1).count() == 0:
             # partitions all done, but the snapshot check may still owe
             # its (idempotent, marker-guarded) violation append
-            snap_ran = _snapshot_check(spark, ledger, args, df_full)
+            snap = _snapshot_rows(spark, ledger, args, df_full)
+            if snap is not None:
+                _append(ledger, args, None, snap)
             print(json.dumps({"status": "nothing-to-do",
                               "done": len(ledger.done_partitions()),
-                              "snapshot_check_ran": snap_ran}))
+                              "snapshot_check_ran": snap is not None}))
             return 0
 
     fit_s = None
@@ -198,45 +190,23 @@ def main(argv=None) -> int:
     fit_stats = _fit_stats(eng.model_, fit_s)
 
     t0 = time.time()
+    suite = ValidationSuite(engine=eng)
     if args.quality_rules:
-        from outliertree_spark.suite import ValidationSuite
-        suite = ValidationSuite(engine=eng)
         suite.add_quality_rules(
             id_col=args.id_col or "doc_id",
             text_col=args.quality_text_col,
             include_repetition=args.quality_repetition,
             min_stop_hits=args.quality_min_stop_hits)
-        viols, verdicts = suite.run(
-            df, partition_col=args.partition_col,
-            id_cols=[args.id_col] if args.id_col else None,
-            max_violation_rate=args.max_violation_rate)
-        # cache the union itself, not the projection below: the verdicts
-        # aggregate the union, so only its plan matches in the cache
-        cached = viols.persist()
-        # conform the suite's unified rows to the engine violation
-        # schema; the check name + failed-rule list land in
-        # suspicious_value/explanation
-        from pyspark.sql import functions as F
-        viols = _violation_rows(
-            viols, args,
-            suspicious_column=F.col("suspicious_column"),
-            suspicious_value=F.col("check_value"),
-            outlier_score=F.col("outlier_score"),
-            explanation=F.coalesce(
-                "explanation",
-                F.concat(F.lit("check ["), F.col("check"),
-                         F.lit("] failed: "), F.col("check_value"))))
-    else:
-        viols, verdicts = eng.validate(
-            df, partition_col=args.partition_col,
-            id_cols=[args.id_col] if args.id_col else None,
-            max_violation_rate=args.max_violation_rate)
-        cached = viols.persist()
+    viols, verdicts = suite.run(
+        df, partition_col=args.partition_col,
+        id_cols=[args.id_col] if args.id_col else None,
+        max_violation_rate=args.max_violation_rate)
+    # cache the suite's rows themselves, not the write's projection: the
+    # verdicts aggregate them, so only their plan matches in the cache
+    cached = viols.persist()
     try:
-        viols.write.mode("append").parquet(args.violations_out)
-
-        _snapshot_check(spark, ledger, args, df_full)
-
+        _append(ledger, args, viols.drop("check"),
+                _snapshot_rows(spark, ledger, args, df_full))
         recorded = ledger.record_verdicts(
             verdicts, args.partition_col,
             lineage={"input": args.input,

@@ -1,6 +1,7 @@
 """Dotted column names (R-exported frames, e.g. ``query.hyperthyroid``)
-work through ``predict``, ``validate`` and ``ValidationSuite.run``: each
-gives the rows of an undotted copy of the same table."""
+work through ``predict`` and ``ValidationSuite.run``, with and without a
+declared check: each gives the rows of an undotted copy of the same
+table."""
 
 import numpy as np
 import pandas as pd
@@ -49,7 +50,8 @@ def test_dotted_names_match_undotted_copy(spark):
         eng.fit(df, id_cols=ids, cols_ignore=[part])
         suite = ValidationSuite(engine=eng).add_uniqueness(ids[0])
         out[name] = [eng.predict(df, id_cols=ids),
-                     *eng.validate(df, partition_col=part, id_cols=ids),
+                     *ValidationSuite(engine=eng).run(
+                         df, partition_col=part, id_cols=ids),
                      *suite.run(df, partition_col=part, id_cols=ids)]
     for plain_df, dotted_df in zip(out["plain"], out["dotted"]):
         want = _rows(plain_df, rename=True)

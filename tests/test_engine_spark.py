@@ -11,7 +11,8 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from outliertree_spark import SparkOutlierTree, ValidationConfig, engine
+from outliertree_spark import (SparkOutlierTree, ValidationConfig,
+                               ValidationSuite, engine, suite)
 
 
 @pytest.fixture(scope="module")
@@ -197,8 +198,8 @@ def test_prefilter_is_selective(spark, docs_df):
 def test_validate_verdicts(spark, docs_df):
     eng = SparkOutlierTree(ValidationConfig())
     eng.fit(docs_df, id_cols=["doc_id"], cols_ignore=["bucket"])
-    viols, verdicts = eng.validate(docs_df, partition_col="bucket",
-                                   id_cols=["doc_id"])
+    viols, verdicts = ValidationSuite(engine=eng).run(
+        docs_df, partition_col="bucket", id_cols=["doc_id"])
     vp = verdicts.toPandas().set_index("bucket")
     assert len(vp) == 8
     assert int(vp["n_rows"].sum()) == 4000
@@ -217,7 +218,8 @@ def test_checkpoint_ledger(spark, docs_df, tmp_path):
     eng = SparkOutlierTree(ValidationConfig())
     eng.fit(docs_df, id_cols=["doc_id"], cols_ignore=["bucket"])
     led = CheckpointLedger(str(tmp_path / "ledger.jsonl"))
-    _, verdicts = eng.validate(docs_df, partition_col="bucket")
+    _, verdicts = ValidationSuite(engine=eng).run(docs_df,
+                                                  partition_col="bucket")
     rows = led.record_verdicts(verdicts, "bucket",
                                lineage={"input": "docs_df"})
     assert len(led.done_partitions()) == 8
@@ -278,7 +280,8 @@ def test_checkpoint_ledger_resume_mid_run(spark, docs_df, tmp_path):
     eng.fit(docs_df, id_cols=["doc_id"], cols_ignore=["bucket"])
 
     # the uninterrupted reference run
-    _, full = eng.validate(docs_df, partition_col="bucket")
+    _, full = ValidationSuite(engine=eng).run(docs_df,
+                                              partition_col="bucket")
     full_rows = {r["bucket"]: (r["n_rows"], r["n_violations"], r["passed"])
                  for r in full.collect()}
     assert len(full_rows) == 8
@@ -295,7 +298,8 @@ def test_checkpoint_ledger_resume_mid_run(spark, docs_df, tmp_path):
     rem_parts = {r["bucket"] for r in
                  remaining.select("bucket").distinct().collect()}
     assert rem_parts == set(full_rows) - set(done_subset)
-    _, verd2 = eng.validate(remaining, partition_col="bucket")
+    _, verd2 = ValidationSuite(engine=eng).run(remaining,
+                                               partition_col="bucket")
     led.record_verdicts(verd2, "bucket", lineage={"attempt": 2})
 
     # ledger now covers every partition with verdicts identical to the
@@ -325,8 +329,8 @@ def test_verdicts_count_null_partition(spark):
     df = _null_partitions(spark)
     viols = df.filter(F.col("part").isNull() | (F.col("row_id") == 3))
     got = {r["part"]: (r["n_rows"], r["n_violations"], r["passed"])
-           for r in engine.partition_verdicts(df, viols, "part",
-                                              0.5).collect()}
+           for r in suite.partition_verdicts(df, viols, "part",
+                                             0.5).collect()}
     assert got == {None: (2, 2, False), "a": (3, 1, True),
                    "b": (1, 0, True)}
 

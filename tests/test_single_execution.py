@@ -11,6 +11,7 @@ to the Python workers.
 
 import json
 import os
+import re
 import subprocess
 import sys
 from collections import Counter
@@ -132,6 +133,30 @@ def test_predict_plan_executes_once(docs, tmp_path, extra):
     assert (9, "value") in flagged
     if extra:
         assert (6, "quality") in flagged
+
+
+def test_prev_snapshot_run_makes_one_append(docs, tmp_path):
+    """A --prev-snapshot run writes its violations and its snapshot rows
+    in one parquet append (every part file carries the one write job's
+    UUID), records the snapshot marker before the verdicts, and still
+    executes the predict plan once."""
+    prev = str(tmp_path / "prev.parquet")
+    pdf = pd.read_parquet(docs)
+    pdf.loc[42, "value"] = 1.0
+    pdf.to_parquet(prev, index=False)
+    summary, entries, rows, log = _run(tmp_path, docs,
+                                       ["--prev-snapshot", prev])
+    assert summary["status"] == "ok"
+    assert len(python_executions(log)) == 1
+
+    parts = [f for f in os.listdir(tmp_path / "violations.parquet")
+             if f.startswith("part-")]
+    uuids = {re.fullmatch(r"part-\d+-(.+)-c\d+.*", f).group(1)
+             for f in parts}
+    assert len(uuids) == 1, parts
+    flagged = {(r["doc_id"], r["suspicious_column"]) for r in rows}
+    assert (9, "value") in flagged and (42, "snapshot_delta") in flagged
+    assert ["marker" in e for e in entries] == [True] + [False] * 4
 
 
 def test_ledger_lineage_carries_fit_stats(docs, tmp_path):

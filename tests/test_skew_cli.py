@@ -315,11 +315,37 @@ def test_cli_snapshot_runs_on_nothing_to_do_resume(spark, tmp_path):
     assert list(snap["doc_id"]) == [7] and len(snap) == 1
 
 
+def test_cli_prev_snapshot_without_key_is_refused(tmp_path):
+    """--prev-snapshot with neither --snapshot-key nor --id-col is an
+    argument error, raised before any Spark work: nothing is appended."""
+    src, prev = str(tmp_path / "docs.parquet"), str(tmp_path / "prev.parquet")
+    n = 300
+    pdf = pd.DataFrame({
+        "doc_id": np.arange(n),
+        "text_len": np.random.RandomState(9).lognormal(5, 0.3, n),
+        "bucket": np.arange(n) % 3,
+    })
+    pdf.to_parquet(src, index=False)
+    pdf.to_parquet(prev, index=False)
+    vout = tmp_path / "violations.parquet"
+    cmd = [sys.executable, "scripts/run_validate.py",
+           "--input", src, "--partition-col", "bucket",
+           "--checkpoint", str(tmp_path / "ledger.jsonl"),
+           "--violations-out", str(vout), "--prev-snapshot", prev,
+           "--master", "local[2]"]
+    r = subprocess.run(cmd, capture_output=True, text=True, timeout=120,
+                       cwd=".")
+    assert r.returncode != 0
+    assert "--prev-snapshot requires" in r.stderr
+    assert not vout.exists()
+
+
 def test_cli_quality_rules_gate(spark, tmp_path):
-    """--quality-rules routes the run through the ValidationSuite: a
+    """--quality-rules adds the quality gate to the run's suite: a
     planted short doc lands in the violations parquet with the failed
-    rule list, unified with the derived tree violations.  A second run
-    has dotted id and partition columns and adds the repetition rules."""
+    rule list, next to the derived tree violations, whose rows keep
+    every engine field of a plain run.  A second run has dotted id and
+    partition columns and adds the repetition rules."""
     _check_quality_rules(spark, tmp_path / "0", "doc_id", "bucket", [])
     _check_quality_rules(spark, tmp_path / "1", "doc.id", "src.bucket",
                          ["--quality-repetition"])
@@ -335,7 +361,7 @@ def _check_quality_rules(spark, tmp_path, id_col, part_col, extra):
              "birds watched from tall trees and the sun moved slowly "
              "over the distant hills until evening came and all was "
              "quiet again")
-    n = 40
+    n = 400
     pdf = pd.DataFrame({
         id_col: np.arange(n),
         "text": [prose + f" end{i}" for i in range(n)],
@@ -343,24 +369,45 @@ def _check_quality_rules(spark, tmp_path, id_col, part_col, extra):
         "value": rng.normal(100, 10, n),
     })
     pdf.loc[6, "text"] = "way too short"
+    pdf.loc[9, "value"] = 10000.0
     src = str(tmp_path / "qdocs.parquet")
     spark.createDataFrame(pdf).write.mode("overwrite").parquet(src)
-    ledger = str(tmp_path / "qledger.jsonl")
-    vout = str(tmp_path / "qviolations.parquet")
-    cmd = [sys.executable, "scripts/run_validate.py",
-           "--input", src, "--partition-col", part_col,
-           "--id-col", id_col, "--checkpoint", ledger,
-           "--violations-out", vout, "--cols-ignore", "text",
-           "--quality-rules", "--master", "local[2]", *extra]
-    r = subprocess.run(cmd, capture_output=True, text=True, timeout=420,
-                       cwd=".")
-    assert r.returncode == 0, r.stderr[-2000:]
-    out = json.loads(r.stdout.strip().splitlines()[-1])
-    assert out["status"] == "ok"
-    viols = spark.read.parquet(vout).toPandas()
-    # conformed to the ENGINE violation schema (single-schema output
-    # dir): quality rows carry the kind in suspicious_column and the
-    # failed-rule list in suspicious_value/explanation
+
+    def run(name, *flags):
+        vout = str(tmp_path / f"{name}.parquet")
+        cmd = [sys.executable, "scripts/run_validate.py",
+               "--input", src, "--partition-col", part_col,
+               "--id-col", id_col,
+               "--checkpoint", str(tmp_path / f"{name}.jsonl"),
+               "--violations-out", vout, "--cols-ignore", "text",
+               "--master", "local[2]", *flags]
+        r = subprocess.run(cmd, capture_output=True, text=True,
+                           timeout=420, cwd=".")
+        assert r.returncode == 0, r.stderr[-2000:]
+        out = json.loads(r.stdout.strip().splitlines()[-1])
+        assert out["status"] == "ok"
+        return spark.read.parquet(vout)
+
+    model = str(tmp_path / "model.json")
+    plain = run("plain", "--model-out", model)
+    viols = run("quality", "--model-in", model, "--quality-rules", *extra)
+    assert viols.schema == plain.schema
+    plain, viols = plain.toPandas(), viols.toPandas()
+    # the derived row of the planted value is the plain run's row, every
+    # engine field included
+    from outliertree_spark.engine import VIOLATION_FIELDS
+    fields = [f.name for f in VIOLATION_FIELDS]
+    want = plain[plain[id_col] == 9][[part_col, id_col] + fields]
+    got = viols[(viols[id_col] == 9)
+                & (viols["suspicious_column"] == "value")]
+    assert len(want) == 1 and want.notna().values.all()
+    # (the quality rows' NULLs read tree_depth as float in pandas)
+    pd.testing.assert_frame_equal(got[want.columns].reset_index(drop=True),
+                                  want.reset_index(drop=True),
+                                  check_dtype=False)
+    # one row shape (single-schema output dir): quality rows carry the
+    # kind in suspicious_column and the failed-rule list in
+    # suspicious_value/explanation
     q = viols[viols["suspicious_column"] == "quality"]
     assert set(q[id_col]) == {6}
     gopher = q[q["suspicious_value"].str.startswith("gopher:")]

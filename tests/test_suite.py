@@ -88,7 +88,7 @@ def test_suite_snapshot_delta(spark, data):
                                 id_cols=["doc_id"])
     vp = viols.toPandas()
     snap = vp[vp["check"] == "snapshot_doc_id"]
-    got = dict(zip(snap["doc_id"], snap["check_value"]))
+    got = dict(zip(snap["doc_id"], snap["suspicious_value"]))
     assert got[21] == "changed"
     assert got[4000] == "removed"     # attributed via the old snapshot
     assert 17 not in got              # additions are growth, not violations
@@ -118,7 +118,7 @@ def test_suite_snapshot_delta_evolved_schema(spark, data):
     viols, _ = suite.run(cur, partition_col="bucket", id_cols=["doc_id"])
     vp = viols.toPandas()
     snap = vp[vp["check"] == "snapshot_doc_id"]
-    got = dict(zip(snap["doc_id"], snap["check_value"]))
+    got = dict(zip(snap["doc_id"], snap["suspicious_value"]))
     assert got[21] == "changed" and got[4000] == "removed"
 
 
@@ -153,7 +153,7 @@ def test_suite_quality_rules(spark):
                                 id_cols=["doc_id"])
     vp = viols.toPandas()
     q = vp[vp["check"] == "quality_rules"]
-    flagged = q.groupby("doc_id")["check_value"].apply(
+    flagged = q.groupby("doc_id")["suspicious_value"].apply(
         lambda s: ";".join(sorted(s))).to_dict()
     # doc 5 fails BOTH rule sets (2 words: word-count on the quality
     # side, a 100% top-2-gram on the repetition side)
@@ -166,3 +166,45 @@ def test_suite_quality_rules(spark):
     clean = set(range(30)) - {5, 7}
     assert not (set(q["doc_id"]) & clean), sorted(set(q["doc_id"]) & clean)
     assert q.loc[q["doc_id"] == 5, "suspicious_column"].iloc[0] == "quality"
+
+
+@pytest.mark.parametrize("keys", [{"partition_col": "check"},
+                                  {"partition_col": "bucket",
+                                   "id_cols": ["check"]}],
+                         ids=["partition", "id"])
+def test_key_column_named_check_is_refused(spark, keys):
+    """The rows' own ``check`` column would overwrite a key column of that
+    name: every partition would count 0 violations and pass, or the rows
+    would lose their ids.  Both run and check_violations refuse it."""
+    df = spark.createDataFrame(pd.DataFrame(
+        {"check": [1, 2, 2], "bucket": [0, 0, 1], "url": ["a", "b", "b"]}))
+    suite = ValidationSuite(ValidationConfig()).add_uniqueness("url")
+    with pytest.raises(ValueError, match="'check'"):
+        suite.check_violations(df, **keys)
+    with pytest.raises(ValueError, match="'check'"):
+        suite.run(df, **keys)
+
+
+def test_check_violations_row_shape(spark, data):
+    """Declared-check rows carry the key columns, every engine violation
+    field and ``check``: the kind, the value and the rendered explanation,
+    NULL elsewhere; with no declared check the frame is empty."""
+    from outliertree_spark.engine import VIOLATION_FIELDS
+    df, parent, baseline = data
+    suite = ValidationSuite(ValidationConfig()).add_uniqueness("url")
+    rows = suite.check_violations(df, "bucket", ["doc_id"])
+    assert rows.columns == (["bucket", "doc_id"]
+                            + [f.name for f in VIOLATION_FIELDS] + ["check"])
+    assert [f.dataType for f in rows.schema.fields[2:-1]] == \
+        [f.dataType for f in VIOLATION_FIELDS]
+    got = rows.filter(F.col("doc_id") == 101).toPandas().iloc[0]
+    url = "https://h26.com/d/100"
+    assert got["suspicious_column"] == "uniqueness"
+    assert got["suspicious_value"] == url
+    assert got["explanation"] == f"check [unique_url] failed: {url}"
+    assert got["check"] == "unique_url"
+    for name in ("suspicious_value_num", "group_statistics", "conditions",
+                 "tree_depth", "uses_NA_branch", "outlier_score"):
+        assert pd.isna(got[name]), name
+    empty = ValidationSuite().check_violations(df, "bucket", ["doc_id"])
+    assert empty.columns == rows.columns and empty.count() == 0
